@@ -96,7 +96,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // median-of-N protocol (VERDICT r4 #4 / r6 #2): BASELINE.md records
     // 74–241 s same-code variance on this host, so a single run cannot
     // distinguish a plan regression from scheduler contention. Each query is
@@ -104,14 +103,7 @@ object Bench {
     // transient host stall hits one PASS, not every sample of one query) and
     // reported as the per-query MEDIAN.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     plans.GraftOptimizations.install(spark)
     // untimed warm-up: JIT/codegen/session init + parquet footers, so the
     // alphabetically-first query doesn't carry ~5 s of one-time cost

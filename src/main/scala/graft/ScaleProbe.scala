@@ -593,22 +593,14 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val mults = (if (args.isEmpty) Seq(1L, 10L) else args.toSeq.map(_.toLong)).sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.create(extra = Map(
       // A 40+-minute sweep accumulates shuffle files in /tmp faster than
       // the default 30-min ContextCleaner GC reclaims them; under the
       // noop action (which executes the output sorts .count() used to
       // prune) the debris exhausted the disk and failed
       // dedup_near_embedding's spill with ENOSPC. Frequent periodic GC
       // lets the cleaner drop unreferenced shuffle files continuously.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.cleaner.periodicGC.interval" -> "2min"))
     plans.GraftOptimizations.install(spark)
     // the probe times the streaming STATE path with the distributed noop
     // sink; the registry default (driver-local memory sink) is a

@@ -103,46 +103,6 @@ object DedupOps extends OpRegistry {
           col("p10_text")).otherwise(col("text")).as("text"))
   }
 
-  /** df-capped exact trigram-Jaccard edges (a < b) over an arbitrary doc
-    * universe — the [[TextOps.jaccardEdges]] kernel re-rooted on a passed
-    * frame (that one is bound to the raw corpus artifact; the incremental
-    * CC op needs the PLANTED universe). Same semantics end to end: hashed
-    * distinct trigrams, df ≤ 100 posting cap, |∩|/|∪| > 0.1. */
-  private[graft] def plantedJaccardEdges(s: SparkSession,
-      docs: DataFrame): DataFrame = {
-    val sh = docs.select(col("doc_id"),
-      explode(Shingling.shingleArray(col("text"), hashed = true)(s)).as("sh_h"))
-    val wdf = Window.partitionBy("sh_h")
-    // capped posting list PINNED once (r20, guide §2.4/§5): three branches
-    // reference it (sizes + both self-join sides) and the lazy form re-ran
-    // the shingle explode + df window per branch — three occurrence-sized
-    // passes per edge build. Both production callers
-    // (dedup_components_incremental, streamCcMaintain) invoke this ONLY
-    // inside a build that immediately lands the edges to parquet, so the
-    // pin is the transient single-use context VERDICT r19 sanctioned for
-    // candidatePairs' jaccardEdges(materialize = true) — it never outlives
-    // the artifact write.
-    // LAZY (r20 session 3): all three references live inside the ONE
-    // artifact-write action both callers run, so that action materializes
-    // the pin; shared shuffle stages + per-partition block locks keep the
-    // explode+window pass single-execution without a dedicated job.
-    val capped = sh.withColumn("df", count(lit(1)).over(wdf))
-      .filter(col("df") <= 100).drop("df").localCheckpoint(false)
-    val sizes = capped.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = capped.as("a").join(capped.as("b"),
-        col("a.sh_h") === col("b.sh_h") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("a"), col("b.doc_id").as("b"))
-      .agg(count(lit(1)).as("inter"))
-    // no broadcast hint on sizes (doc-count-sized; AQE decides — the
-    // jaccardEdges rationale verbatim)
-    inter
-      .join(sizes.select(col("doc_id").as("a"), col("n").as("n1")), "a")
-      .join(sizes.select(col("doc_id").as("b"), col("n").as("n2")), "b")
-      .filter(col("inter").cast("double") /
-        (col("n1") + col("n2") - col("inter")) > 0.1)
-      .select(col("a"), col("b"))
-  }
-
   /** (doc_id, pm0..pm7): the portable signature — one shingle explode +
     * ONE map-side-combined aggregate of 8 mins. Minhash runs over 3-token
     * SHINGLES (the repo-wide dedup granularity), not unigrams: the fixture
@@ -610,7 +570,9 @@ object DedupOps extends OpRegistry {
       val docs = landedPlantedDocs(s, dir)
       val isBatch = (n: Column) => pmod(n, lit(10L)) === 7
       val edgePath = s"/tmp/graft_cc_inc_edges_${s.sparkContext.applicationId}"
-      plantedJaccardEdges(s, docs).write.mode("overwrite").parquet(edgePath)
+      TextOps.jaccardEdges(docs, pin = true)
+        .select(col("id1").as("a"), col("id2").as("b"))
+        .write.mode("overwrite").parquet(edgePath)
       val edges = s.read.parquet(edgePath)
       // landed base-label artifact (last night's output)
       val baseNodes = docs.filter(!isBatch(col("doc_id")))
@@ -991,8 +953,8 @@ object DedupOps extends OpRegistry {
       docFilter)
 
   /** df-capped trigram-Jaccard pairs CTE chain over a supplied d CTE —
-    * tok/sh/shc/sz/ix/pairs, mirroring [[plantedJaccardEdges]] exactly
-    * (hashed-join vs string-join asymmetry aside — the shared 2^-64
+    * tok/sh/shc/sz/ix/pairs, the same edges as [[TextOps.jaccardEdges]]
+    * over d (hashed-join vs string-join asymmetry aside — the shared 2^-64
     * xxhash64-collision trade every pair oracle makes). Used by the
     * streaming CC oracle (stream-planted d); splice after WITH RECURSIVE.
     * shc/pairs MATERIALIZED: four stage subgraphs re-read them. */

@@ -11,18 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object Shingling {
 
-  /** Distinct 3-token shingles of `text` as an array column. `hashed=true`
-    * maps each shingle through xxhash64 — 8-byte join keys instead of ~25-
-    * byte strings for the shuffle-heavy consumers. Docs with <3 tokens
-    * yield an empty array (sequence(0, size-3) would otherwise infer step
-    * -1 and slice() would throw), matching the oracle's range(1, len-1)
-    * empty-result semantics.
-    *
-    * The hashed path routes through the fused native kernel
-    * [[graft.functions.ShingleHash64]] (one tokenize + byte-level concat +
-    * hash-set dedup per row) — bit-identical to the declarative chain below
-    * (ExpressionSpec asserts equality on the fixture), ~3× less per-row
-    * allocation on the jaccard/minhash/components hot path. */
   /** Character bigrams of `text` (substring(text, i, 2) for i in
     * 1..len-1) as a ONE-PASS array, shared by docs_char_lm and
     * text_langid. The naive `transform(sequence(1, len-1),
@@ -44,6 +32,18 @@ object Shingling {
       (a, b) => concat(a, b))
   }
 
+  /** Distinct 3-token shingles of `text` as an array column. `hashed=true`
+    * maps each shingle through xxhash64 — 8-byte join keys instead of ~25-
+    * byte strings for the shuffle-heavy consumers. Docs with <3 tokens
+    * yield an empty array (sequence(0, size-3) would otherwise infer step
+    * -1 and slice() would throw), matching the oracle's range(1, len-1)
+    * empty-result semantics.
+    *
+    * The hashed path routes through the fused native kernel
+    * [[graft.functions.ShingleHash64]] (one tokenize + byte-level concat +
+    * hash-set dedup per row) — bit-identical to the declarative chain below
+    * (ExpressionSpec asserts equality on the fixture), ~3× less per-row
+    * allocation on the jaccard/minhash/components hot path. */
   def shingleArray(text: Column, hashed: Boolean)
                   (implicit s: org.apache.spark.sql.SparkSession): Column =
     if (hashed) {

@@ -16,12 +16,6 @@ import org.apache.spark.sql.expressions.Window
   */
 object TextOps extends OpRegistry {
 
-  /** Distinct 3-token shingles per document: (doc_id, shingle) — shared
-    * kernel, see [[Shingling.shingleArray]]. */
-  private def shingles(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      explode(Shingling.shingleArray(col("text"), hashed = false)(docs.sparkSession)).as("shingle"))
-
   /** Shared stopword list for quality scoring/filtering and the capstone
     * pipeline — one copy so the composed pipeline cannot drift from the
     * unit ops it claims to compose (their oracle twins list the same words
@@ -120,25 +114,81 @@ object TextOps extends OpRegistry {
     * where capped == exact Jaccard. */
   private[graft] val MaxShingleDf = 100
 
-  /** Shared exact-Jaccard pair kernel: (id1, id2, inter, uni) for pairs
-    * with jac > 0.1 over the capped shingle universe.
+  /** The exact shingle-overlap kernel, part 1: the df-capped posting list
+    * (doc_id, sh_h) of a (doc_id, text) frame — its distinct hashed 3-token
+    * shingles, minus every shingle present in more than [[MaxShingleDf]]
+    * docs.
     *
-    * Posting lists keyed by xxhash64(shingle), not the string: the
-    * shuffle/join moves 8-byte keys instead of ~25-byte text and equality
-    * is one word compare. A 64-bit collision would merge two shingles
-    * (P ≈ pairs²/2^64 ≈ 1e-10 at sf0.1) — the same trade minhash makes.
-    * The df-cap runs as a count-window over sh_h (measured r2: 2× faster
-    * than a separate hot-set aggregate + anti-join, which re-tokenizes the
-    * corpus for a second full pass).
+    * Keyed by xxhash64(shingle), not the string: the shuffle/join moves
+    * 8-byte keys instead of ~25-byte text and equality is one word compare.
+    * A 64-bit collision would merge two shingles (P ≈ pairs²/2^64 ≈ 1e-10
+    * at sf0.1) — the same trade minhash makes. The cap runs as a
+    * count-window over sh_h (measured: 2× faster than a separate hot-set
+    * aggregate + anti-join, which re-tokenizes the corpus for a second full
+    * pass).
     *
-    * `materialize`: the capped posting list fans out to FOUR consumers
-    * (both self-join sides + both size lookups); lazy plans recompute the
-    * whole shingling pipeline per consumer when exchange reuse doesn't
-    * fire (measured: full materialization of the lazy form ran 4 FileScans
-    * / 4 window passes, 8.6 s vs 3.9 s). Iterative callers
-    * (dedup_components) pass true to pin the posting list once via
-    * localCheckpoint; the oracle-compared op keeps the lazy form — same
-    * result either way. */
+    * `pin`: the list fans out to four consumers in [[overlapPairs]] (both
+    * self-join sides and both size lookups), and a lazy plan re-runs the
+    * shingle explode + df window per consumer when exchange reuse does not
+    * fire. A pinning caller lands the edges in ONE write action, which
+    * materializes the lazy pin once; the pin never outlives that write. */
+  private[graft] def cappedPostings(docs: DataFrame, pin: Boolean): DataFrame = {
+    val sh = docs.select(col("doc_id"), explode(
+      Shingling.shingleArray(col("text"), hashed = true)(docs.sparkSession)).as("sh_h"))
+    val capped = sh.withColumn("df", count(lit(1)).over(Window.partitionBy("sh_h")))
+      .filter(col("df") <= MaxShingleDf).drop("df")
+    if (pin) capped.localCheckpoint(false) else capped
+  }
+
+  /** Part 2: (id1, id2, inter, n1, n2) for every pair id1 < id2 sharing a
+    * posting of a (doc_id, sh_h) list — inter shared postings, n1 and n2
+    * each doc's posting count. Sizes and intersection come from the SAME
+    * list, so a score over them is a consistent set measure of the capped
+    * universe. `probe`, a subset of `postings`, restricts the pairs to those
+    * whose id2 posting is a probe row; the probe join costs
+    * probe-occurrences × ≤cap posting length.
+    *
+    * No broadcast hint on the sizes: they are doc-count-sized, not a
+    * bounded dim. AQE broadcasts them while small and switches to a shuffle
+    * join past the threshold. */
+  private[graft] def overlapPairs(postings: DataFrame,
+      probe: Option[DataFrame] = None): DataFrame = {
+    val sizes = postings.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    postings.as("a").join(probe.getOrElse(postings).as("b"),
+        col("a.sh_h") === col("b.sh_h") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
+      .agg(count(lit(1)).as("inter"))
+      .join(sizes.select(col("doc_id"), col("n").as("n1")), col("id1") === col("doc_id")).drop("doc_id")
+      .join(sizes.select(col("doc_id"), col("n").as("n2")), col("id2") === col("doc_id")).drop("doc_id")
+  }
+
+  /** Jaccard edges of [[overlapPairs]]: (id1, id2, inter, uni) with
+    * inter / uni > 0.1. */
+  private[graft] def jaccardFilter(pairs: DataFrame): DataFrame =
+    pairs.withColumn("uni", col("n1") + col("n2") - col("inter"))
+      .filter(col("inter").cast("double") / col("uni") > 0.1)
+      .select(col("id1"), col("id2"), col("inter"), col("uni"))
+
+  /** Containment edges of [[overlapPairs]]: |A∩B| / min(|A|,|B|) > 0.5 as
+    * the exact rational compare 2·inter > least(n1, n2) — the ASYMMETRIC
+    * near-dup test that catches a small document embedded in a large one
+    * (quote farms, boilerplate wrappers), which Jaccard structurally
+    * misses: a doc fully contained in one 10× its size has jac ≤ 0.1 but
+    * containment 1.0. */
+  private[graft] def containmentFilter(pairs: DataFrame): DataFrame =
+    pairs.filter(col("inter") * 2 > least(col("n1"), col("n2")))
+
+  /** The df-capped exact-Jaccard edges (id1, id2, inter, uni) of a
+    * (doc_id, text) frame. */
+  private[graft] def jaccardEdges(docs: DataFrame, pin: Boolean): DataFrame =
+    jaccardFilter(overlapPairs(cappedPostings(docs, pin)))
+
+  /** Clears ALL landed artifacts (candidate edges + the graph family's
+    * co-trade edges) — the per-pass honest-measurement hook Bench and
+    * ScaleProbe call; see [[graft.CorpusArtifacts]]. */
+  private[graft] def clearCandidateArtifacts(): Unit =
+    graft.CorpusArtifacts.clear()
+
   /** Landed candidate-pair artifact (VERDICT r10 #2): the df-capped
     * exact-Jaccard edge list `(id1, id2, inter, uni)` written ONCE per
     * (session, corpus dir) as parquet and re-read by every consumer —
@@ -152,18 +202,12 @@ object TextOps extends OpRegistry {
     * shuffle-free. The first consumer in a session pays the build (timed
     * honestly — Bench/ScaleProbe clear the memo each pass via
     * [[clearCandidateArtifacts]]); the rest pay a parquet read of a
-    * pair-count-sized table. The lazy derivation stays in
-    * [[jaccardEdges]] as the oracle-checkable twin — DuckDB re-derives
-    * the same edges independently, so the artifact never self-certifies. */
-  /** Clears ALL landed artifacts (candidate edges + the graph family's
-    * co-trade edges) — the per-pass honest-measurement hook Bench and
-    * ScaleProbe call; see [[graft.CorpusArtifacts]]. */
-  private[graft] def clearCandidateArtifacts(): Unit =
-    graft.CorpusArtifacts.clear()
-
+    * pair-count-sized table. The lazy [[jaccardEdges]] over the same docs
+    * is the oracle-checkable twin — DuckDB re-derives the same edges
+    * independently, so the artifact never self-certifies. */
   private[graft] def candidatePairs(s: SparkSession, dir: String): DataFrame =
     graft.CorpusArtifacts.parquet(s, "edges", dir)(
-      jaccardEdges(s, dir, materialize = true))
+      jaccardEdges(tWide(s, dir)("documents"), pin = true))
 
   /** The landed bpe_vocab artifact — the full trainer's merge-table
     * product, (w, n_sym, n_char) per trained word (r17 review; factored
@@ -177,77 +221,6 @@ object TextOps extends OpRegistry {
         .select(col("w"), col("n_sym0").cast("long").as("n_sym"),
           length(col("w")).cast("long").as("n_char"))
     }
-
-  /** The df-capped hashed posting list (doc_id, sh_h) — shared root of
-    * the exact pair kernels (Jaccard + containment). */
-  private def cappedShingles(s: SparkSession, dir: String,
-                             materialize: Boolean): DataFrame = {
-    val docsArr = tWide(s, dir)("documents").select(col("doc_id"),
-      Shingling.shingleArray(col("text"), hashed = true)(s).as("shs"))
-    val sh = docsArr.select(col("doc_id"), explode(col("shs")).as("sh_h"))
-    val wdf = Window.partitionBy("sh_h")
-    val shCapped0 = sh.withColumn("df", count(lit(1)).over(wdf))
-      .filter(col("df") <= MaxShingleDf).drop("df")
-    // materialize = true is only ever used inside the landed-artifact
-    // build (one write action) — LAZY (r20 session 3): that action
-    // materializes the pin; no dedicated job.
-    if (materialize) shCapped0.localCheckpoint(false) else shCapped0
-  }
-
-  private[graft] def jaccardEdges(s: SparkSession, dir: String,
-                                  materialize: Boolean): DataFrame = {
-    val shCapped = cappedShingles(s, dir, materialize)
-    // set sizes over the SAME capped universe as the intersection (ADVICE
-    // r2 consistency)
-    val sizes = shCapped.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = shCapped.as("a").join(shCapped.as("b"),
-        col("a.sh_h") === col("b.sh_h") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      .agg(count(lit(1)).as("inter"))
-    // NO broadcast hint on sizes: it is DOC-COUNT-sized (1M rows at the
-    // 200× probe), not a bounded dim — a forced broadcast of a growing
-    // build side is exactly the 100 TB scale bug this codebase bans. AQE
-    // broadcasts it while it is small (every fixture SF) and switches to a
-    // shuffle join past the threshold, which is the right plan both times.
-    inter
-      .join(sizes.select(col("doc_id"), col("n").as("n1")), col("id1") === col("doc_id")).drop("doc_id")
-      .join(sizes.select(col("doc_id"), col("n").as("n2")), col("id2") === col("doc_id")).drop("doc_id")
-      .withColumn("uni", col("n1") + col("n2") - col("inter"))
-      .filter(col("inter").cast("double") / col("uni") > 0.1)
-      .select(col("id1"), col("id2"), col("inter"), col("uni"))
-  }
-
-  /** Containment pair kernel: same capped posting-list root as
-    * [[jaccardEdges]], different score — |A∩B| / min(|A|,|B|) > 0.5, the
-    * ASYMMETRIC near-dup test that catches a small document embedded in a
-    * large one (quote farms, boilerplate wrappers), which Jaccard
-    * structurally misses: a doc fully contained in one 10× its size has
-    * jac ≤ 0.1 but containment 1.0. Exact rational compare (2·inter >
-    * min), no float in the row set. */
-  private def containmentEdges(s: SparkSession, dir: String): DataFrame = {
-    // materialize = false (r20, re-adjudicating the r19 pin): the r19
-    // localCheckpoint held the full OCCURRENCE-sized capped posting list
-    // in non-reliable executor memory — the same scale exposure VERDICT
-    // r19 #6 banned for the universe pins — to save one extra
-    // occurrence-sized pass under the sizes branch (the self-join sides
-    // share one ReusedExchange either way). Isolated A/B at sf0.1
-    // measured the two forms FLAT (warm 3.7/2.3 pinned vs 3.0/3.2 lazy),
-    // so the linear extra pass buys out the memory pin. candidatePairs'
-    // jaccardEdges(materialize = true) keeps its pin: it runs once inside
-    // the landed-artifact build, a transient single-use context.
-    val shCapped = cappedShingles(s, dir, materialize = false)
-    val sizes = shCapped.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = shCapped.as("a").join(shCapped.as("b"),
-        col("a.sh_h") === col("b.sh_h") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      .agg(count(lit(1)).as("inter"))
-    // same no-broadcast-hint rationale as jaccardEdges: sizes is
-    // doc-count-sized; AQE picks broadcast only while it is small
-    inter
-      .join(sizes.select(col("doc_id"), col("n").as("n1")), col("id1") === col("doc_id")).drop("doc_id")
-      .join(sizes.select(col("doc_id"), col("n").as("n2")), col("id2") === col("doc_id")).drop("doc_id")
-      .filter(col("inter") * 2 > least(col("n1"), col("n2")))
-  }
 
   /** Shared BPE trainer (r16): 6 merge rounds over the word-frequency
     * dict. Returns (merge table rows, final vocab (w, s, n) with s the
@@ -437,14 +410,15 @@ object TextOps extends OpRegistry {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "text_containment" -> ((s, dir) =>
       // Sub-document duplication screen (round 12): shingle-set
-      // containment over the capped universe — see [[containmentEdges]]
+      // containment over the capped universe — see [[containmentFilter]]
       // for why this is a different operator from jaccard_pairs, not a
       // threshold change. Scale shape identical to the jaccard kernel
       // (df-capped posting self-join; candidate volume bounded per
       // shingle cell), so the probe findings for jaccard steer this op
       // too; at 100 TB the minhash/LSH pass steers candidates here the
       // same way.
-      containmentEdges(s, dir)
+      containmentFilter(overlapPairs(
+          cappedPostings(tWide(s, dir)("documents"), pin = false)))
         .select(col("id1"), col("id2"), col("inter"), col("n1"), col("n2"),
           r6(col("inter").cast("double") / least(col("n1"), col("n2")))
             .as("cont6"))

@@ -996,9 +996,9 @@ object Analytics extends OpRegistry {
       // through one task. perPart feeds BOTH the probe side and its own
       // grand total; localCheckpoint pins the lineitem scan+aggregate once
       // so "no second fact pass" holds by construction, not only when AQE
-      // exchange reuse happens to fire (ADVICE r10; jaccardEdges
-      // precedent). The threshold compare and the share are one IEEE
-      // multiply/divide each on identically-rounded doubles. (A value
+      // exchange reuse happens to fire. The threshold compare and the
+      // share are one IEEE multiply/divide each on identically-rounded
+      // doubles. (A value
       // landing bit-exactly on total×0.0005 would be a tie on both
       // engines equally — same compare on the same bits.)
       val tt = t(s, dir) _

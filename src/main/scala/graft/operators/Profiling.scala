@@ -1098,22 +1098,8 @@ object Profiling extends OpRegistry {
         dfg.filter(col("df_all") <= TextOps.MaxShingleDf).select("sh_h"),
         "sh_h")
       .localCheckpoint(false)
-    val sizes = capped.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val deltaPost = capped.filter(col("doc_id") >= IngestDeltaOff)
-    val inter = capped.as("a").join(deltaPost.as("b"),
-        col("a.sh_h") === col("b.sh_h") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      .agg(count(lit(1)).as("inter"))
-    // same join/score tail as jaccardEdges (no broadcast hint on sizes —
-    // doc-count-sized; AQE broadcasts it only while small)
-    val newPairs = inter
-      .join(sizes.select(col("doc_id"), col("n").as("n1")),
-        col("id1") === col("doc_id")).drop("doc_id")
-      .join(sizes.select(col("doc_id"), col("n").as("n2")),
-        col("id2") === col("doc_id")).drop("doc_id")
-      .withColumn("uni", col("n1") + col("n2") - col("inter"))
-      .filter(col("inter").cast("double") / col("uni") > 0.1)
-      .select(col("id1"), col("id2"), col("inter"), col("uni"))
+    val newPairs = TextOps.jaccardFilter(TextOps.overlapPairs(capped,
+        probe = Some(capped.filter(col("doc_id") >= IngestDeltaOff))))
       .localCheckpoint()
     val edgesV1 = TextOps.candidatePairs(s, dir).unionByName(newPairs)
     val baseLab = DedupOps.componentLabels(s, dir)
@@ -1158,7 +1144,7 @@ object Profiling extends OpRegistry {
 
   /** The build kernel behind the co-trade artifact — PlanSpec audits THIS
     * for data-sized broadcast hints (the artifact consumer's plan is a
-    * vacuous parquet scan, same split as jaccardEdges vs candidatePairs).
+    * vacuous parquet scan).
     * The fact-fact half rides the shared co-bucketed orderkey pair
     * (CorpusArtifacts.orderkeyFacts, r13) — zero hash exchange between
     * lineitem and orders; customer/supplier are per-row-key dim joins

@@ -524,24 +524,22 @@ object Streaming extends OpRegistry {
   private def ccWaveOf(c: Column): Column =
     when(!ccIsBatch(c), lit(-1L)).otherwise(pmod(c, lit(3L)))
 
+  /** Runs `f` under the Spark job description `wave <batchId>: <label>`,
+    * so listeners and the event log attribute each [[ccProcessWave]] job
+    * to its phase; the previous description is restored afterwards. */
+  private def ccPhase[T](s: SparkSession, batchId: Long, label: String)(f: => T): T = {
+    val sc = s.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"wave $batchId: $label")
+    try f finally sc.setJobDescription(prev)
+  }
+
   /** One micro-batch of CC label maintenance — the foreachBatch body,
     * factored out so Round19Spec can re-invoke it on the SAME batchId and
     * pin micro-batch retry idempotence (VERDICT r18 #5): every write in
     * here lands at a batchId-keyed path in overwrite mode (delta/b$id,
     * log/b$id) or a content-deterministic checkpoint (labels/vN), so a
     * retried wave reproduces byte-identical store state. */
-  /** Opt-in phase timing for [[ccProcessWave]] (measurement tooling, guide
-    * §1: phase attribution inside the wave — ProbeScc times whole waves).
-    * Zero cost unless SPARK_GRAFT_CC_PHASES=1. */
-  private val ccPhaseTiming = sys.env.get("SPARK_GRAFT_CC_PHASES").contains("1")
-  @inline private def ccPhase[T](batchId: Long, label: String)(f: => T): T =
-    if (!ccPhaseTiming) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[ccphase] wave $batchId $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
   private[graft] def ccProcessWave(s: SparkSession, base: String,
       edges: DataFrame, batch: DataFrame, batchId: Long): Unit = {
     import graft.llm.DedupOps
@@ -554,7 +552,7 @@ object Streaming extends OpRegistry {
     // checkpoint — computes the serve chain once and the persist makes
     // every later reference (receipt join, checkpoint fold) a cache read;
     // an eager pin here was a dedicated job for the same materialization.
-    val store = ccPhase(batchId, "store pin")(
+    val store = ccPhase(s, batchId, "store pin")(
       ccServedLabels(s, base, batchId - 1).localCheckpoint(false))
     val waveDocs = batch.select("doc_id").distinct()
     // edges first complete in THIS wave
@@ -572,7 +570,7 @@ object Streaming extends OpRegistry {
     // 15.2/15.1 -> 16.8/19.3 s warm FULL runs — the dedicated pin job's
     // broadcast-parallel store materialization beats folding it into the
     // sub-CC's first potential action).
-    val ce0 = ccPhase(batchId, "ce0 pin")(newEdges
+    val ce0 = ccPhase(s, batchId, "ce0 pin")(newEdges
       .join(store.select(col("doc_id").as("a"), col("label").as("la")),
         Seq("a"), "left")
       .join(store.select(col("doc_id").as("b"), col("label").as("lb")),
@@ -594,7 +592,7 @@ object Streaming extends OpRegistry {
     // the final nbrMin join chain once per consumer — both delta writes
     // and the relabel build each re-ran it (measured: each tiny delta
     // write cost ~0.7–2 s, dominated by that re-derivation, not the I/O).
-    val subLab = ccPhase(batchId, "sub-CC + pin") {
+    val subLab = ccPhase(s, batchId, "sub-CC + pin") {
       val (subLab0, _) = DedupOps.connectedComponents(
         waveDocs.select(col("doc_id").as("node")).union(touched).distinct(),
         ce)
@@ -615,7 +613,7 @@ object Streaming extends OpRegistry {
     // fixed job cost dominated their KB payloads; one atomic delta object
     // per micro-batch is also the production commit shape). repartition(1)
     // pins one part file so an EMPTY delta still lands a readable schema.
-    ccPhase(batchId, "delta write")(
+    ccPhase(s, batchId, "delta write")(
       waveOut.select(lit(0).as("kind"), col("doc_id"), col("label"),
           lit(null).cast("long").as("old_label"),
           lit(null).cast("long").as("new_label"))
@@ -651,7 +649,7 @@ object Streaming extends OpRegistry {
     // receipt: wave CONTENT-derived (the stream_dedup_bands rule —
     // mis-ordered delivery fails the oracle instead of passing);
     // relabeled/components are merge-on-read READS, never writes
-    ccPhase(batchId, "receipt write")(
+    ccPhase(s, batchId, "receipt write")(
       waveDocs.agg(
           coalesce(max(pmod(col("doc_id"), lit(3L))), lit(batchId))
             .as("wave"),
@@ -680,7 +678,7 @@ object Streaming extends OpRegistry {
     // waves only — non-checkpoint waves never pay a base-sized pass beyond
     // the store snapshot itself.
     if ((batchId + 1L) % CcCheckpointEveryWaves == 0L)
-      ccPhase(batchId, "checkpoint fold write")(
+      ccPhase(s, batchId, "checkpoint fold write")(
         ccFoldDelta(s, store, base, batchId)
           .write.mode("overwrite").parquet(s"$base/labels/v${batchId + 1L}"))
   }
@@ -700,7 +698,8 @@ object Streaming extends OpRegistry {
     // landed edge artifact (the dedup_components_incremental rationale:
     // production stores signatures/edges at ingest; three per-wave
     // consumers would otherwise re-run the pair kernel)
-    DedupOps.plantedJaccardEdges(s, docs)
+    graft.llm.TextOps.jaccardEdges(docs, pin = true)
+      .select(col("id1").as("a"), col("id2").as("b"))
       .write.mode("overwrite").parquet(s"$base/edges")
     val edges = s.read.parquet(s"$base/edges")
     // landed base-label artifact (last night's output)

@@ -7,11 +7,20 @@ package graft
   */
 class PlanSpec extends GraftSuite {
 
-  private def finalPlan(name: String): String = {
-    val df = q(name)
+  private def finalPlan(name: String): String = executed(q(name))
+
+  private def executed(df: org.apache.spark.sql.DataFrame): String = {
     df.collect() // finalize AQE before inspecting
     df.queryExecution.executedPlan.toString
   }
+
+  /** The lazy Jaccard kernel over the corpus and over the planted universe
+    * the incremental CC ops read. */
+  private def corpusDocs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
+  private def jaccardKernel =
+    llm.TextOps.jaccardEdges(corpusDocs, pin = false)
+  private def plantedKernel =
+    llm.TextOps.jaccardEdges(llm.DedupOps.plantedDocs(corpusDocs), pin = false)
 
   test("q_revenue_by_region: dims broadcast, agg is partial+final, filters on scans") {
     val p = finalPlan("q_revenue_by_region")
@@ -30,10 +39,10 @@ class PlanSpec extends GraftSuite {
     // jaccard_pairs now reads the landed candidate artifact, so the guard
     // must inspect the BUILD kernel (the lazy oracle twin) — the registry
     // plan would be a vacuous parquet scan
-    val kernel = llm.TextOps.jaccardEdges(spark, sfDir, materialize = false)
-    kernel.collect()
     val plans = Seq(
-      "jaccardEdges(kernel)" -> kernel.queryExecution.executedPlan.toString,
+      "jaccardEdges(kernel)" -> executed(jaccardKernel),
+      "jaccardEdges(planted)" -> executed(plantedKernel),
+      "text_containment" -> finalPlan("text_containment"),
       "dedup_near_minhash" -> finalPlan("dedup_near_minhash"))
     for ((name, p) <- plans) {
       assert(!p.contains("CartesianProduct"), s"$name degenerated to a cartesian product:\n$p")
@@ -172,15 +181,14 @@ class PlanSpec extends GraftSuite {
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit}
     val audited = Seq("q_revenue_by_region", "q_top_unshipped", "q_parts_share",
       "q_yoy_growth", "events_retention_cohorts", "events_funnel",
-      "graph_triangles", "merge_upsert", "text_tfidf_top")
+      "graph_triangles", "merge_upsert", "text_tfidf_top", "text_containment")
     // jaccard_pairs and the graph family read landed artifacts; audit the
     // BUILD kernels (where the data-sized hints could live) instead of the
     // vacuous artifact-scan plans
     val analyzedPlans =
       audited.map(n => n -> q(n).queryExecution.analyzed) ++ Seq(
-        "jaccardEdges(kernel)" ->
-          llm.TextOps.jaccardEdges(spark, sfDir, materialize = false)
-            .queryExecution.analyzed,
+        "jaccardEdges(kernel)" -> jaccardKernel.queryExecution.analyzed,
+        "jaccardEdges(planted)" -> plantedKernel.queryExecution.analyzed,
         "coTradeBuild(kernel)" ->
           operators.Profiling.coTradeBuild(spark, sfDir)
             .queryExecution.analyzed)

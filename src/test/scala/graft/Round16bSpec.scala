@@ -129,7 +129,8 @@ class Round16bSpec extends GraftSuite {
   test("dedup_components_incremental equals a full CC rebuild over the planted union") {
     val docs = llm.DedupOps.plantedDocs(
       spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text"))
-    val edges = llm.DedupOps.plantedJaccardEdges(spark, docs)
+    val edges = llm.TextOps.jaccardEdges(docs, pin = true)
+      .select(col("id1").as("a"), col("id2").as("b"))
     val nodes = docs.select(col("doc_id").as("node"))
     val (full, _) = llm.DedupOps.connectedComponents(nodes, edges)
     val expected = full.select(col("node").as("doc_id"),

@@ -93,6 +93,38 @@ class Round19Spec extends GraftSuite {
     assert(snapshot() === before, "retrying wave 2 mutated the store")
   }
 
+  test("cc wave jobs carry their phase as job description; the caller's is restored") {
+    streaming.Streaming.streamCcMaintain(spark, handDocs).collect()
+    val base = ccBase
+    val edges = spark.read.parquet(s"$base/edges")
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(descs.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobDescription("caller")
+    try {
+      // wave 1 writes a checkpoint, so it runs every phase; a re-run is
+      // idempotent (the retry test above)
+      streaming.Streaming.ccProcessWave(spark, base, edges,
+        handDocs.filter(col("doc_id") === 7L).select("doc_id"), 1L)
+      assert(sc.getLocalProperty("spark.job.description") === "caller")
+      val want = Seq("ce0 pin", "delta write", "receipt write", "checkpoint fold write")
+        .map(p => s"wave 1: $p")
+      // job-start events are posted async
+      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
+      while (!want.forall(descs.contains) && System.nanoTime() < deadline)
+        Thread.sleep(200)
+      assert(want.forall(descs.contains), s"job descriptions: $descs")
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("corpus_ingest_index_v1: appended edges and labels equal a full rebuild over the union") {
     // VERDICT r18 #3 done-criterion: the incremental refresh (delta-probe
     // pair kernel + contract-and-subCC label merge) must reproduce the
@@ -106,7 +138,8 @@ class Round19Spec extends GraftSuite {
     spark.read.parquet(s"$sfDir/documents.parquet")
       .unionByName(operators.Profiling.ingestDeltaDocs(spark, sfDir))
       .write.mode("overwrite").parquet(s"$uniDir/documents.parquet")
-    val rebuiltE = llm.TextOps.jaccardEdges(spark, uniDir, materialize = false)
+    val rebuiltE = llm.TextOps.jaccardEdges(
+        Tables.load(spark, uniDir, "documents"), pin = false)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val gotE = edgesV1.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet

@@ -3,20 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local test session (same mandatory configs as Verify/Bench). */
+/** Shared local test session (the mains' [[GraftSession]], without
+  * the optimizer rules). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    GraftSession.create("4", Map("spark.app.name" -> "graft-test"))
   val sfDir = "/root/testdata/sf0.001"
 
   /** Shared tmp-fixture factory (ADVICE r11: per-suite
