@@ -73,12 +73,13 @@ object Bench {
   private def streamingFloor(spark: SparkSession, sfDir: String, rep: Int): Double =
     try {
       import org.apache.spark.sql.streaming.Trigger
-      val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-      // same RAM-scratch checkpoint the real stream_* queries use — the
-      // floor must price the path they actually pay, not a slower one
+      val schema = Tables.rawLoad(spark, sfDir, "events").schema
+      // same schema read, RAM-scratch checkpoint and query settings the
+      // real stream_* queries use — the floor must price the path they
+      // actually pay, not a slower one
       val ckpt = streaming.Streaming.scratchCkpt(s"floor_$rep")
       val t0 = System.nanoTime()
-      try {
+      try streaming.Streaming.withStreamQueryConf(spark) {
         val q = spark.readStream.schema(schema)
           .option("basePath", sfDir).parquet(s"$sfDir/events.parquet*")
           .select("event_id")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{DecimalType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DecimalType, StructType, TimestampNTZType, TimestampType}
 
 /** Fixture table loaders + shared determinism helpers.
   *
@@ -31,7 +31,55 @@ object Tables {
   /** The parquet files exactly as stored — streaming readers need the FILE
     * schema (a projected schema would mismatch the footer). */
   def rawLoad(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    readParquet(spark, s"$sfDir/$name.parquet")
+
+  /** The session settings that change what schema Parquet inference yields
+    * for the same files. */
+  private val ParquetReadConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  /** Inferred schemas, keyed by (app, path, [[fingerprint]], reader settings). */
+  private[graft] val schemaMemo = scala.collection.concurrent.TrieMap[String, StructType]()
+
+  /** `spark.read.parquet(path)` with the schema inferred once. Inference
+    * without a schema is a one-task Spark job per read (footer reads on the
+    * executors); here only the first read of a path pays it, and later reads
+    * pass the stored schema. The key carries every file's name, length and
+    * modification time and the session's Parquet reading settings, so a
+    * path rewritten in place or read under another setting is inferred
+    * afresh. A missing path falls through to Spark's own error. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    fingerprint(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(files) =>
+        val key = (Seq(spark.sparkContext.applicationId, path, files) ++
+          ParquetReadConfs.map(k => spark.conf.getOption(k).getOrElse(""))).mkString("|")
+        schemaMemo.get(key) match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            schemaMemo.putIfAbsent(key, df.schema)
+            df
+        }
+    }
+
+  /** Name, length and modification time of every file under `path` (the
+    * file itself for a single-file path), sorted; None when it does not
+    * exist. Listed through the path's Hadoop file system, so local and
+    * shared storage are fingerprinted alike. */
+  private[graft] def fingerprint(spark: SparkSession, path: String): Option[String] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    try {
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      val files = Seq.newBuilder[String]
+      while (it.hasNext) {
+        val f = it.next()
+        files += s"${f.getPath}:${f.getLen}:${f.getModificationTime}"
+      }
+      Some(files.result().sorted.mkString(","))
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
 
   /** Fixture-representation shim for `events.ts`. The generator has shipped
     * the column two ways across rounds: TIMESTAMP(NANOS) (readable only as
@@ -54,7 +102,8 @@ object Tables {
   def registerViews(spark: SparkSession, sfDir: String): Unit =
     names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 
-  /** See [[OpRegistry.tWide]] — scan split counts per (app, dir, table). */
+  /** See [[OpRegistry.tWide]] — scan split counts per (app, table files,
+    * split settings). */
   private[graft] val scanPartsMemo =
     scala.collection.concurrent.TrieMap[String, Int]()
 }
@@ -204,14 +253,17 @@ trait OpRegistry {
     val df = Tables.load(spark, sfDir, name)
     val target = spark.sparkContext.defaultParallelism
     // the scan's split count is a pure function of (files, session conf) —
-    // memoized per (app, dir, table) because `.rdd.getNumPartitions` runs
-    // physical planning for the scan on EVERY call, and this helper fronts
-    // most of the text/vector registry (r19 optimization round). A stale
-    // entry could only mis-size the repartition no-op decision, never
-    // change results.
-    val n = Tables.scanPartsMemo.getOrElseUpdate(
-      spark.sparkContext.applicationId + "|" + sfDir + "|" + name,
-      df.rdd.getNumPartitions)
+    // memoized because `.rdd.getNumPartitions` runs physical planning for
+    // the scan on EVERY call, and this helper fronts most of the
+    // text/vector registry (r19 optimization round). The key carries the
+    // files' fingerprint and the split settings, so a table rewritten in
+    // place or a changed split size is sized afresh.
+    val path = s"$sfDir/$name.parquet"
+    val key = (Seq(spark.sparkContext.applicationId, path,
+        Tables.fingerprint(spark, path).getOrElse("")) ++
+      Seq("maxPartitionBytes", "openCostInBytes", "minPartitionNum")
+        .map(k => spark.conf.getOption("spark.sql.files." + k).getOrElse(""))).mkString("|")
+    val n = Tables.scanPartsMemo.getOrElseUpdate(key, df.rdd.getNumPartitions)
     if (n < target) df.repartition(target) else df
   }
 }

@@ -66,7 +66,7 @@ object Profiling extends OpRegistry {
       // frame), the bounded-state exemption to the r20 no-pin rule.
       // Round8Spec keeps its single-column-ReadSchema pin on the block
       // plans via [[profileTableBlocks]].
-      val profiled = inParallel[DataFrame](profileTableBlocks(s, dir).map {
+      val profiled = inParallel[DataFrame](s)(profileTableBlocks(s, dir).map {
         case (tn, b) => tn -> (() => b.localCheckpoint())
       }).map(_._2)
       profiled.reduce(_.union(_)).orderBy("table_name", "col_name")
@@ -223,7 +223,7 @@ object Profiling extends OpRegistry {
       // two driver-loop trainers) first so they overlap end to end.
       // Every build still happens INSIDE this op (attribution unchanged);
       // the receipt rows and their order are byte-identical.
-      val rows: Seq[(String, Long)] = inParallel(Seq(
+      val rows: Seq[(String, Long)] = inParallel(s)(Seq(
         "edges" -> (() => graft.llm.TextOps.candidatePairs(s, dir).count()),
         "components" -> (() => graft.llm.DedupOps.componentLabels(s, dir).count()),
         "bpe_vocab" -> (() => graft.llm.TextOps.bpeVocabArtifact(s, dir).count()),
@@ -282,7 +282,7 @@ object Profiling extends OpRegistry {
       // back-fill the refresh chains' idle cores. Values land in a
       // name-keyed map first because several feed two receipt fields;
       // the emitted rows are byte-identical to the sequential build.
-      val n = inParallel[Long](Seq(
+      val n = inParallel[Long](s)(Seq(
         "n_delta" -> (() => delta.count()),
         "n_new" -> (() => newPairs.count()),
         "labels_v1" -> (() => labelsV1.count()),
@@ -1015,7 +1015,15 @@ object Profiling extends OpRegistry {
     }
   }
 
-  private def inParallel[T](tasks: Seq[(String, () => T)]): Seq[(String, T)] = {
+  /** Runs `tasks` from a thread pool and returns their results in order.
+    * Every Spark job a task launches carries one job tag per call, added on
+    * the pool thread (a tag, not a job group: a group would replace the
+    * caller's, which the Spark UI and perfbench attribute jobs by). When a
+    * task throws, the call cancels the other tasks' Spark jobs by that tag
+    * and their Java futures, and rethrows the original cause once the pool
+    * has drained. */
+  private[graft] def inParallel[T](s: SparkSession)(
+      tasks: Seq[(String, () => T)]): Seq[(String, T)] = {
     // pool width parameterized (r20, VERDICT r19 #4 adjudication): local
     // default 4 (guide §2.6's 2-3-in-flight rule, one notch up for
     // local[32]); SPARK_GRAFT_INGEST_POOL=1 degrades to sequential for
@@ -1023,25 +1031,42 @@ object Profiling extends OpRegistry {
     // longer stage tails.
     val width = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_INGEST_POOL", "4").toInt)
+    val sc = s.sparkContext
+    val tag = "graft-parallel-" + java.util.UUID.randomUUID()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(width)
+    val done = new java.util.concurrent.ExecutorCompletionService[T](pool)
     try {
       val futs = tasks.map { case (name, f) =>
-        name -> pool.submit(new java.util.concurrent.Callable[T] {
-          override def call(): T = f()
+        name -> done.submit(new java.util.concurrent.Callable[T] {
+          override def call(): T = {
+            sc.addJobTag(tag)
+            try f() finally sc.removeJobTag(tag)
+          }
         })
       }
-      futs.map { case (name, fut) =>
-        name -> (try fut.get()
+      val names = futs.map(_.swap).toMap
+      // in completion order, so that a failure is seen as soon as it
+      // happens, not after every task submitted before it has finished
+      futs.foreach { _ =>
+        val fut = done.take()
+        try fut.get()
         catch {
           case e: java.util.concurrent.ExecutionException =>
-            // cancel everything still queued/running before rethrowing
+            // stop the siblings' Spark work as well as their threads
             // (ADVICE r19: shutdown() alone left up to 3 job chains running
             // in the background, skewing subsequent bench passes)
+            val reason = s"sibling task ${names(fut)} failed"
+            sc.cancelJobsWithTag(tag, reason)
             futs.foreach(_._2.cancel(true))
             pool.shutdownNow()
+            pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
+            // once no task runs, cancel again: one interrupted between the
+            // first cancel and its next job submit leaves that job running
+            sc.cancelJobsWithTag(tag, reason)
             throw e.getCause
-        })
+        }
       }
+      futs.map { case (name, fut) => name -> fut.get() }
     } finally pool.shutdown()
   }
 

@@ -74,14 +74,29 @@ object Streaming extends OpRegistry {
   private val StreamStatePartitions =
     sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "4")
 
-  /** Scope `spark.sql.shuffle.partitions` to a streaming query's lifetime:
-    * set before start (the value is captured into the query's checkpoint at
-    * planning), restore after termination so batch queries keep the
-    * session's CPU-sized setting. */
-  private def withStreamPartitions[T](s: SparkSession)(f: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", StreamStatePartitions)
-    try f finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  /** The session settings a streaming query runs under, scoped to its
+    * lifetime: set before start, the caller's values restored after
+    * termination.
+    *  - `spark.sql.shuffle.partitions` = [[StreamStatePartitions]]: captured
+    *    into the query's checkpoint at planning; batch queries keep the
+    *    session's CPU-sized setting.
+    *  - `spark.sql.artifact.isolation.enabled` = false: each streaming query
+    *    runs on a clone of the session, and with isolation on the clone gets
+    *    a class loader of its own. Spark's codegen cache is keyed by (class
+    *    loader, code), so every run of a query compiled its generated
+    *    classes anew (13 per run of stream_stateful_count) and pushed other
+    *    queries' classes out of the cache. The engine adds no session
+    *    artifacts, so the shared loader serves every query. */
+  private[graft] def withStreamQueryConf[T](s: SparkSession)(f: => T): T = {
+    val confs = Seq(
+      "spark.sql.shuffle.partitions" -> StreamStatePartitions,
+      "spark.sql.artifact.isolation.enabled" -> "false")
+    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try f finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
   }
 
   /** stream_threshold_alerts state transition, shared with StreamingSpec's
@@ -232,7 +247,7 @@ object Streaming extends OpRegistry {
                           mode: OutputMode): DataFrame = {
     val qn = name + "_" + java.util.UUID.randomUUID().toString.replace("-", "").take(8)
     val ckpt = scratchCkpt(qn)
-    withStreamPartitions(s) {
+    withStreamQueryConf(s) {
       try {
         val w = if (probeNoopSink) df.writeStream.format("noop")
                 else df.writeStream.format("memory").queryName(qn)
@@ -319,7 +334,7 @@ object Streaming extends OpRegistry {
       org.apache.spark.network.util.JavaUtils.deleteRecursively(new java.io.File(tmp))
     }
     val ckpt = scratchCkpt("sdb")
-    withStreamPartitions(s) {
+    withStreamQueryConf(s) {
       try {
         val raw = s.readStream.schema(batchKeys.schema)
           .option("maxFilesPerTrigger", "1")
@@ -729,7 +744,7 @@ object Streaming extends OpRegistry {
       org.apache.spark.network.util.JavaUtils.deleteRecursively(new java.io.File(tmp))
     }
     val ckpt = scratchCkpt("scc")
-    withStreamPartitions(s) {
+    withStreamQueryConf(s) {
       try {
         val raw = s.readStream.schema(batchDocs.schema)
           .option("maxFilesPerTrigger", "1")
@@ -976,7 +991,7 @@ object Streaming extends OpRegistry {
       val inDir = scratch + "/in"; val logDir = scratch + "/log"
       val ckpt = scratch + "/ckpt"
       try {
-        def runOnce(): Unit = withStreamPartitions(s) {
+        def runOnce(): Unit = withStreamQueryConf(s) {
           val src = s.readStream
             .schema("event_id LONG, event_type STRING, cents LONG")
             .parquet(inDir)
@@ -1184,7 +1199,7 @@ object Streaming extends OpRegistry {
         col("event_id").as("last_event_id"),
         floor(col("value") * 100 + lit(0.5)).cast("long").as("last_v100"))
       var version = -1
-      withStreamPartitions(s) {
+      withStreamQueryConf(s) {
         try {
           val q = changes.writeStream
             .outputMode(OutputMode.Append())
@@ -1224,7 +1239,7 @@ object Streaming extends OpRegistry {
       val agg = eventsStream(s, dir)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("cnt"), sum(dec(col("value"))).as("sum_value"))
-      withStreamPartitions(s) {
+      withStreamQueryConf(s) {
         try {
           val q = agg.writeStream
             .outputMode(OutputMode.Complete())
