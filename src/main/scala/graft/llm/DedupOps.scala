@@ -242,6 +242,89 @@ object DedupOps extends OpRegistry {
     (labels, rounds)
   }
 
+  /** The fixture's nightly split, shared by the incremental dedup and the
+    * streaming CC ops: doc_id % 10 = 7 is tonight's batch, every other doc
+    * is the landed base corpus. */
+  private[graft] def isBatch(c: Column): Column = pmod(c, lit(10L)) === 7
+
+  /** Lands the base state of an incremental label merge under `dir`:
+    * `dir/edges` holds the near-dup edges (`a` < `b`) of all of `docs`,
+    * `dir/labels/v0` the CC labels (`doc_id`, `label`) of the base docs
+    * (not [[isBatch]]) over the base-base edges. Three consumers read the
+    * edge list, so it is landed once instead of re-running the pair kernel
+    * per branch. Returns the edges read back. */
+  private[graft] def landBaseStore(docs: DataFrame, dir: String): DataFrame = {
+    val s = docs.sparkSession
+    TextOps.jaccardEdges(docs, pin = true)
+      .select(col("id1").as("a"), col("id2").as("b"))
+      .write.mode("overwrite").parquet(s"$dir/edges")
+    val edges = s.read.parquet(s"$dir/edges")
+    val baseNodes = docs.filter(!isBatch(col("doc_id")))
+      .select(col("doc_id").as("node"))
+    val baseEdges = edges.filter(!isBatch(col("a")) && !isBatch(col("b")))
+    connectedComponents(baseNodes, baseEdges)._1
+      .select(col("node").as("doc_id"), col("label"))
+      .write.mode("overwrite").parquet(s"$dir/labels/v0")
+    edges
+  }
+
+  /** Merges new edges into landed component labels without a rebuild.
+    * Each edge endpoint contracts to its landed label (sound: a labelled
+    * component is already connected through its label); self-loops drop
+    * and the rest canonicalise to distinct `a` < `b`; CC then runs on
+    * `nodes` ∪ the touched labels only. Min-label identity: every landed
+    * label is its component's minimum, so the merged group's minimum over
+    * {labels, new ids} is the minimum over all its members — the labels a
+    * full rebuild over the union would give.
+    *
+    * Pin rule, the same for every caller: the contracted edges and the
+    * sub-labels are pinned lazily (`localCheckpoint(false)`). Both are
+    * bounded by the new edges, and each is read more than once (the edges
+    * by the touched set and the CC, the sub-labels by the caller's output
+    * branches); the CC's first convergence check and the caller's first
+    * action materialize them, so neither pin costs a job of its own.
+    *
+    * @param labels landed labels, columns `doc_id`, `label`
+    * @param edges new edges, columns `a`, `b`; each endpoint is a labelled
+    *   doc or one of `nodes`
+    * @param nodes the new docs, single column `node`
+    * @return sub-labels (`node`, `label`) of `nodes` and of every touched
+    *   landed label; a touched label with `node` ≠ `label` is relabelled
+    */
+  private[graft] def mergeComponents(labels: DataFrame, edges: DataFrame,
+      nodes: DataFrame): DataFrame = {
+    val contracted = edges
+      .join(labels.select(col("doc_id").as("a"), col("label").as("la")),
+        Seq("a"), "left")
+      .join(labels.select(col("doc_id").as("b"), col("label").as("lb")),
+        Seq("b"), "left")
+      .select(coalesce(col("la"), col("a")).as("u"),
+        coalesce(col("lb"), col("b")).as("v"))
+      .filter(col("u") =!= col("v"))
+      .select(least(col("u"), col("v")).as("a"),
+        greatest(col("u"), col("v")).as("b")).distinct()
+      .localCheckpoint(false)
+    val touched = contracted.select(col("a").as("node"))
+      .union(contracted.select(col("b").as("node"))).distinct()
+    connectedComponents(nodes.union(touched).distinct(), contracted)._1
+      .localCheckpoint(false)
+  }
+
+  /** Full labels (`doc_id`, `component_id`) after a [[mergeComponents]]:
+    * the new nodes' sub-labels ∪ every landed row relabelled through the
+    * sub-labels (an untouched component passes through the left join). */
+  private[graft] def mergedLabels(labels: DataFrame, nodes: DataFrame,
+      sub: DataFrame): DataFrame = {
+    val nodeOut = nodes.join(sub, "node")
+      .select(col("node").as("doc_id"), col("label").as("component_id"))
+    val baseOut = labels
+      .join(sub.select(col("node").as("label"), col("label").as("relabel")),
+        Seq("label"), "left")
+      .select(col("doc_id"),
+        coalesce(col("relabel"), col("label")).as("component_id"))
+    nodeOut.unionByName(baseOut)
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dedup_near_minhash" -> ((s, dir) => {
       val sig = minhashSignature(shingles(tWide(s, dir)("documents")))
@@ -520,14 +603,14 @@ object DedupOps extends OpRegistry {
         .write.mode("overwrite").parquet(keysPath)
       val keys = s.read.parquet(keysPath)
       val storePath = s"/tmp/graft_band_store_${s.sparkContext.applicationId}"
-      keys.filter(pmod(col("doc_id"), lit(10L)) =!= 7)
+      keys.filter(!isBatch(col("doc_id")))
         .select("band", "bh").distinct()
         .write.mode("overwrite").parquet(storePath)
       val store = s.read.parquet(storePath)
-      val batchKeys = keys.filter(pmod(col("doc_id"), lit(10L)) === 7)
+      val batchKeys = keys.filter(isBatch(col("doc_id")))
       val rejected = batchKeys.join(store, Seq("band", "bh"), "left_semi")
         .select("doc_id").distinct()
-      val batchDocs = docs.filter(pmod(col("doc_id"), lit(10L)) === 7)
+      val batchDocs = docs.filter(isBatch(col("doc_id")))
         .select("doc_id")
       val admitted = batchDocs.join(rejected, Seq("doc_id"), "left_anti")
       val updated = store.unionByName(
@@ -541,90 +624,30 @@ object DedupOps extends OpRegistry {
     }),
 
     "dedup_components_incremental" -> ((s, dir) => {
-      // Incremental CC-LABEL maintenance (r16, VERDICT r15 #3) — one level
-      // deeper than dedup_incremental_bands: that op decides ADMIT for a
-      // nightly batch; this one merges the batch's near-dup edges into the
-      // LANDED component labels without a corpus-wide CC rebuild. Shape:
-      // base labels (doc_id % 10 != 7 — dedup_incremental's split) are the
-      // landed once-per-snapshot artifact (in production: last night's
-      // output); tonight's work is (1) map each batch-touching edge into
-      // label space — base endpoints CONTRACT to their component label,
-      // which is sound because a base component is by construction already
-      // connected through its label — then (2) run CC on the SMALL graph
-      // of batch docs + touched labels only, and (3) relabel just the
-      // touched rows. Cost scales with the batch's touched components,
-      // never the corpus; untouched components are a left-join passthrough.
-      // Min-label identity: base labels are component minima, so the
-      // merged group's min over {labels, batch ids} equals the min over
-      // all members — exactly what the oracle's full-rebuild recursive CTE
-      // over the unioned corpus computes. Edges are the df-capped exact
-      // trigram-Jaccard pairs (> 0.1) over the planted universe (batch
-      // docs with doc_id % 50 = 7 re-deliver their base neighbor's text —
-      // without planting no batch-base merge would ever fire); the edge
-      // list is landed once, because three branches (base CC, batch map,
-      // touched set) would otherwise re-run the pair kernel per branch.
-      // landed artifact, not a localCheckpoint pin (r20, VERDICT r19 #6 —
-      // and the r19 pin read +15% in the builder map, the round's prime
-      // revert suspect): the planted frame feeds the edge build plus the
-      // base/batch node filters — four plan branches read the parquet
+      // Incremental CC-label maintenance, one level deeper than
+      // dedup_incremental_bands: that op decides ADMIT for a nightly
+      // batch; this one merges the batch's near-dup edges into the landed
+      // base labels ([[isBatch]] split; in production last night's output)
+      // without a corpus-wide CC rebuild. [[mergeComponents]] runs CC on
+      // the batch docs + touched labels only, so cost scales with the
+      // batch's touched components, never the corpus; untouched components
+      // pass through a left join. The oracle's full-rebuild recursive CTE
+      // over the unioned corpus computes the same labels (min-label
+      // identity). Edges are the df-capped exact trigram-Jaccard pairs
+      // (> 0.1) over the planted universe: batch docs with doc_id % 50 = 7
+      // re-deliver their base neighbor's text, or no batch-base merge would
+      // ever fire. The planted frame is a landed artifact: the edge build
+      // and the base/batch node filters all read it.
       val docs = landedPlantedDocs(s, dir)
-      val isBatch = (n: Column) => pmod(n, lit(10L)) === 7
-      val edgePath = s"/tmp/graft_cc_inc_edges_${s.sparkContext.applicationId}"
-      TextOps.jaccardEdges(docs, pin = true)
-        .select(col("id1").as("a"), col("id2").as("b"))
-        .write.mode("overwrite").parquet(edgePath)
-      val edges = s.read.parquet(edgePath)
-      // landed base-label artifact (last night's output)
-      val baseNodes = docs.filter(!isBatch(col("doc_id")))
-        .select(col("doc_id").as("node"))
-      val baseEdges = edges.filter(!isBatch(col("a")) && !isBatch(col("b")))
-      val labPath = s"/tmp/graft_cc_inc_base_${s.sparkContext.applicationId}"
-      connectedComponents(baseNodes, baseEdges)._1
-        .select(col("node").as("doc_id"), col("label"))
-        .write.mode("overwrite").parquet(labPath)
-      val baseLab = s.read.parquet(labPath)
-      // batch-touching edges, endpoints contracted into label space
-      // be PINNED (r20, guide §5 bounded-state exemption): the contracted
-      // batch-edge frame is BATCH-bounded, yet it feeds the touched set
-      // (two selects + distinct) and the sub-CC input — the lazy form
-      // re-ran the edge filter + both label contraction joins per branch.
-      // LAZY batch-bounded pin (r20 session 3, the ccProcessWave rule):
-      // the sub-CC's first action materializes it; the touched set and
-      // both output branches then read the persisted frame — same
-      // re-derivation dedup as the eager pin, one fewer dedicated job.
-      val be = edges.filter(isBatch(col("a")) || isBatch(col("b")))
-        .join(baseLab.select(col("doc_id").as("a"), col("label").as("la")),
-          Seq("a"), "left")
-        .join(baseLab.select(col("doc_id").as("b"), col("label").as("lb")),
-          Seq("b"), "left")
-        .select(coalesce(col("la"), col("a")).as("u"),
-          coalesce(col("lb"), col("b")).as("v"))
-        .filter(col("u") =!= col("v"))
-        .select(least(col("u"), col("v")).as("a"),
-          greatest(col("u"), col("v")).as("b")).distinct()
-        .localCheckpoint(false)
+      val store = s"/tmp/graft_cc_inc_${s.sparkContext.applicationId}"
+      org.apache.spark.network.util.JavaUtils.deleteRecursively(new java.io.File(store))
+      val edges = landBaseStore(docs, store)
+      val baseLab = s.read.parquet(s"$store/labels/v0")
       val batchNodes = docs.filter(isBatch(col("doc_id")))
         .select(col("doc_id").as("node"))
-      val touched = be.select(col("a").as("node"))
-        .union(be.select(col("b").as("node"))).distinct()
-      // subLab PINNED (r20, bounded-state rule — the ccProcessWave
-      // adjudication): (batch + touched)-sized labels, referenced by BOTH
-      // output branches (batchOut, baseOut) inside one plan — the lazy
-      // frame re-derived the sub-CC nbrMin join chain per branch.
-      val (subLab0, _) = connectedComponents(
-        batchNodes.union(touched).distinct(), be)
-      // LAZY: the op's single output materialization computes it once;
-      // the two branches referencing it dedup per-partition via the
-      // block manager's write locks.
-      val subLab = subLab0.localCheckpoint(false)
-      val batchOut = batchNodes.join(subLab, "node")
-        .select(col("node").as("doc_id"), col("label").as("component_id"))
-      val baseOut = baseLab
-        .join(subLab.select(col("node").as("label"), col("label").as("relabel")),
-          Seq("label"), "left")
-        .select(col("doc_id"),
-          coalesce(col("relabel"), col("label")).as("component_id"))
-      batchOut.unionByName(baseOut)
+      val subLab = mergeComponents(baseLab,
+        edges.filter(isBatch(col("a")) || isBatch(col("b"))), batchNodes)
+      mergedLabels(baseLab, batchNodes, subLab)
         .select(col("doc_id"), col("component_id"),
           isBatch(col("doc_id")).as("is_batch"))
         .orderBy("doc_id")

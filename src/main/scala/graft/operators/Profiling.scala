@@ -252,9 +252,8 @@ object Profiling extends OpRegistry {
       // is the one thing an ingest pipeline must never do. Modes:
       // APPENDED — edges (delta-probe pair kernel over the union-df-capped
       // postings; existing pairs never recomputed — see [[ingestV1Refresh]]),
-      // components (contract-and-subCC label merge, the
-      // dedup_components_incremental machinery: cost ∝ delta's touched
-      // components), hybrid_universe (delta ⋈ embeddings join refresh —
+      // components ([[graft.llm.DedupOps.mergeComponents]]: cost ∝ the
+      // delta's touched components), hybrid_universe (delta ⋈ embeddings join refresh —
       // provably 0 rows here: the shifted ids match no vectors, and the
       // oracle certifies the zero instead of assuming it), nllscores
       // (FROZEN v0 scorer: the char-LM is deterministic in (lang, text)
@@ -267,8 +266,8 @@ object Profiling extends OpRegistry {
       // ([[ingestV1Refresh]]): 0 certifies append-exactness, so the
       // oracle's full-rebuild pair count over the union is the appended
       // store's count. Every receipt is DuckDB-replayed from the raw
-      // tables; Round19Spec proves appended edges/labels ≡ a full rebuild
-      // over the union corpus.
+      // tables; LabelMergeSpec proves appended edges/labels ≡ a full
+      // rebuild over the union corpus.
       import s.implicits._
       val (li, oo) = graft.CorpusArtifacts.orderkeyFacts(s, dir)
       val e0 = graft.llm.VectorOps.quantizedVectors(s, dir).localCheckpoint()
@@ -1024,13 +1023,8 @@ object Profiling extends OpRegistry {
     * has drained. */
   private[graft] def inParallel[T](s: SparkSession)(
       tasks: Seq[(String, () => T)]): Seq[(String, T)] = {
-    // pool width parameterized (r20, VERDICT r19 #4 adjudication): local
-    // default 4 (guide §2.6's 2-3-in-flight rule, one notch up for
-    // local[32]); SPARK_GRAFT_INGEST_POOL=1 degrades to sequential for
-    // A/B probes, larger values for a real cluster where chains park in
-    // longer stage tails.
-    val width = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_INGEST_POOL", "4").toInt)
+    // a few job chains in flight fill one chain's idle stage tails
+    val width = 4
     val sc = s.sparkContext
     val tag = "graft-parallel-" + java.util.UUID.randomUUID()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(width)
@@ -1081,8 +1075,8 @@ object Profiling extends OpRegistry {
     tWide(s, dir)("documents").filter(pmod(col("doc_id"), lit(25L)) === 7)
       .withColumn("doc_id", col("doc_id") + IngestDeltaOff)
 
-  /** The commit-touching half of the v1 refresh, exposed for Round19Spec's
-    * appended ≡ full-rebuild proof. Returns (edgesV1, labelsV1,
+  /** The commit-touching half of the v1 refresh, exposed for
+    * LabelMergeSpec's appended ≡ full-rebuild proof. Returns (edgesV1, labelsV1,
     * nCapCrossers, newPairs).
     *
     * EDGES — append-only exact maintenance of the candidate-pair store:
@@ -1098,11 +1092,10 @@ object Profiling extends OpRegistry {
     * (df_v1 = df_v0 + delta counts — the scan_stats_sidecar_append
     * idiom), where the whole refresh is delta-scaled.
     *
-    * LABELS — dedup_components_incremental's contract-and-subCC merge:
-    * new pairs contract base endpoints to their component label, CC runs
-    * on the delta docs + touched labels only, untouched components pass
-    * through a left join. Min-label identity holds because delta ids
-    * (≥ 1e9) can never undercut a base component's min. */
+    * LABELS — [[graft.llm.DedupOps.mergeComponents]] over the new pairs:
+    * CC runs on the delta docs + touched labels only, untouched
+    * components pass through a left join. Delta ids (≥ 1e9) can never
+    * undercut a base component's min. */
   private[graft] def ingestV1Refresh(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, Long, DataFrame) = {
     import graft.llm.{DedupOps, Shingling, TextOps}
@@ -1111,9 +1104,9 @@ object Profiling extends OpRegistry {
       .unionByName(delta.select("doc_id", "text"))
     val sh = uni.select(col("doc_id"),
       explode(Shingling.shingleArray(col("text"), hashed = true)(s)).as("sh_h"))
-    // LAZY pins (r20 session 3, the ccProcessWave rule): the nCross count
-    // materializes dfg, newPairs' pin materializes capped — each saves a
-    // dedicated materialization job while keeping the re-derivation dedup.
+    // lazy pins: the nCross count materializes dfg and newPairs' pin
+    // materializes capped, so neither needs a job of its own, and neither
+    // is re-derived by its later readers
     val dfg = sh.groupBy("sh_h").agg(count(lit(1)).as("df_all"),
         count(when(col("doc_id") < IngestDeltaOff, 1)).as("df_base"))
       .localCheckpoint(false)
@@ -1128,36 +1121,11 @@ object Profiling extends OpRegistry {
       .localCheckpoint()
     val edgesV1 = TextOps.candidatePairs(s, dir).unionByName(newPairs)
     val baseLab = DedupOps.componentLabels(s, dir)
-    val be = newPairs
-      .join(baseLab.select(col("doc_id").as("id1"),
-        col("component_id").as("la")), Seq("id1"), "left")
-      .join(baseLab.select(col("doc_id").as("id2"),
-        col("component_id").as("lb")), Seq("id2"), "left")
-      .select(coalesce(col("la"), col("id1")).as("u"),
-        coalesce(col("lb"), col("id2")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("a"),
-        greatest(col("u"), col("v")).as("b")).distinct()
-      // be/subLab pinned LAZY (r20 session 3): delta-bounded frames whose
-      // first consumer action materializes them; later references (touched
-      // set ×2, the deltaOut/baseOut branches) read the persisted blocks —
-      // the eager pins' re-derivation dedup without their dedicated jobs.
-      .localCheckpoint(false)
+      .select(col("doc_id"), col("component_id").as("label"))
     val deltaNodes = delta.select(col("doc_id").as("node"))
-    val touched = be.select(col("a").as("node"))
-      .union(be.select(col("b").as("node"))).distinct()
-    val (subLab0, _) = DedupOps.connectedComponents(
-      deltaNodes.union(touched).distinct(), be)
-    val subLab = subLab0.localCheckpoint(false)
-    val deltaOut = deltaNodes.join(subLab, "node")
-      .select(col("node").as("doc_id"), col("label").as("component_id"))
-    val baseOut = baseLab.join(
-        subLab.select(col("node").as("component_id"),
-          col("label").as("relabel")),
-        Seq("component_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("relabel"), col("component_id")).as("component_id"))
-    (edgesV1, baseOut.unionByName(deltaOut), nCross, newPairs)
+    val subLab = DedupOps.mergeComponents(baseLab,
+      newPairs.select(col("id1").as("a"), col("id2").as("b")), deltaNodes)
+    (edgesV1, DedupOps.mergedLabels(baseLab, deltaNodes, subLab), nCross, newPairs)
   }
 
   /** Undirected co-trade edge list (a<b, distinct): the (a,b) projection

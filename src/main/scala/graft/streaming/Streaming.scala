@@ -288,15 +288,12 @@ object Streaming extends OpRegistry {
     * carry strictly increasing mtimes), which is what lets a batch oracle
     * replay all three admission rounds as unrolled CTEs. */
   private[graft] def streamBandAdmission(s: SparkSession,
-      docsIn: DataFrame): DataFrame = {
+      docs: DataFrame): DataFrame = {
     import graft.llm.DedupOps
-    // docsIn is consumed by the key build AND the per-wave staging filters;
-    // the registry query passes it in as a LANDED parquet artifact (r20,
-    // VERDICT r19 #6 — the r19 localCheckpoint pin held the full planted
-    // universe in non-reliable executor memory), so each branch is a scan,
-    // not a re-run of the planting joins. Test callers pass tiny hand
-    // frames, where re-execution is free.
-    val docs = docsIn
+    // docs feeds the key build and the per-wave staging filters; the
+    // registry query passes a landed parquet artifact, so each branch is a
+    // scan, not a re-run of the planting joins. Test callers pass tiny
+    // hand frames, where re-execution is free.
     val base = s"/tmp/graft_sdb_${s.sparkContext.applicationId}"
     org.apache.spark.network.util.JavaUtils.deleteRecursively(new java.io.File(base))
     // land the per-doc band keys ONCE (the dedup_incremental_bands
@@ -306,13 +303,13 @@ object Streaming extends OpRegistry {
     DedupOps.portableBands(DedupOps.portableSignature(docs))
       .write.mode("overwrite").parquet(s"$base/keys")
     val keys = s.read.parquet(s"$base/keys")
-    keys.filter(pmod(col("doc_id"), lit(10L)) =!= 7)
+    keys.filter(!DedupOps.isBatch(col("doc_id")))
       .select("band", "bh").distinct()
       .write.mode("overwrite").parquet(s"$base/store/v0")
     // stage tonight's batch as 3 wave files. LEFT join keeps shingle-less
     // docs (null band): they can never match the store, so they admit —
     // the same containment the batch twin gets from its doc-frame anti-join.
-    val batchKeys = docs.filter(pmod(col("doc_id"), lit(10L)) === 7)
+    val batchKeys = docs.filter(DedupOps.isBatch(col("doc_id")))
       .select("doc_id")
       .join(keys, Seq("doc_id"), "left")
     val staged = new java.io.File(s"$base/staged")
@@ -422,62 +419,10 @@ object Streaming extends OpRegistry {
     s.read.parquet(receipts: _*).orderBy("wave")
   }
 
-  /** stream_cc_maintain kernel (r17, VERDICT r16 #3): continuous CC-LABEL
-    * maintenance — stream_dedup_bands' wave-ingestion protocol composed
-    * with dedup_components_incremental's label merge inside foreachBatch,
-    * closing the production dedup loop: admission decides what lands,
-    * THIS keeps the component labels current as it lands. Setup lands two
-    * once-per-corpus artifacts (production: both are last night's
-    * output): the near-dup edge list and the base CC labels (v0). The
-    * batch then replays as three mtime-ordered wave files; each
-    * micro-batch bid (1) reads labels v(bid), (2) takes the edges whose
-    * LATEST endpoint arrives this wave (edge wave = max over endpoints of
-    * arrival; base = −1, batch doc = doc_id % 3 — so every edge is
-    * processed exactly once, when it first has both endpoints), (3)
-    * CONTRACTS endpoints to their current label (sound: a labeled
-    * component is already connected through its label) and runs CC on the
-    * small contracted graph only, (4) lands ONLY THE DELTA (r18, VERDICT
-    * r17 #1): the wave docs' new labels plus the (old_label → new_label)
-    * relabel pairs — both component-/wave-bounded, so per-wave WRITE
-    * bytes track touched labels, never the corpus — and (5) writes a
-    * receipt row. The current labels are SERVED merge-on-read
-    * ([[ccServedLabels]]): base v0 folded through each wave's relabel
-    * map (a broadcast-joined chain — every delta is small by
-    * construction) plus the wave rows, the scan_snapshot_changes
-    * base+delta manifest idiom applied to a label store — re-rooted at
-    * the newest K-amortized CHECKPOINT snapshot (r19, VERDICT r18 #1:
-    * [[CcCheckpointEveryWaves]]), so the fold chain is ≤ K−1 deep at any
-    * wave count. Deltas are
-    * batchId-keyed (read served(b−1), overwrite delta/b) so a
-    * micro-batch retry is idempotent. Per-wave COMPUTE (edge contraction
-    * + the sub-CC) scales with the wave's docs + touched components;
-    * the receipt's component count and relabel count are READS over the
-    * served view (merge-on-read is the read path's honest cost — reads
-    * never rewrite the store).
-    *
-    * Label ground truth: by induction, labels after wave w equal the
-    * min-id CC labels of the subgraph induced by everything arrived
-    * through wave w — which is exactly what the oracle's four unrolled
-    * recursive reach CTEs compute, so every receipt field (including the
-    * relabel count and the delta row count, the fields only an
-    * incremental implementation can get wrong) is DuckDB-replayed per
-    * wave. */
-  /** Merge-on-read label serving for [[streamCcMaintain]] (r18, VERDICT
-    * r17 #1; checkpointed r19, VERDICT r18 #1): current labels after wave
-    * `through` = the NEWEST landed base snapshot ≤ `through` ∪ each
-    * suffix wave's landed wave rows, folded through each suffix wave's
-    * landed (old_label → new_label) relabel map in wave order. Every
-    * per-wave delta is component-/wave-bounded, so each fold step is a
-    * BROADCAST join; with the [[CcCheckpointEveryWaves]] cadence the read
-    * path costs one base-store scan + at most K−1 suffix folds — bounded
-    * regardless of total wave count (the r18 chain folded EVERY wave:
-    * ~1,440 steps/day at minute batches). `through = -1` is v0 itself. */
-  /** Wave w's landed delta — ONE commit file per wave (r20 session 3, §2.4:
-    * the wave/relabel pair were two separate write actions per wave whose
-    * fixed job cost dominated their KB-sized payloads; the combined file
-    * is also the saner production commit shape — one atomic delta object
-    * per micro-batch). Row kinds: kind=0 wave rows (doc_id, label);
-    * kind=1 relabel pairs (old_label, new_label). */
+  /** Wave w's landed delta — one commit file per wave, so a micro-batch
+    * commits one atomic delta object in one write job. Row kinds: kind=0
+    * wave rows (doc_id, label); kind=1 relabel pairs (old_label,
+    * new_label). */
   private[graft] def ccDeltaWave(s: SparkSession, base: String, w: Long): DataFrame =
     s.read.parquet(s"$base/labels/delta/b$w")
       .filter(col("kind") === 0).select(col("doc_id"), col("label"))
@@ -498,14 +443,14 @@ object Streaming extends OpRegistry {
         coalesce(col("new_label"), col("label")).as("label"))
   }
 
-  /** Checkpoint cadence for the CC label store (r19, VERDICT r18 #1):
-    * every K waves the folded served snapshot lands as labels/v(w+1) and
-    * the serve path re-roots there — the commit-log checkpointing that
-    * makes merge-on-read stores viable (Delta's _last_checkpoint
-    * contract). Checkpoint writes are K-amortized (one snapshot per K
-    * waves), never per-wave; deltas stay the only per-wave writes. K = 2
-    * makes the 3-wave fixture CROSS a checkpoint in the shipping op:
-    * v2 lands after wave 1, wave 2 serves from v2 + delta b2. */
+  /** Checkpoint cadence for the CC label store: every K waves the folded
+    * served snapshot lands as labels/v(w+1) and the serve path re-roots
+    * there — the commit-log checkpointing that makes merge-on-read
+    * stores viable (Delta's _last_checkpoint contract). Checkpoint writes
+    * are K-amortized (one snapshot per K waves), never per-wave; deltas
+    * stay the only per-wave writes. K = 2 makes the 3-wave fixture CROSS
+    * a checkpoint in the shipping op: v2 lands after wave 1, wave 2
+    * serves from v2 + delta b2. */
   private[graft] val CcCheckpointEveryWaves = 2L
 
   /** Newest landed snapshot usable for labels-through-`through`: max N
@@ -528,16 +473,27 @@ object Streaming extends OpRegistry {
     lab
   }
 
+  /** Merge-on-read label serving for [[streamCcMaintain]]: current labels
+    * after wave `through` = the NEWEST landed base snapshot ≤ `through` ∪
+    * each suffix wave's landed wave rows, folded through each suffix
+    * wave's landed (old_label → new_label) relabel map in wave order.
+    * Every per-wave delta is component-/wave-bounded, so each fold step is
+    * a BROADCAST join; with the [[CcCheckpointEveryWaves]] cadence the read
+    * path costs one base-store scan + at most K−1 suffix folds — bounded
+    * regardless of total wave count. `through = -1` is v0 itself. */
   private[graft] def ccServedLabels(s: SparkSession, base: String,
       through: Long): DataFrame =
     ccServedLabelsFrom(s, base, ccNewestBase(base, through), through)
 
   /** Wave membership for [[streamCcMaintain]]'s fixture protocol: batch
-    * docs (doc_id % 10 = 7 — dedup_incremental's split) arrive in wave
-    * doc_id % 3; base docs "arrived" before wave 0. */
-  private def ccIsBatch(c: Column): Column = pmod(c, lit(10L)) === 7
+    * docs ([[graft.llm.DedupOps.isBatch]]) arrive in wave doc_id % 3;
+    * base docs "arrived" before wave 0. */
   private def ccWaveOf(c: Column): Column =
-    when(!ccIsBatch(c), lit(-1L)).otherwise(pmod(c, lit(3L)))
+    when(!graft.llm.DedupOps.isBatch(c), lit(-1L)).otherwise(pmod(c, lit(3L)))
+
+  /** The label store [[streamCcMaintain]] lands for the application of `s`. */
+  private[graft] def ccStoreDir(s: SparkSession): String =
+    s"/tmp/graft_scc_${s.sparkContext.applicationId}"
 
   /** Runs `f` under the Spark job description `wave <batchId>: <label>`,
     * so listeners and the event log attribute each [[ccProcessWave]] job
@@ -550,84 +506,37 @@ object Streaming extends OpRegistry {
   }
 
   /** One micro-batch of CC label maintenance — the foreachBatch body,
-    * factored out so Round19Spec can re-invoke it on the SAME batchId and
-    * pin micro-batch retry idempotence (VERDICT r18 #5): every write in
-    * here lands at a batchId-keyed path in overwrite mode (delta/b$id,
-    * log/b$id) or a content-deterministic checkpoint (labels/vN), so a
-    * retried wave reproduces byte-identical store state. */
+    * factored out so LabelMergeSpec can re-invoke it on the SAME batchId
+    * and pin micro-batch retry idempotence: every write in here lands at a
+    * batchId-keyed path in overwrite mode (delta/b$id, log/b$id) or a
+    * content-deterministic checkpoint (labels/vN), so a retried wave
+    * reproduces byte-identical store state. */
   private[graft] def ccProcessWave(s: SparkSession, base: String,
       edges: DataFrame, batch: DataFrame, batchId: Long): Unit = {
-    import graft.llm.DedupOps
-    // the batch's serving SNAPSHOT, materialized once per wave
-    // (localCheckpoint): the contraction joins reference it three
-    // times and the lazy fold would re-execute the whole delta
-    // chain per reference — a production store materializes the
-    // read snapshot per commit exactly like this
-    // LAZY pin (r20 session 3): the strictly-next action — ce0's eager
-    // checkpoint — computes the serve chain once and the persist makes
-    // every later reference (receipt join, checkpoint fold) a cache read;
-    // an eager pin here was a dedicated job for the same materialization.
+    // the batch's serving snapshot, pinned lazily: the contraction joins
+    // and the receipt read it, and an unpinned frame would re-execute the
+    // whole delta chain per reference; the merge's first action computes it
     val store = ccPhase(s, batchId, "store pin")(
       ccServedLabels(s, base, batchId - 1).localCheckpoint(false))
     val waveDocs = batch.select("doc_id").distinct()
     // edges first complete in THIS wave
     val newEdges = edges.filter(
       greatest(ccWaveOf(col("a")), ccWaveOf(col("b"))) === batchId)
-    // contract endpoints into current label space, remembering
-    // which endpoints WERE store labels — those are the only
-    // candidates for relabel pairs
-    // ce0 PINNED (r20, guide §5 bounded-state exemption): the contracted
-    // endpoint frame is WAVE-bounded (rows = this wave's new edges), yet
-    // four downstream branches (touchedLabels, ce, and through them the
-    // sub-CC nodes and relabel) re-ran the edge filter + both store
-    // contraction joins per reference — measured ~1 s of the ~4.5 s wave.
-    // ce0 stays EAGER (r20 session 3 A/B: the lazy form read slower —
-    // 15.2/15.1 -> 16.8/19.3 s warm FULL runs — the dedicated pin job's
-    // broadcast-parallel store materialization beats folding it into the
-    // sub-CC's first potential action).
-    val ce0 = ccPhase(s, batchId, "ce0 pin")(newEdges
-      .join(store.select(col("doc_id").as("a"), col("label").as("la")),
-        Seq("a"), "left")
-      .join(store.select(col("doc_id").as("b"), col("label").as("lb")),
-        Seq("b"), "left")
-      .localCheckpoint())
-    val touchedLabels = ce0.select(col("la").as("node"))
-      .unionByName(ce0.select(col("lb").as("node")))
-      .filter(col("node").isNotNull).distinct()
-    val ce = ce0
-      .select(coalesce(col("la"), col("a")).as("u"),
-        coalesce(col("lb"), col("b")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("a"),
-        greatest(col("u"), col("v")).as("b")).distinct()
-    val touched = ce.select(col("a").as("node"))
-      .union(ce.select(col("b").as("node"))).distinct()
-    // subLab PINNED (r20, same bounded-state rule): the sub-CC labels are
-    // (wave docs + touched labels)-sized, and the LAZY frame re-derived
-    // the final nbrMin join chain once per consumer — both delta writes
-    // and the relabel build each re-ran it (measured: each tiny delta
-    // write cost ~0.7–2 s, dominated by that re-derivation, not the I/O).
-    val subLab = ccPhase(s, batchId, "sub-CC + pin") {
-      val (subLab0, _) = DedupOps.connectedComponents(
-        waveDocs.select(col("doc_id").as("node")).union(touched).distinct(),
-        ce)
-      // LAZY (r20 session 3): the wave-delta write — the strictly-next
-      // action — materializes it; the relabel write and receipt then read
-      // the persisted frame. Sequential consumers, so no concurrent
-      // first-compute; one dedicated pin job saved per wave.
-      subLab0.localCheckpoint(false)
-    }
+    val subLab = ccPhase(s, batchId, "contract + sub-CC")(
+      graft.llm.DedupOps.mergeComponents(store, newEdges,
+        waveDocs.select(col("doc_id").as("node"))))
     val waveOut = waveDocs.join(subLab, col("doc_id") === col("node"))
       .select(col("doc_id"), col("label"))
-    val relabel = subLab.join(touchedLabels, Seq("node"))
+    // store labels are minima of docs that arrived earlier, so none is a
+    // wave doc id, and every other endpoint of a new edge is a wave doc:
+    // the sub-labels outside the wave are exactly the touched store labels
+    val relabel = subLab.join(waveDocs, col("node") === col("doc_id"), "left_anti")
       .filter(col("node") =!= col("label"))
       .select(col("node").as("old_label"), col("label").as("new_label"))
-    // DELTA land — the ONLY per-wave store write, wave-/component-bounded
-    // (VERDICT r17 #1), as ONE commit file carrying both row kinds (r20
-    // session 3: the wave/relabel pair were two actions per wave whose
-    // fixed job cost dominated their KB payloads; one atomic delta object
-    // per micro-batch is also the production commit shape). repartition(1)
-    // pins one part file so an EMPTY delta still lands a readable schema.
+    // DELTA land — the only per-wave store write, wave-/component-bounded,
+    // as one commit file carrying both row kinds (one atomic delta object
+    // per micro-batch, one write job). repartition(1) pins one part file
+    // so an EMPTY delta still lands a readable schema.
     ccPhase(s, batchId, "delta write")(
       waveOut.select(lit(0).as("kind"), col("doc_id"), col("label"),
           lit(null).cast("long").as("old_label"),
@@ -640,10 +549,9 @@ object Streaming extends OpRegistry {
         .parquet(s"$base/labels/delta/b$batchId"))
     val landedRelabel = ccDeltaRelabel(s, base, batchId)
     val landedWave = ccDeltaWave(s, base, batchId)
-    // n_components is maintained INCREMENTALLY (r20, VERDICT r19 #3): the
-    // r19 receipt folded the FULL base store through the wave's delta and
-    // countDistinct'd it — a base-sized shuffle aggregate EVERY wave. The
-    // count obeys an exact recurrence over the landed delta instead:
+    // n_components is maintained INCREMENTALLY, never by a base-sized
+    // countDistinct per wave: it obeys an exact recurrence over the landed
+    // delta:
     //   components(w) = components(w−1)
     //     + |landed wave rows with doc_id = label|   (a wave doc that is
     //        its own component min heads a label NEW to the store — store
@@ -654,9 +562,9 @@ object Streaming extends OpRegistry {
     //        row per distinct old label by construction)
     // components(−1) falls back to a countDistinct over the pinned v0
     // snapshot (wave 0 only); every later wave reads the previous wave's
-    // landed receipt — both deterministic, so retry idempotence holds
-    // (Round19Spec). The per-wave fold itself now runs ONLY on checkpoint
-    // waves, where the labels/vN write is its single consumer.
+    // landed receipt — both deterministic, so retry idempotence holds.
+    // The per-wave fold runs only on checkpoint waves, where the
+    // labels/vN write is its single consumer.
     val prevComponents =
       if (batchId == 0L) store.agg(countDistinct(col("label")).as("prev_nc"))
       else s.read.parquet(s"$base/log/b${batchId - 1L}")
@@ -684,51 +592,63 @@ object Streaming extends OpRegistry {
           .crossJoin(landedRelabel.agg(count(lit(1)).as("nr")))
           .select((col("nw") + col("nr")).as("n_delta_rows")))
         .write.mode("overwrite").parquet(s"$base/log/b$batchId"))
-    // CHECKPOINT (r19, VERDICT r18 #1): every K waves, land the folded
-    // served snapshot as labels/v(batchId+1) and let ccServedLabels
-    // re-root there — serve cost stops growing with wave count. This is
-    // the only non-delta store write, one per K waves (K-amortized);
-    // content-deterministic, so a micro-batch retry overwrites it with
-    // identical content. Since r20 the fold is built HERE, on checkpoint
-    // waves only — non-checkpoint waves never pay a base-sized pass beyond
-    // the store snapshot itself.
+    // CHECKPOINT: every K waves, land the folded served snapshot as
+    // labels/v(batchId+1) and let ccServedLabels re-root there, so serve
+    // cost stops growing with wave count. This is the only non-delta store
+    // write, one per K waves; content-deterministic, so a micro-batch
+    // retry overwrites it with identical content. Non-checkpoint waves
+    // never pay a base-sized pass beyond the store snapshot itself.
     if ((batchId + 1L) % CcCheckpointEveryWaves == 0L)
       ccPhase(s, batchId, "checkpoint fold write")(
         ccFoldDelta(s, store, base, batchId)
           .write.mode("overwrite").parquet(s"$base/labels/v${batchId + 1L}"))
   }
 
+  /** stream_cc_maintain kernel: continuous CC-label maintenance —
+    * stream_dedup_bands' wave-ingestion protocol composed with
+    * [[graft.llm.DedupOps.mergeComponents]] inside foreachBatch, closing
+    * the production dedup loop: admission decides what lands, THIS keeps
+    * the component labels current as it lands. Setup lands two
+    * once-per-corpus stores ([[graft.llm.DedupOps.landBaseStore]];
+    * production: both are last night's output): the near-dup edge list
+    * and the base CC labels (v0). The batch then replays as three
+    * mtime-ordered wave files; each micro-batch bid (1) reads labels
+    * v(bid), (2) takes the edges whose LATEST endpoint arrives this wave
+    * (edge wave = max over endpoints of arrival; base = −1, batch doc =
+    * doc_id % 3 — so every edge is processed exactly once, when it first
+    * has both endpoints), (3) merges them into the current labels, running
+    * CC on the small contracted graph only, (4) lands ONLY THE DELTA: the
+    * wave docs' new labels plus the (old_label → new_label) relabel pairs
+    * — both component-/wave-bounded, so per-wave WRITE bytes track touched
+    * labels, never the corpus — and (5) writes a receipt row. The current
+    * labels are SERVED merge-on-read ([[ccServedLabels]]). Deltas are
+    * batchId-keyed (read served(b−1), overwrite delta/b) so a micro-batch
+    * retry is idempotent. Per-wave COMPUTE scales with the wave's docs +
+    * touched components; the receipt's component count and relabel count
+    * are READS over the served view (reads never rewrite the store).
+    *
+    * Label ground truth: by induction, labels after wave w equal the
+    * min-id CC labels of the subgraph induced by everything arrived
+    * through wave w — which is exactly what the oracle's four unrolled
+    * recursive reach CTEs compute, so every receipt field (including the
+    * relabel count and the delta row count, the fields only an
+    * incremental implementation can get wrong) is DuckDB-replayed per
+    * wave. */
   private[graft] def streamCcMaintain(s: SparkSession,
-      docsIn: DataFrame): DataFrame = {
+      docs: DataFrame): DataFrame = {
     import graft.llm.DedupOps
-    // docsIn is consumed by the edge build, the base-label build, and the
-    // wave staging filters; the registry query passes a LANDED parquet
-    // artifact (r20, VERDICT r19 #6 — was a localCheckpoint pin of the
-    // full planted universe in executor memory). Test callers pass tiny
-    // hand frames.
-    val docs = docsIn
-    val base = s"/tmp/graft_scc_${s.sparkContext.applicationId}"
+    // docs feeds the edge build, the base-label build and the wave staging
+    // filters; the registry query passes a landed parquet artifact, so each
+    // branch is a scan. Test callers pass tiny hand frames.
+    val base = ccStoreDir(s)
     org.apache.spark.network.util.JavaUtils.deleteRecursively(new java.io.File(base))
-    val isBatch = (c: Column) => ccIsBatch(c)
-    // landed edge artifact (the dedup_components_incremental rationale:
-    // production stores signatures/edges at ingest; three per-wave
-    // consumers would otherwise re-run the pair kernel)
-    graft.llm.TextOps.jaccardEdges(docs, pin = true)
-      .select(col("id1").as("a"), col("id2").as("b"))
-      .write.mode("overwrite").parquet(s"$base/edges")
-    val edges = s.read.parquet(s"$base/edges")
-    // landed base-label artifact (last night's output)
-    val baseNodes = docs.filter(!isBatch(col("doc_id")))
-      .select(col("doc_id").as("node"))
-    val baseEdges = edges.filter(!isBatch(col("a")) && !isBatch(col("b")))
-    DedupOps.connectedComponents(baseNodes, baseEdges)._1
-      .select(col("node").as("doc_id"), col("label"))
-      .write.mode("overwrite").parquet(s"$base/labels/v0")
+    // edges and base labels v0 (last night's output)
+    val edges = DedupOps.landBaseStore(docs, base)
     // stage tonight's batch as 3 mtime-ordered wave files (the
     // stream_dedup_bands protocol: wave w IS micro-batch w)
     val staged = new java.io.File(s"$base/staged")
     staged.mkdirs()
-    val batchDocs = docs.filter(isBatch(col("doc_id"))).select("doc_id")
+    val batchDocs = docs.filter(DedupOps.isBatch(col("doc_id"))).select("doc_id")
     val t0 = System.currentTimeMillis() - 600000L
     for (w <- 0 until 3) {
       val tmp = s"$base/_w$w"
@@ -784,8 +704,7 @@ object Streaming extends OpRegistry {
     }),
 
     "stream_cc_maintain" -> ((s, dir) => {
-      // Streaming CC-label maintenance (r17, VERDICT r16 #3): the last
-      // piece of the continuous production dedup loop —
+      // Streaming CC-label maintenance: the last piece of the continuous production dedup loop —
       // stream_dedup_bands admits, THIS keeps the component labels
       // current per micro-batch against the landed label artifact (see
       // [[streamCcMaintain]]). Same stream-planted universe, so
@@ -796,7 +715,6 @@ object Streaming extends OpRegistry {
       // including the per-wave relabel count, the one only an incremental
       // implementation can get wrong — is ground-truth-checked.
       // same landed planted-stream-docs artifact as stream_dedup_bands
-      // (r20, VERDICT r19 #6)
       val docs = graft.CorpusArtifacts.parquet(s, "planted_stream_docs", dir)(
         graft.llm.DedupOps.plantedStreamDocs(
           tWide(s, dir)("documents").select("doc_id", "text")))

@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Round-16 batch B: the three VERDICT-r15 pipeline ops — iterative BPE
-  * merge training, incremental CC-label maintenance, and the compaction
-  * planner — each on a planted corpus small enough to verify by hand.
+/** Round-16 batch B: iterative BPE merge training and the compaction
+  * planner, each on a planted corpus small enough to verify by hand
+  * (incremental CC-label maintenance lives in LabelMergeSpec).
   */
 class Round16bSpec extends GraftSuite {
   import spark.implicits._
@@ -90,55 +90,6 @@ class Round16bSpec extends GraftSuite {
       "fused kernel missing from the portableSignature plan")
     assert(!plan.contains("array_join"),
       "declarative shingle chain leaked back into the portable path")
-  }
-
-  /** 20 docs, all ≥5 tokens pairwise distinct, except: docs 4 and 5 share
-    * their full text (a natural BASE-BASE pair → base component {4,5});
-    * doc 17 (batch, unplanted) carries doc 6's text too, and doc 7 (batch,
-    * planted — % 50 = 7) picks up doc 6's text via plantedDocs → the
-    * merged component {6, 7, 17} exercises base-batch AND batch-batch
-    * merging THROUGH the contracted label. */
-  private lazy val ccDir: String = {
-    val dir = TestSpark.tempDir("graft_r16_cc_")
-    (0L until 20L).map { i =>
-      val t =
-        if (i == 5) "alpha4 beta4 gamma4 delta4 epsilon4 zeta4 eta4"
-        else if (i == 17) "alpha6 beta6 gamma6 delta6 epsilon6 zeta6 eta6"
-        else s"alpha$i beta$i gamma$i delta$i epsilon$i zeta$i eta$i"
-      (i, t)
-    }.toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    dir
-  }
-
-  test("dedup_components_incremental merges batch docs into landed base labels") {
-    val out = SparkEntry.queries("dedup_components_incremental")(spark, ccDir)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
-    assert(out.size === 20)
-    assert(out(4) === ((4L, false)) && out(5) === ((4L, false)),
-      "natural base-base pair must keep its base label")
-    assert(out(6) === ((6L, false)), "base anchor of the merged component")
-    assert(out(7) === ((6L, true)), "planted batch doc joins doc 6's component")
-    assert(out(17) === ((6L, true)),
-      "batch-batch merge must route through the contracted base label")
-    // everything else is a singleton labeled by itself
-    (0L until 20L).filterNot(Set(4L, 5L, 6L, 7L, 17L)).foreach(i =>
-      assert(out(i)._1 === i, s"doc $i must stay a singleton"))
-  }
-
-  test("dedup_components_incremental equals a full CC rebuild over the planted union") {
-    val docs = llm.DedupOps.plantedDocs(
-      spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text"))
-    val edges = llm.TextOps.jaccardEdges(docs, pin = true)
-      .select(col("id1").as("a"), col("id2").as("b"))
-    val nodes = docs.select(col("doc_id").as("node"))
-    val (full, _) = llm.DedupOps.connectedComponents(nodes, edges)
-    val expected = full.select(col("node").as("doc_id"),
-      col("label").as("component_id"))
-    val got = SparkEntry.queries("dedup_components_incremental")(spark, sfDir)
-      .select("doc_id", "component_id")
-    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
-      "incremental labels diverged from the full rebuild")
   }
 
   test("maintenance_compaction_plan bins are contiguous, complete and bounded") {

@@ -143,88 +143,6 @@ class Round17Spec extends GraftSuite {
     }
   }
 
-  test("stream_cc_maintain: hand corpus replays known per-wave merges and relabels") {
-    // base comps: {10,11} label 10, {20} label 20.
-    // wave 0 (27, 57, 87): 27 joins 20's comp (min stays 20 — no relabel);
-    //   57/87 merge batch-internally to 57.
-    // wave 1 (7): 7 < 10 merges into {10,11} — the BASE ROWS RELABEL to 7.
-    // wave 2 (17): 17 < 57 merges into {57,87} — both relabel to 17.
-    val docs = Seq(
-      (10L, "aa bb cc dd ee"), (11L, "aa bb cc dd ee"),
-      (20L, "ff gg hh ii jj"),
-      (27L, "ff gg hh ii jj"), (57L, "kk ll mm nn oo"),
-      (87L, "kk ll mm nn oo"),
-      (7L, "aa bb cc dd ee"),
-      (17L, "kk ll mm nn oo")).toDF("doc_id", "text")
-    val got = streaming.Streaming.streamCcMaintain(spark, docs).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5)))
-    // n_delta_rows (r18): wave rows + relabel pairs — waves 1/2 each land
-    // 1 new doc + 1 relabel pair (10→7, 57→17); wave 0 merges nothing
-    assert(got.toSeq === Seq(
-      (0L, 3L, 2L, 0L, 3L, 3L),
-      (1L, 1L, 2L, 2L, 3L, 2L),
-      (2L, 1L, 2L, 2L, 3L, 2L)))
-    // the SERVED labels (base + delta chain, r18 merge-on-read) are the
-    // full-graph ground truth
-    val base = s"/tmp/graft_scc_${spark.sparkContext.applicationId}"
-    val labels = streaming.Streaming.ccServedLabels(spark, base, 2L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels === Map(10L -> 7L, 11L -> 7L, 7L -> 7L,
-      20L -> 20L, 27L -> 20L, 57L -> 17L, 87L -> 17L, 17L -> 17L))
-    // r18 write-path contract, amended r19 (VERDICT r18 #1): the store is
-    // never rewritten PER WAVE — only v0, the per-wave deltas, and the
-    // K-amortized checkpoint exist. With K = 2 over 3 waves exactly ONE
-    // checkpoint lands: v2 (after wave 1); v1/v3 must not exist.
-    assert(new java.io.File(s"$base/labels/v2").exists(),
-      "K=2 checkpoint labels/v2 missing — delta chain never re-roots")
-    for (v <- Seq(1, 3))
-      assert(!new java.io.File(s"$base/labels/v$v").exists(),
-        s"labels/v$v exists — per-wave store rewrite regressed")
-  }
-
-  test("stream_cc_maintain property: incremental == full rebuild on seeded random corpora") {
-    for (seed <- 1 to 3) {
-      val rnd = new scala.util.Random(100 + seed)
-      // pool-based texts => natural near-dup clusters spanning base and
-      // all three waves; one-word mutations keep jaccard > 0.1 edges
-      val pool = Vector(
-        "aa bb cc dd ee ff", "gg hh ii jj kk ll", "mm nn oo pp qq rr",
-        "ss tt uu vv ww xx", "yy zz a1 b2 c3 d4", "e5 f6 g7 h8 i9 j0")
-      val docs = (0L until 60L).map { id =>
-        val t = pool(rnd.nextInt(pool.size))
-        (id, if (rnd.nextBoolean()) t else t + " mut" + rnd.nextInt(3))
-      }.toDF("doc_id", "text")
-      streaming.Streaming.streamCcMaintain(spark, docs).collect()
-      val base = s"/tmp/graft_scc_${spark.sparkContext.applicationId}"
-      val incremental = streaming.Streaming.ccServedLabels(spark, base, 2L)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val (full, _) = llm.DedupOps.connectedComponents(
-        docs.select(col("doc_id").as("node")),
-        spark.read.parquet(s"$base/edges"))
-      val rebuilt = full.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(incremental === rebuilt, s"seed $seed: incremental diverged")
-      // the random pools guarantee real cross-wave merge work happened
-      assert(incremental.values.toSet.size < 60, s"seed $seed: no merges at all")
-    }
-  }
-
-  test("stream_cc_maintain: fixture final store equals a full CC rebuild") {
-    q("stream_cc_maintain").collect() // runs the waves, lands the deltas
-    val base = s"/tmp/graft_scc_${spark.sparkContext.applicationId}"
-    val incremental = streaming.Streaming.ccServedLabels(spark, base, 2L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val docs = llm.DedupOps.plantedStreamDocs(
-      Tables.load(spark, sfDir, "documents").select("doc_id", "text"))
-    val (full, _) = llm.DedupOps.connectedComponents(
-      docs.select(col("doc_id").as("node")),
-      spark.read.parquet(s"$base/edges"))
-    val rebuilt = full.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(incremental === rebuilt,
-      "incremental per-wave label maintenance diverged from the full rebuild")
-    assert(incremental.nonEmpty)
-  }
-
   test("retrieval consumers are SERVED from the landed index (plan lock)") {
     // every IVF consumer's executed plan must read the ivf_cells artifact
     // parquet (a FileScan over the CorpusArtifacts dir), not re-derive

@@ -15,7 +15,7 @@ class Round18Spec extends GraftSuite {
   test("stream_cc_maintain: per-wave delta writes are wave-scaled, store never rewritten") {
     val receipts = q("stream_cc_maintain").collect()
       .map(r => r.getLong(0) -> r.getLong(5)).toMap // wave -> n_delta_rows
-    val base = s"/tmp/graft_scc_${spark.sparkContext.applicationId}"
+    val base = streaming.Streaming.ccStoreDir(spark)
     def dirRows(p: String): Long =
       try spark.read.parquet(p).count() catch { case _: Throwable => -1L }
     def dirBytes(p: String): Long = {

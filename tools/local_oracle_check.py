@@ -6,12 +6,19 @@ oracle SQL from <voutDir>/oracle_sql.json in DuckDB over the <sfDir>
 fixture tables, sorts columns by name and rows by values on both sides,
 and compares exactly (values + dtypes). Mirrors CORRECTNESS_r{N}.json.
 """
-import sys, os, json
+import sys, os, json, atexit, shutil, tempfile
 import duckdb, pandas as pd, numpy as np
 
 sf, vout = sys.argv[1], sys.argv[2]
 oracle = json.load(open(f"{vout}/oracle_sql.json"))
 con = duckdb.connect()
+# DuckDB spills to ./.tmp by default, without a size bound; spill into a
+# fresh directory removed on exit instead, and bound it, so a runaway
+# oracle query reports ERR rather than filling the disk.
+spill = tempfile.mkdtemp(prefix="oracle_duckdb_")
+atexit.register(shutil.rmtree, spill, ignore_errors=True)
+con.execute(f"SET temp_directory = '{spill}'")
+con.execute("SET max_temp_directory_size = '4GB'")
 for t in ["region","nation","customer","supplier","part","orders",
           "lineitem","events","documents","embeddings"]:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
