@@ -10,10 +10,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * table once per corpus snapshot and fans it out; re-deriving it per query
   * is the measured dominant cost of every consumer after the first. This
   * registry writes the build result ONCE per (session, kind, corpus
-  * content) as parquet under the JVM tmpdir and re-reads it for every later
-  * consumer. The corpus content is the [[Tables.fingerprint]] of its
-  * directory, so a corpus rewritten at the same path gets its artifacts
-  * rebuilt instead of serving the old ones.
+  * content) as parquet in the [[Store]] directory `artifacts` and re-reads
+  * it for every later consumer. The corpus content is the
+  * [[Tables.fingerprint]] of its directory, so a corpus rewritten at the
+  * same path gets its artifacts rebuilt instead of serving the old ones.
   *
   * Honest-measurement protocol: Bench and ScaleProbe [[clear]] the memo
   * each PASS, so the first consumer of a pass pays the full build inside
@@ -75,8 +75,7 @@ object CorpusArtifacts {
     val (key, hash) = keyOf(s, "bt|" + kind, dir)
     val tbl = withKeyLock(key)(memo.getOrElseUpdate(key, {
       val name = s"graft_bt_${kind}_$hash"
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_artifacts_${s.sparkContext.applicationId}")
+      val base = Store.dir(s, "artifacts")
       s.sql(s"DROP TABLE IF EXISTS $name")
       // repartition on the bucket hash first: each write task then holds
       // exactly one bucket, so the layout is ONE sorted file per bucket
@@ -84,7 +83,7 @@ object CorpusArtifacts {
       // output ordering lets the join skip its sort entirely
       build.repartition(nBuckets, org.apache.spark.sql.functions.col(bucketCol))
         .write.mode("overwrite")
-        .option("path", new java.io.File(base, name).getPath)
+        .option("path", s"$base/$name")
         .bucketBy(nBuckets, bucketCol).sortBy(bucketCol).saveAsTable(name)
       name
     }))
@@ -123,10 +122,8 @@ object CorpusArtifacts {
                             (build: => DataFrame): DataFrame = {
     val (key, hash) = keyOf(s, kind, dir)
     val path = withKeyLock(key)(memo.getOrElseUpdate(key, {
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_artifacts_${s.sparkContext.applicationId}")
       val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val p = new java.io.File(base, s"${kind}_${safe}_$hash").getPath
+      val p = s"${Store.dir(s, "artifacts")}/${kind}_${safe}_$hash"
       build.write.mode("overwrite").parquet(p)
       p
     }))

@@ -624,7 +624,7 @@ object ScaleProbe {
     val samples = scala.collection.mutable.LinkedHashMap[(Long, String), List[Double]]()
     val stateStats = scala.collection.mutable.LinkedHashMap[(Long, String), (Long, Long, Int)]()
     mults.foreach { m =>
-      val dir = s"/tmp/graft_scale_${m}x"
+      val dir = Store.dir(spark, s"scale_${m}x")
       synthDocs(spark, baseDocs * m).write.mode("overwrite")
         .parquet(s"$dir/documents.parquet")
       synthEmbeddings(spark, baseVecs * m).write.mode("overwrite")
@@ -716,7 +716,7 @@ object ScaleProbe {
     // brute-force top-5 for the same 10 query vectors); recall@5 =
     // mean over queries of |approx ∩ exact| / |exact|. The collects are
     // bounded at 10 queries × 5 neighbors — never data-sized.
-    val recallDir = s"/tmp/graft_scale_${mults.last}x"
+    val recallDir = Store.dir(spark, s"scale_${mults.last}x")
     def top5(op: String): Map[Long, Set[Long]] =
       SparkEntry.queries(op)(spark, recallDir)
         .select(col("qid").cast("long"), col("vid").cast("long"))

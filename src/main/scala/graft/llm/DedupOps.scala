@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.OpRegistry
+import graft.{OpRegistry, Store}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -258,7 +258,7 @@ object DedupOps extends OpRegistry {
     TextOps.jaccardEdges(docs, pin = true)
       .select(col("id1").as("a"), col("id2").as("b"))
       .write.mode("overwrite").parquet(s"$dir/edges")
-    val edges = s.read.parquet(s"$dir/edges")
+    val edges = graft.Tables.readParquet(s, s"$dir/edges")
     val baseNodes = docs.filter(!isBatch(col("doc_id")))
       .select(col("doc_id").as("node"))
     val baseEdges = edges.filter(!isBatch(col("a")) && !isBatch(col("b")))
@@ -598,15 +598,15 @@ object DedupOps extends OpRegistry {
       // (store build, batch probe, re-land) — the first probe measured
       // ratio 21.4 at 100× from exactly that triple build; landed-once it
       // runs a single occurrence-sized pass.
-      val keysPath = s"/tmp/graft_band_keys_${s.sparkContext.applicationId}"
+      val keysPath = Store.dir(s, "band_keys")
       portableBands(portableSignature(docs))
         .write.mode("overwrite").parquet(keysPath)
-      val keys = s.read.parquet(keysPath)
-      val storePath = s"/tmp/graft_band_store_${s.sparkContext.applicationId}"
+      val keys = graft.Tables.readParquet(s, keysPath)
+      val storePath = Store.dir(s, "band_store")
       keys.filter(!isBatch(col("doc_id")))
         .select("band", "bh").distinct()
         .write.mode("overwrite").parquet(storePath)
-      val store = s.read.parquet(storePath)
+      val store = graft.Tables.readParquet(s, storePath)
       val batchKeys = keys.filter(isBatch(col("doc_id")))
       val rejected = batchKeys.join(store, Seq("band", "bh"), "left_semi")
         .select("doc_id").distinct()
@@ -639,10 +639,9 @@ object DedupOps extends OpRegistry {
       // ever fire. The planted frame is a landed artifact: the edge build
       // and the base/batch node filters all read it.
       val docs = landedPlantedDocs(s, dir)
-      val store = s"/tmp/graft_cc_inc_${s.sparkContext.applicationId}"
-      org.apache.spark.network.util.JavaUtils.deleteRecursively(new java.io.File(store))
+      val store = Store.fresh(s, "cc_inc")
       val edges = landBaseStore(docs, store)
-      val baseLab = s.read.parquet(s"$store/labels/v0")
+      val baseLab = graft.Tables.readParquet(s, s"$store/labels/v0")
       val batchNodes = docs.filter(isBatch(col("doc_id")))
         .select(col("doc_id").as("node"))
       val subLab = mergeComponents(baseLab,

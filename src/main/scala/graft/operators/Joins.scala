@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.OpRegistry
+import graft.{OpRegistry, Store}
 import graft.Helpers._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -138,10 +138,8 @@ object Joins extends OpRegistry {
       // turns an everyday fact-dim join from a full-network shuffle into a
       // local merge at scale.
       val tt = t(s, dir) _
-      // fixed external path: DROP + mode(overwrite) replaces both catalog
-      // entry and files, so repeated runs reuse one directory instead of
-      // accumulating UUID-suffixed copies under /tmp (ADVICE r2)
-      val base = "/tmp/graft_bucketed"
+      // DROP + mode(overwrite) replaces both catalog entry and files
+      val base = Store.dir(s, "bucketed")
       s.sql("DROP TABLE IF EXISTS graft_b_orders")
       s.sql("DROP TABLE IF EXISTS graft_b_customer")
       tt("orders").select("o_orderkey", "o_custkey", "o_totalprice")
@@ -353,9 +351,10 @@ object Joins extends OpRegistry {
       // lets a star-schema query over a partitioned 100 TB fact read one
       // partition instead of the table when the filter is on the dim
       // attribute, not the key. PlanSpec locks the pruning expression in
-      // the executed scan. App-id-suffixed path (sink convention).
+      // the executed scan.
       import s.implicits._
-      val out = s"/tmp/graft_dpp_orders_${s.sparkContext.applicationId}"
+      val base = Store.dir(s, "dpp")
+      val out = s"$base/orders"
       t(s, dir)("orders")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
         .write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
@@ -364,9 +363,9 @@ object Joins extends OpRegistry {
       // a surviving selective predicate on the pruning side
       Seq(("F", "finished"), ("O", "open"), ("P", "pending"))
         .toDF("st", "st_name")
-        .write.mode("overwrite").parquet(s"$out-dim")
+        .write.mode("overwrite").parquet(s"$base/dim")
       s.read.parquet(out)
-        .join(s.read.parquet(s"$out-dim").filter(col("st_name") === "finished"),
+        .join(s.read.parquet(s"$base/dim").filter(col("st_name") === "finished"),
           col("o_orderstatus") === col("st"))
         .groupBy("o_orderstatus", "st_name")
         .agg(count(lit(1)).as("cnt"), decSumOut(col("o_totalprice")).as("total"))

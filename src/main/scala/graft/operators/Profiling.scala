@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.OpRegistry
+import graft.{OpRegistry, Store}
 import graft.Helpers._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -110,7 +110,7 @@ object Profiling extends OpRegistry {
       // streaming/foreachBatch sink splinters); at 100 TB the same op
       // runs per partition directory. Row fidelity is the oracle: the
       // compacted read aggregates to exactly the source table.
-      val base = s"/tmp/graft_compact_${s.sparkContext.applicationId}"
+      val base = Store.dir(s, "compact")
       t(s, dir)("orders")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
         .repartition(64).write.mode("overwrite").parquet(s"$base/small")
@@ -373,7 +373,7 @@ object Profiling extends OpRegistry {
       // landed table is a no-op.
       val merged = mergeInto(
         t(s, dir)("customer"), latestOrderChanges(t(s, dir)("orders")))
-      val out = "/tmp/graft_merge_customer"
+      val out = Store.dir(s, "merge_customer")
       merged.write.mode("overwrite").partitionBy("was_updated").parquet(out)
       s.read.parquet(out)
         .select("c_custkey", "c_name", "acctbal", "was_updated")
@@ -451,8 +451,8 @@ object Profiling extends OpRegistry {
       // where an aggregate view over an append-only fact is maintained by
       // folding ONLY the delta partition into the landed snapshot —
       // refresh cost ∝ delta, never the base (at 100 TB the base is never
-      // re-read; here the snapshot build is paid once per session, the
-      // CorpusArtifacts discipline). COUNT/SUM are self-maintainable
+      // re-read; here the snapshot is a corpus artifact, built once per
+      // corpus content). COUNT/SUM are self-maintainable
       // aggregates — their partial states merge associatively — so
       // snapshot ⊕ delta-agg provably equals the full recompute the
       // oracle runs. The landed snapshot keeps EXACT DECIMAL partial
@@ -466,11 +466,8 @@ object Profiling extends OpRegistry {
             year(col("o_orderdate")).cast("long").as("yr"))
           .agg(count(lit(1)).as("n_orders"),
             sum(dec(col("o_totalprice"))).as("sum_price_d"))
-      val snapDir = "/tmp/graft_ivm_snapshot_" + s.sparkContext.applicationId
-      if (!new java.io.File(snapDir).exists())
-        aggOf(orders.filter(col("o_orderdate") < lit(cutoff)))
-          .write.mode("overwrite").parquet(snapDir)
-      val snap = s.read.parquet(snapDir)
+      val snap = graft.CorpusArtifacts.parquet(s, "ivm_snapshot", dir)(
+        aggOf(orders.filter(col("o_orderdate") < lit(cutoff))))
       val delta = aggOf(orders.filter(col("o_orderdate") >= lit(cutoff)))
       snap.unionByName(delta)
         .groupBy("o_orderpriority", "yr")
@@ -519,7 +516,7 @@ object Profiling extends OpRegistry {
       // carry. Round13Spec asserts the untouched partitions' files are
       // the SAME paths after the overwrite (no rewrite IO) and the 'F'
       // files are new; the oracle certifies the resulting table.
-      val out = s"/tmp/graft_dynover_${s.sparkContext.applicationId}"
+      val out = Store.dir(s, "dynover")
       val base = t(s, dir)("orders")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
       base.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
@@ -672,7 +669,7 @@ object Profiling extends OpRegistry {
         Seq(col("o_orderdate").desc, col("o_orderkey").desc))
         .select(col("o_custkey"), col("o_totalprice").as("new_bal"),
           col("o_orderdate").cast("date").as("eff_date"))
-      val out = s"/tmp/graft_scd2_${s.sparkContext.applicationId}"
+      val out = Store.dir(s, "scd2")
       scd2Kernel(t(s, dir)("customer"), changes)
         .write.mode("overwrite").partitionBy("is_current").parquet(out)
       s.read.parquet(out)
@@ -826,7 +823,7 @@ object Profiling extends OpRegistry {
       val customer = tt("customer").select("c_custkey", "c_name",
         "c_nationkey", "c_acctbal")
       val merged = insertIgnore(customer, insertBatch(s, dir))
-      val out = s"/tmp/graft_merge_insert_ignore_${s.sparkContext.applicationId}"
+      val out = Store.dir(s, "merge_insert_ignore")
       merged.write.mode("overwrite").parquet(out)
       s.read.parquet(out)
         .agg(count(lit(1)).as("n_total"),
@@ -1287,11 +1284,7 @@ object Profiling extends OpRegistry {
     * compacted table root). */
   private[graft] def compactionExecute(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, String) = {
-    val base = s"/tmp/graft_compact_exec_${s.sparkContext.applicationId}"
-    // ADVICE r17: clear the base at kernel entry (the streamCcMaintain
-    // pattern) so repeated sessions don't accumulate orphaned copies
-    org.apache.spark.network.util.JavaUtils.deleteRecursively(
-      new java.io.File(base))
+    val base = Store.fresh(s, "compact_exec")
     t(s, dir)("orders")
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
       .repartition(24)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.OpRegistry
+import graft.{OpRegistry, Store}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,11 +43,7 @@ object Scans extends OpRegistry {
       // Write->read round-trip through the csv sink; returns per-flag counts
       // so the driver's rows>0 check is meaningful. Unit test asserts
       // equality with the direct read.
-      // fixed path + overwrite: a UUID-per-run path accumulated unbounded
-      // /tmp data across repeated Verify/Bench runs (ADVICE r2). Fixed
-      // paths assume ONE engine process at a time (the driver's execution
-      // model); concurrent runs would race on the shared dirs.
-      val out = "/tmp/graft_sink_csv"
+      val out = Store.dir(s, "sink_csv")
       val src = t(s, dir)("nation")
       src.write.mode("overwrite").option("header", "true").csv(out)
       val back = s.read.option("header", "true").option("inferSchema", "true").csv(out)
@@ -71,7 +67,7 @@ object Scans extends OpRegistry {
       // yield). Corrupt rows park in the side column (never dropped rows,
       // never a job failure); the scan stays splittable/distributed.
       import org.apache.spark.sql.types._
-      val out = s"/tmp/graft_src_csv_bad_${s.sparkContext.applicationId}"
+      val out = Store.dir(s, "src_csv_bad")
       t(s, dir)("orders")
         .select(concat_ws(",", col("o_orderkey"),
           when(col("o_orderkey") % 100 === 0, lit("notanumber"))
@@ -111,7 +107,7 @@ object Scans extends OpRegistry {
       // oracle is the same predicate on the source table, which is the
       // correctness contract of a skipping index.
       import org.apache.spark.sql.types.DecimalType
-      val out = s"/tmp/graft_sink_bloom_${s.sparkContext.applicationId}"
+      val out = Store.dir(s, "sink_bloom")
       t(s, dir)("orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .write.mode("overwrite")
@@ -133,10 +129,8 @@ object Scans extends OpRegistry {
       // Spark unions the footer schemas and null-fills the missing
       // column for snap1 files. The aggregate proves both the union
       // schema and the null-fill — the -1 bucket is exactly the snap1
-      // row count. Path is suffixed with the applicationId (ADVICE r11:
-      // the two-directory write+read window would race across concurrent
-      // harness/test processes on one host under a fixed path).
-      val base = s"/tmp/graft_schema_merge_${s.sparkContext.applicationId}"
+      // row count.
+      val base = Store.dir(s, "schema_merge")
       val src = t(s, dir)("nation")
       src.select(col("n_nationkey"), col("n_name"))
         .write.mode("overwrite").parquet(s"$base/snap1")
@@ -258,7 +252,7 @@ object Scans extends OpRegistry {
     }),
 
     "sink_json_roundtrip" -> ((s, dir) => {
-      val out = "/tmp/graft_sink_json"
+      val out = Store.dir(s, "sink_json")
       val src = t(s, dir)("region")
       src.write.mode("overwrite").json(out)
       s.read.json(out).select("r_regionkey", "r_name").orderBy("r_regionkey")
@@ -269,7 +263,7 @@ object Scans extends OpRegistry {
       // parquet): write supplier as ORC, read it back, aggregate — ORC
       // preserves types exactly (no csv/json narrowing), so the read-back
       // aggregate must equal the same aggregate on the source table.
-      val out = "/tmp/graft_sink_orc"
+      val out = Store.dir(s, "sink_orc")
       val src = t(s, dir)("supplier")
       src.write.mode("overwrite").orc(out)
       s.read.orc(out)
@@ -290,7 +284,7 @@ object Scans extends OpRegistry {
       // what the resilient read must still yield; the oracle recomputes
       // from it. The corrupt member is skipped at footer-read time —
       // file-level granularity, the scan stays distributed.
-      val out = s"/tmp/graft_scan_corrupt_${s.sparkContext.applicationId}"
+      val out = Store.dir(s, "scan_corrupt")
       t(s, dir)("supplier").select("s_suppkey", "s_nationkey", "s_acctbal")
         .write.mode("overwrite").parquet(out)
       java.nio.file.Files.write(
@@ -314,7 +308,7 @@ object Scans extends OpRegistry {
       // so the table is ground truth for what parsing must yield). The
       // XML reader splits by rowTag, so the scan stays distributed.
       import org.apache.spark.sql.types._
-      val out = s"/tmp/graft_sink_xml_${s.sparkContext.applicationId}"
+      val out = Store.dir(s, "sink_xml")
       t(s, dir)("supplier")
         .select("s_suppkey", "s_nationkey", "s_acctbal")
         .write.mode("overwrite").option("rowTag", "supplier")
@@ -336,7 +330,7 @@ object Scans extends OpRegistry {
       // that lets a 100 TB table answer a partition-selective query by
       // listing one directory. The read-back filter must appear as a
       // PartitionFilter (not a data filter) in the scan; PlanSpec asserts it.
-      val out = "/tmp/graft_part_orders"
+      val out = Store.dir(s, "part_orders")
       t(s, dir)("orders").select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
         .write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
       s.read.parquet(out)
@@ -361,9 +355,8 @@ object Scans extends OpRegistry {
       // line/char/token totals. Valid because the corpus is single-line
       // text (no embedded newlines — the write would split them); the
       // 1-row aggregate is order-independent so the roundtrip's partition
-      // scrambling can't affect the result. Fixed path + overwrite, same
-      // single-process contract as the other sinks (ADVICE r2).
-      val out = "/tmp/graft_source_text"
+      // scrambling can't affect the result.
+      val out = Store.dir(s, "source_text")
       t(s, dir)("documents").select("text").write.mode("overwrite").text(out)
       val back = s.read.text(out)
       back.agg(
@@ -414,7 +407,7 @@ object Scans extends OpRegistry {
     * copies (keys +1000, regions +100 — disjoint from any real key, so a
     * leak of v1 rows into an as-of-0 read is detectable). Returns base. */
   def snapshotTable(s: SparkSession, dir: String, name: String): String = {
-    val base = s"/tmp/graft_${name}_${s.sparkContext.applicationId}"
+    val base = Store.dir(s, name)
     val src = t(s, dir)("nation")
     src.write.mode("overwrite").parquet(s"$base/data/c0")
     val c0 = partFiles(s, s"$base/data/c0")
@@ -443,7 +436,7 @@ object Scans extends OpRegistry {
     * (base, stats). */
   private[graft] def statsTable(s: SparkSession, dir: String,
                                 name: String): (String, Seq[FileStats]) = {
-    val base = s"/tmp/graft_${name}_${s.sparkContext.applicationId}"
+    val base = Store.dir(s, name)
     t(s, dir)("orders")
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
       .repartitionByRange(8, col("o_orderkey"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.OpRegistry
+import graft.{OpRegistry, Store}
 import graft.Helpers._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -62,17 +62,11 @@ object Streaming extends OpRegistry {
     * FLAT (12.8 vs 13.1 s same-window filtered A/B, r10 — inside the host
     * noise band, with per-query regressions on tws/stateful_count), so 4
     * stands: below it, store-init savings no longer pay for the lost
-    * state-work parallelism.
-    *
-    * Round 12: env-overridable (SPARK_GRAFT_STREAM_PARTITIONS) because the
-    * 100× streaming probe measured exactly the predicted failure of an
-    * UNDERSIZED deploy choice: at 10M events the 4 state partitions carry
-    * the whole session-merge/dedup state in 4 tasks
-    * (stream_session_builtin 44.3 s, stream_dedup 24.9 s with the noop
-    * sink); re-sizing to 32 is the deploy-time fix the probe quantifies
-    * (§4.2.13). */
-  private val StreamStatePartitions =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "4")
+    * state-work parallelism. The 100× streaming probe measured the cost of
+    * an undersized choice: at 10M events the 4 state partitions carry the
+    * whole session-merge/dedup state in 4 tasks (stream_session_builtin
+    * 44.3 s, stream_dedup 24.9 s with the noop sink, §4.2.13). */
+  private val StreamStatePartitions = "4"
 
   /** The session settings a streaming query runs under, scoped to its
     * lifetime: set before start, the caller's values restored after
@@ -294,15 +288,14 @@ object Streaming extends OpRegistry {
     // registry query passes a landed parquet artifact, so each branch is a
     // scan, not a re-run of the planting joins. Test callers pass tiny
     // hand frames, where re-execution is free.
-    val base = s"/tmp/graft_sdb_${s.sparkContext.applicationId}"
-    org.apache.spark.network.util.JavaUtils.deleteRecursively(new java.io.File(base))
+    val base = Store.fresh(s, "sdb")
     // land the per-doc band keys ONCE (the dedup_incremental_bands
     // rationale: three downstream branches would re-run the signature
     // pipeline per branch; production stores signatures, it never
     // re-derives them per consumer)
     DedupOps.portableBands(DedupOps.portableSignature(docs))
       .write.mode("overwrite").parquet(s"$base/keys")
-    val keys = s.read.parquet(s"$base/keys")
+    val keys = graft.Tables.readParquet(s, s"$base/keys")
     keys.filter(!DedupOps.isBatch(col("doc_id")))
       .select("band", "bh").distinct()
       .write.mode("overwrite").parquet(s"$base/store/v0")
@@ -312,111 +305,73 @@ object Streaming extends OpRegistry {
     val batchKeys = docs.filter(DedupOps.isBatch(col("doc_id")))
       .select("doc_id")
       .join(keys, Seq("doc_id"), "left")
-    val staged = new java.io.File(s"$base/staged")
-    staged.mkdirs()
-    val t0 = System.currentTimeMillis() - 600000L
-    for (w <- 0 until 3) {
-      val tmp = s"$base/_w$w"
-      batchKeys.filter(pmod(col("doc_id"), lit(3L)) === w)
-        .repartition(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file staged for wave $w"))
-      val dst = new java.io.File(staged, s"wave$w.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      // strictly increasing, well in the past: the file source orders by
-      // modification time (latestFirst=false), so wave w IS micro-batch w
-      dst.setLastModified(t0 + w * 2000L)
-      org.apache.spark.network.util.JavaUtils.deleteRecursively(new java.io.File(tmp))
+    replayWaves(s, base, "sdb", batchKeys) { (batch, batchId) =>
+      // Store AS OF this wave = v0 ∪ the landed per-wave DELTAS
+      // b0..b(w−1) — the CC label store's delta-landing discipline
+      // (VERDICT r17 #1) applied to the band store (r20, guide
+      // §2.4/§6): the r16–r19 loop re-WROTE the full store every
+      // micro-batch, a store-sized write per wave that at 100 TB
+      // rewrites the corpus fingerprint set nightly; per-wave WRITE
+      // bytes must track the WAVE. Disjointness is structural: an
+      // admitted doc by the admission rule has NO band in the
+      // store-as-of-its-wave, and within-wave dups are distinct()'d,
+      // so each delta is provably disjoint from every earlier landed
+      // set — the multi-path union scan IS the store, bit-for-bit.
+      // Retry idempotence is unchanged: a wave reads only landed
+      // state strictly older than itself and overwrites its own
+      // batchId-keyed delta.
+      val storePaths = s"$base/store/v0" +:
+        (0L until batchId).map(w => s"$base/store/delta/b$w")
+      val store = s.read.parquet(storePaths: _*)
+      val waveDocs = batch.select("doc_id").distinct()
+      val waveKeys = batch.filter(col("band").isNotNull)
+        .select("doc_id", "band", "bh")
+      // LAZY wave-bounded pins (r20 session 3, the ccProcessWave
+      // rule): the probe join is THE per-wave compute and both the
+      // delta write and the receipt consume its results — lazily
+      // checkpointed, the delta write (the strictly-next action)
+      // materializes them once and the receipt reads the cache;
+      // unpinned, the store-probe join ran TWICE per wave.
+      val rejected = waveKeys.join(store, Seq("band", "bh"), "left_semi")
+        .select("doc_id").distinct().localCheckpoint(false)
+      val admitted = waveDocs.join(rejected, Seq("doc_id"), "left_anti")
+        .localCheckpoint(false)
+      // repartition(1): one part file per delta, so an EMPTY delta
+      // still lands a readable schema (the cc delta rule)
+      waveKeys.join(admitted, Seq("doc_id"), "left_semi")
+        .select("band", "bh").distinct()
+        .repartition(1).write.mode("overwrite")
+        .parquet(s"$base/store/delta/b$batchId")
+      // one receipt row per micro-batch, batchId-idempotent path.
+      // wave is CONTENT-derived (all docs in a wave file share
+      // doc_id % 3), so a mis-ordered delivery shows up as a
+      // receipt/oracle mismatch instead of passing silently;
+      // an empty wave falls back to the batch position.
+      // n_store_after stays LANDED-state-derived but is maintained
+      // INCREMENTALLY (r20 session 3, the cc n_components rule /
+      // VERDICT r19 #3): previous receipt's count + this wave's
+      // landed delta row count — exactly the union-scan count, since
+      // every landed delta is provably disjoint from all earlier
+      // landed state (the admission-rule argument above). Wave 0
+      // pays one v0 count; later waves never re-scan the store.
+      val prevStore =
+        if (batchId == 0L)
+          graft.Tables.readParquet(s, s"$base/store/v0")
+            .agg(count(lit(1)).as("prev_ns"))
+        else graft.Tables.readParquet(s, s"$base/log/b${batchId - 1L}")
+          .select(col("n_store_after").as("prev_ns"))
+      waveDocs.agg(
+          coalesce(max(pmod(col("doc_id"), lit(3L))), lit(batchId))
+            .as("wave"),
+          count(lit(1)).as("n_batch"))
+        .crossJoin(rejected.agg(count(lit(1)).as("n_rejected")))
+        .crossJoin(admitted.agg(count(lit(1)).as("n_admitted")))
+        .crossJoin(prevStore
+          .crossJoin(graft.Tables.readParquet(s, s"$base/store/delta/b$batchId")
+            .agg(count(lit(1)).as("nd")))
+          .select((col("prev_ns") + col("nd")).as("n_store_after")))
+        .write.mode("overwrite").parquet(s"$base/log/b$batchId")
     }
-    val ckpt = scratchCkpt("sdb")
-    withStreamQueryConf(s) {
-      try {
-        val raw = s.readStream.schema(batchKeys.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(staged.getPath)
-        val q = raw.writeStream
-          .outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            // Store AS OF this wave = v0 ∪ the landed per-wave DELTAS
-            // b0..b(w−1) — the CC label store's delta-landing discipline
-            // (VERDICT r17 #1) applied to the band store (r20, guide
-            // §2.4/§6): the r16–r19 loop re-WROTE the full store every
-            // micro-batch, a store-sized write per wave that at 100 TB
-            // rewrites the corpus fingerprint set nightly; per-wave WRITE
-            // bytes must track the WAVE. Disjointness is structural: an
-            // admitted doc by the admission rule has NO band in the
-            // store-as-of-its-wave, and within-wave dups are distinct()'d,
-            // so each delta is provably disjoint from every earlier landed
-            // set — the multi-path union scan IS the store, bit-for-bit.
-            // Retry idempotence is unchanged: a wave reads only landed
-            // state strictly older than itself and overwrites its own
-            // batchId-keyed delta.
-            val storePaths = s"$base/store/v0" +:
-              (0L until batchId).map(w => s"$base/store/delta/b$w")
-            val store = s.read.parquet(storePaths: _*)
-            val waveDocs = batch.select("doc_id").distinct()
-            val waveKeys = batch.filter(col("band").isNotNull)
-              .select("doc_id", "band", "bh")
-            // LAZY wave-bounded pins (r20 session 3, the ccProcessWave
-            // rule): the probe join is THE per-wave compute and both the
-            // delta write and the receipt consume its results — lazily
-            // checkpointed, the delta write (the strictly-next action)
-            // materializes them once and the receipt reads the cache;
-            // unpinned, the store-probe join ran TWICE per wave.
-            val rejected = waveKeys.join(store, Seq("band", "bh"), "left_semi")
-              .select("doc_id").distinct().localCheckpoint(false)
-            val admitted = waveDocs.join(rejected, Seq("doc_id"), "left_anti")
-              .localCheckpoint(false)
-            // repartition(1): one part file per delta, so an EMPTY delta
-            // still lands a readable schema (the cc delta rule)
-            waveKeys.join(admitted, Seq("doc_id"), "left_semi")
-              .select("band", "bh").distinct()
-              .repartition(1).write.mode("overwrite")
-              .parquet(s"$base/store/delta/b$batchId")
-            // one receipt row per micro-batch, batchId-idempotent path.
-            // wave is CONTENT-derived (all docs in a wave file share
-            // doc_id % 3), so a mis-ordered delivery shows up as a
-            // receipt/oracle mismatch instead of passing silently;
-            // an empty wave falls back to the batch position.
-            // n_store_after stays LANDED-state-derived but is maintained
-            // INCREMENTALLY (r20 session 3, the cc n_components rule /
-            // VERDICT r19 #3): previous receipt's count + this wave's
-            // landed delta row count — exactly the union-scan count, since
-            // every landed delta is provably disjoint from all earlier
-            // landed state (the admission-rule argument above). Wave 0
-            // pays one v0 count; later waves never re-scan the store.
-            val prevStore =
-              if (batchId == 0L)
-                s.read.parquet(s"$base/store/v0")
-                  .agg(count(lit(1)).as("prev_ns"))
-              else s.read.parquet(s"$base/log/b${batchId - 1L}")
-                .select(col("n_store_after").as("prev_ns"))
-            waveDocs.agg(
-                coalesce(max(pmod(col("doc_id"), lit(3L))), lit(batchId))
-                  .as("wave"),
-                count(lit(1)).as("n_batch"))
-              .crossJoin(rejected.agg(count(lit(1)).as("n_rejected")))
-              .crossJoin(admitted.agg(count(lit(1)).as("n_admitted")))
-              .crossJoin(prevStore
-                .crossJoin(s.read.parquet(s"$base/store/delta/b$batchId")
-                  .agg(count(lit(1)).as("nd")))
-                .select((col("prev_ns") + col("nd")).as("n_store_after")))
-              .write.mode("overwrite").parquet(s"$base/log/b$batchId")
-            ()
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally cleanupCkpt(ckpt)
-    }
-    // enumerate the receipt dirs explicitly: a glob path ("log/b*") makes
-    // the reader's FileStreamSink.hasMetadata probe log a spurious
-    // FileNotFoundException WARN with a full stack trace on every run
-    val receipts = new java.io.File(s"$base/log").listFiles()
-      .filter(_.getName.startsWith("b")).map(_.getPath).sorted
-    s.read.parquet(receipts: _*).orderBy("wave")
   }
 
   /** Wave w's landed delta — one commit file per wave, so a micro-batch
@@ -424,10 +379,10 @@ object Streaming extends OpRegistry {
     * wave rows (doc_id, label); kind=1 relabel pairs (old_label,
     * new_label). */
   private[graft] def ccDeltaWave(s: SparkSession, base: String, w: Long): DataFrame =
-    s.read.parquet(s"$base/labels/delta/b$w")
+    graft.Tables.readParquet(s, s"$base/labels/delta/b$w")
       .filter(col("kind") === 0).select(col("doc_id"), col("label"))
   private[graft] def ccDeltaRelabel(s: SparkSession, base: String, w: Long): DataFrame =
-    s.read.parquet(s"$base/labels/delta/b$w")
+    graft.Tables.readParquet(s, s"$base/labels/delta/b$w")
       .filter(col("kind") === 1).select(col("old_label"), col("new_label"))
 
   /** One merge-on-read fold step: labels-through-(w−1) ∪ wave w's rows,
@@ -468,7 +423,7 @@ object Streaming extends OpRegistry {
     * the serve path enters via [[ccServedLabels]] at the newest base. */
   private[graft] def ccServedLabelsFrom(s: SparkSession, base: String,
       from: Long, through: Long): DataFrame = {
-    var lab = s.read.parquet(s"$base/labels/v$from")
+    var lab = graft.Tables.readParquet(s, s"$base/labels/v$from")
     for (w <- from to through) lab = ccFoldDelta(s, lab, base, w)
     lab
   }
@@ -492,8 +447,7 @@ object Streaming extends OpRegistry {
     when(!graft.llm.DedupOps.isBatch(c), lit(-1L)).otherwise(pmod(c, lit(3L)))
 
   /** The label store [[streamCcMaintain]] lands for the application of `s`. */
-  private[graft] def ccStoreDir(s: SparkSession): String =
-    s"/tmp/graft_scc_${s.sparkContext.applicationId}"
+  private[graft] def ccStoreDir(s: SparkSession): String = Store.dir(s, "scc")
 
   /** Runs `f` under the Spark job description `wave <batchId>: <label>`,
     * so listeners and the event log attribute each [[ccProcessWave]] job
@@ -567,7 +521,7 @@ object Streaming extends OpRegistry {
     // labels/vN write is its single consumer.
     val prevComponents =
       if (batchId == 0L) store.agg(countDistinct(col("label")).as("prev_nc"))
-      else s.read.parquet(s"$base/log/b${batchId - 1L}")
+      else graft.Tables.readParquet(s, s"$base/log/b${batchId - 1L}")
         .select(col("n_components").as("prev_nc"))
     // receipt: wave CONTENT-derived (the stream_dedup_bands rule —
     // mis-ordered delivery fails the oracle instead of passing);
@@ -602,6 +556,49 @@ object Streaming extends OpRegistry {
       ccPhase(s, batchId, "checkpoint fold write")(
         ccFoldDelta(s, store, base, batchId)
           .write.mode("overwrite").parquet(s"$base/labels/v${batchId + 1L}"))
+  }
+
+  /** Replays `rows` through the streaming engine as three micro-batches
+    * and returns the receipts `perWave` landed under `base/log`. Wave w
+    * holds the rows with `doc_id % 3 = w`, staged as the one file
+    * `base/staged/wave<w>.parquet`; the files carry strictly increasing
+    * modification times well in the past, and the file source reads the
+    * oldest first (latestFirst=false), so under maxFilesPerTrigger=1 wave
+    * w IS micro-batch w, handed to `perWave(batch, w)`. */
+  private def replayWaves(s: SparkSession, base: String, name: String,
+      rows: DataFrame)(perWave: (DataFrame, Long) => Unit): DataFrame = {
+    val staged = new java.io.File(s"$base/staged")
+    staged.mkdirs()
+    val t0 = System.currentTimeMillis() - 600000L
+    for (w <- 0 until 3) {
+      val tmp = s"$base/_w$w"
+      rows.filter(pmod(col("doc_id"), lit(3L)) === w)
+        .repartition(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+        .getOrElse(sys.error(s"no part file staged for wave $w"))
+      val dst = new java.io.File(staged, s"wave$w.parquet")
+      java.nio.file.Files.move(part.toPath, dst.toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      dst.setLastModified(t0 + w * 2000L)
+      org.apache.spark.network.util.JavaUtils.deleteRecursively(new java.io.File(tmp))
+    }
+    val ckpt = scratchCkpt(name)
+    withStreamQueryConf(s) {
+      try s.readStream.schema(rows.schema)
+        .option("maxFilesPerTrigger", "1").parquet(staged.getPath)
+        .writeStream.outputMode(OutputMode.Append())
+        .option("checkpointLocation", ckpt)
+        .foreachBatch(perWave)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      finally cleanupCkpt(ckpt)
+    }
+    // enumerate the receipt dirs explicitly: a glob path ("log/b*") makes
+    // the reader's FileStreamSink.hasMetadata probe log a spurious
+    // FileNotFoundException WARN with a full stack trace on every run
+    val receipts = new java.io.File(s"$base/log").listFiles()
+      .filter(_.getName.startsWith("b")).map(_.getPath).sorted
+    s.read.parquet(receipts: _*).orderBy("wave")
   }
 
   /** stream_cc_maintain kernel: continuous CC-label maintenance —
@@ -640,48 +637,12 @@ object Streaming extends OpRegistry {
     // docs feeds the edge build, the base-label build and the wave staging
     // filters; the registry query passes a landed parquet artifact, so each
     // branch is a scan. Test callers pass tiny hand frames.
-    val base = ccStoreDir(s)
-    org.apache.spark.network.util.JavaUtils.deleteRecursively(new java.io.File(base))
+    val base = Store.fresh(s, "scc")
     // edges and base labels v0 (last night's output)
     val edges = DedupOps.landBaseStore(docs, base)
-    // stage tonight's batch as 3 mtime-ordered wave files (the
-    // stream_dedup_bands protocol: wave w IS micro-batch w)
-    val staged = new java.io.File(s"$base/staged")
-    staged.mkdirs()
+    // stage tonight's batch as 3 mtime-ordered wave files
     val batchDocs = docs.filter(DedupOps.isBatch(col("doc_id"))).select("doc_id")
-    val t0 = System.currentTimeMillis() - 600000L
-    for (w <- 0 until 3) {
-      val tmp = s"$base/_w$w"
-      batchDocs.filter(pmod(col("doc_id"), lit(3L)) === w)
-        .repartition(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file staged for wave $w"))
-      val dst = new java.io.File(staged, s"wave$w.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      dst.setLastModified(t0 + w * 2000L)
-      org.apache.spark.network.util.JavaUtils.deleteRecursively(new java.io.File(tmp))
-    }
-    val ckpt = scratchCkpt("scc")
-    withStreamQueryConf(s) {
-      try {
-        val raw = s.readStream.schema(batchDocs.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(staged.getPath)
-        val q = raw.writeStream
-          .outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            ccProcessWave(s, base, edges, batch, batchId)
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally cleanupCkpt(ckpt)
-    }
-    val receipts = new java.io.File(s"$base/log").listFiles()
-      .filter(_.getName.startsWith("b")).map(_.getPath).sorted
-    s.read.parquet(receipts: _*).orderBy("wave")
+    replayWaves(s, base, "scc", batchDocs)(ccProcessWave(s, base, edges, _, _))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -734,7 +695,7 @@ object Streaming extends OpRegistry {
       // final table must equal the all-at-once batch answer — exactly
       // what the oracle states; the spec asserts the run really took ≥4
       // micro-batches (lastStateStats._3).
-      val staged = s"/tmp/graft_stream_backfill_${s.sparkContext.applicationId}"
+      val staged = Store.dir(s, "stream_backfill")
       graft.Tables.rawLoad(s, dir, "events").repartition(4)
         .write.mode("overwrite").parquet(staged)
       val schema = graft.Tables.rawLoad(s, dir, "events").schema
@@ -1109,8 +1070,7 @@ object Streaming extends OpRegistry {
       // user-count-sized snapshot per commit; at 100 TB the merge targets
       // only zone-map-hit files (merge_delete_cow's COW path) with the
       // nightly-small change batch broadcast.
-      val base = s"/tmp/graft_cdc_${s.sparkContext.applicationId}"
-      org.apache.spark.network.util.JavaUtils.deleteRecursively(new java.io.File(base))
+      val base = Store.fresh(s, "cdc")
       val ckpt = scratchCkpt("cdc")
       val changes = eventsStream(s, dir).select(col("user_id"),
         tsDivMicros(col("ts")).as("last_ts_us"),
@@ -1144,15 +1104,12 @@ object Streaming extends OpRegistry {
     "stream_sink_foreachBatch" -> ((s, dir) => {
       // Micro-batch parquet upsert, idempotent by batchId (same batch
       // re-written to the same path on retry -> overwrite semantics).
-      // Fixed path, deleted up front: the checkpoint must be FRESH per run
-      // (a reused checkpoint resumes the previous query and emits nothing
-      // new), but a UUID-per-run dir accumulated unbounded /tmp data
-      // (ADVICE r2 pattern).
-      val base = "/tmp/graft_febatch"
-      org.apache.spark.network.util.JavaUtils.deleteRecursively(new java.io.File(base))
-      // checkpoint on the RAM scratch (UUID'd fresh per run, which is also
-      // what the fixed path needed the up-front delete for); the parquet
-      // OUTPUT stays on /tmp — it is the sink artifact, not harness state
+      // Cleared at entry: the final answer is the highest out_<batchId>,
+      // so an earlier run's later batches must not survive.
+      val base = Store.fresh(s, "febatch")
+      // checkpoint on the RAM scratch, fresh per run (a reused checkpoint
+      // resumes the previous query and emits nothing new); the parquet
+      // OUTPUT is the sink artifact, landed with the other per-op state
       val ckpt = scratchCkpt("febatch")
       val agg = eventsStream(s, dir)
         .groupBy(col("event_type"))

@@ -38,7 +38,7 @@ class OptimizerRuleSpec extends GraftSuite {
     * user-provided batch runs, leaving no expression to rewrite (or to
     * assert the absence of). */
   private def parquet(df: DataFrame): String = {
-    val p = s"/tmp/graft_optrule_${java.util.UUID.randomUUID().toString.take(8)}"
+    val p = TestSpark.tempDir("graft_optrule_")
     df.write.mode("overwrite").parquet(p)
     p
   }

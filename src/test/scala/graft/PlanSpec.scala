@@ -561,7 +561,7 @@ class PlanSpec extends GraftSuite {
     // base re-read) and the landed decimal snapshot must appear as a
     // second parquet source.
     val p = finalPlan("merge_view_refresh_incremental")
-    assert(p.contains("graft_ivm_snapshot"),
+    assert(p.contains(s"${Store.dir(spark, "artifacts")}/ivm_snapshot_"),
       s"landed snapshot vanished from the refresh plan:\n$p")
     assert("PushedFilters: \\[[^\\]]*GreaterThanOrEqual\\(o_orderdate".r
       .findFirstIn(p).isDefined,

@@ -104,7 +104,7 @@ class Round12Spec extends GraftSuite {
     import org.apache.spark.sql.functions._
     // run the op (it builds + vacuums its own table), then inspect disk
     q("maintenance_vacuum").collect()
-    val base = s"/tmp/graft_vacuum_${spark.sparkContext.applicationId}"
+    val base = Store.dir(spark, "vacuum")
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val it = fs.listFiles(new org.apache.hadoop.fs.Path(s"$base/data"), true)
@@ -124,7 +124,7 @@ class Round12Spec extends GraftSuite {
 
   test("layout_compact_small_files: 64 splinters collapse to the bin-packed count") {
     q("layout_compact_small_files").collect()
-    val base = s"/tmp/graft_compact_${spark.sparkContext.applicationId}"
+    val base = Store.dir(spark, "compact")
     def nParquet(sub: String) = new java.io.File(s"$base/$sub")
       .listFiles().count(_.getName.endsWith(".parquet"))
     assert(nParquet("small") === 64, "splinter fixture did not write 64 files")

@@ -50,7 +50,7 @@ class Round12bSpec extends GraftSuite {
 
   test("merge_delete_cow: untouched files carry verbatim; v0 still sees deleted rows") {
     q("merge_delete_cow").collect() // builds the table + commits v1
-    val base = s"/tmp/graft_delete_cow_${spark.sparkContext.applicationId}"
+    val base = Store.dir(spark, "delete_cow")
     val v0 = operators.Scans.readManifest(spark, base, 0)
     val v1 = operators.Scans.readManifest(spark, base, 1)
     val carried = v0.toSet intersect v1.toSet

@@ -103,7 +103,7 @@ class Round13Spec extends GraftSuite {
 
   test("merge_insert_overwrite_dynamic: untouched partitions carry their files verbatim") {
     def partFiles(status: String): Set[String] = {
-      val out = s"/tmp/graft_dynover_${spark.sparkContext.applicationId}"
+      val out = Store.dir(spark, "dynover")
       val d = new java.io.File(s"$out/o_orderstatus=$status")
       if (!d.exists) Set.empty
       else d.listFiles.filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
@@ -116,7 +116,7 @@ class Round13Spec extends GraftSuite {
     q("merge_insert_overwrite_dynamic").collect()
     val (o1, p1, f1) = (partFiles("O"), partFiles("P"), partFiles("F"))
     assert(o1.nonEmpty && p1.nonEmpty && f1.nonEmpty, "three partitions expected")
-    val out = s"/tmp/graft_dynover_${spark.sparkContext.applicationId}"
+    val out = Store.dir(spark, "dynover")
     graft.Tables.load(spark, sfDir, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
       .filter(org.apache.spark.sql.functions.col("o_orderstatus") === "F")

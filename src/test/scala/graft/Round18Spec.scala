@@ -113,8 +113,7 @@ class Round18Spec extends GraftSuite {
     // exercises the max(nBins, 1) empty-plan branch: every file is above
     // the cutoff, the compacted dir must land readable-but-empty, and
     // the merged read must be exactly the untouched originals
-    val base = s"/tmp/graft_pack_all_large_${spark.sparkContext.applicationId}"
-    org.apache.spark.network.util.JavaUtils.deleteRecursively(new java.io.File(base))
+    val base = Store.fresh(spark, "pack_all_large")
     (0L until 4000L).map(i => (i, i * 2654435761L % 1000003L, i % 2))
       .toDF("id", "v", "p")
       .repartition(2).write.partitionBy("p").parquet(s"$base/small")
@@ -194,8 +193,7 @@ class Round18Spec extends GraftSuite {
   }
 
   test("packSmallFiles: large files pass through untouched, small files pack to plan") {
-    val base = s"/tmp/graft_pack_test_${spark.sparkContext.applicationId}"
-    org.apache.spark.network.util.JavaUtils.deleteRecursively(new java.io.File(base))
+    val base = Store.fresh(spark, "pack_test")
     // mixed layout: one large file in p=0 (hash-valued longs resist
     // parquet delta encoding) + 12 round-robin splinters across p=0/1
     (0L until 20000L).map(i => (i, i * 2654435761L % 1000003L, 0L))

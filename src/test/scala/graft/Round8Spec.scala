@@ -149,8 +149,8 @@ class Round8Spec extends GraftSuite {
   // ------------------------------------------------------------ MERGE landing
 
   test("merge_upsert lands the dimension; re-merging the same batch is a no-op") {
-    // first application: runs the registry op, which writes
-    // /tmp/graft_merge_customer and serves the result from the landed files
+    // first application: runs the registry op, which lands the table in
+    // its Store directory and serves the result from the landed files
     val landed = q("merge_upsert").collect()
     assert(landed.nonEmpty)
     // idempotence: landed table as the new target, the SAME changes batch —
@@ -158,7 +158,7 @@ class Round8Spec extends GraftSuite {
     // value it already has; no phantom inserts/deletes)
     val changes = operators.Profiling.latestOrderChanges(
       Tables.load(spark, sfDir, "orders"))
-    val target2 = spark.read.parquet("/tmp/graft_merge_customer")
+    val target2 = spark.read.parquet(Store.dir(spark, "merge_customer"))
       .select(col("c_custkey"), col("c_name"), col("acctbal").as("c_acctbal"))
     val again = operators.Profiling.mergeInto(target2, changes)
       .orderBy("c_custkey").collect()
@@ -168,7 +168,7 @@ class Round8Spec extends GraftSuite {
       assert(a == b, s"re-merge changed a row: $a -> $b")
     }
     // and the landed layout prunes: was_updated is a partition column
-    val plan = spark.read.parquet("/tmp/graft_merge_customer")
+    val plan = spark.read.parquet(Store.dir(spark, "merge_customer"))
       .filter(col("was_updated") === 0).queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("was_updated"),
       s"was_updated filter must prune partitions:\n$plan")

@@ -10,7 +10,7 @@ class ScanSinkSpec extends GraftSuite {
 
   test("csv sink round-trips nation exactly (write -> read -> except empty)") {
     val src = spark.read.parquet(s"$sfDir/nation.parquet")
-    val out = s"/tmp/graft_test_csv_${java.util.UUID.randomUUID().toString.take(8)}"
+    val out = TestSpark.tempDir("graft_test_csv_")
     src.write.mode("overwrite").option("header", "true").csv(out)
     val back0 = spark.read.option("header", "true").option("inferSchema", "true").csv(out)
     // header round-trip: the INFERRED schema must carry the same columns
@@ -25,7 +25,7 @@ class ScanSinkSpec extends GraftSuite {
 
   test("json sink round-trips region exactly (write -> read -> except empty)") {
     val src = spark.read.parquet(s"$sfDir/region.parquet")
-    val out = s"/tmp/graft_test_json_${java.util.UUID.randomUUID().toString.take(8)}"
+    val out = TestSpark.tempDir("graft_test_json_")
     src.write.mode("overwrite").json(out)
     val back = spark.read.json(out)
       .select(src.schema.fields.map(f => col(f.name).cast(f.dataType)): _*)
@@ -36,7 +36,7 @@ class ScanSinkSpec extends GraftSuite {
 
   test("orc sink round-trips supplier exactly, schema included (no cast needed)") {
     val src = spark.read.parquet(s"$sfDir/supplier.parquet")
-    val out = s"/tmp/graft_test_orc_${java.util.UUID.randomUUID().toString.take(8)}"
+    val out = TestSpark.tempDir("graft_test_orc_")
     src.write.mode("overwrite").orc(out)
     val back = spark.read.orc(out)
     // ORC is typed: the schema must survive verbatim, unlike csv/json

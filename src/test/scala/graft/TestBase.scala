@@ -10,26 +10,10 @@ object TestSpark {
     GraftSession.create("4", Map("spark.app.name" -> "graft-test"))
   val sfDir = "/root/testdata/sf0.001"
 
-  /** Shared tmp-fixture factory (ADVICE r11: per-suite
-    * Files.createTempDirectory fixtures were never deleted, accumulating
-    * tmp garbage across runs). Every dir created here is recursively
-    * removed by one JVM shutdown hook. */
-  private val tmpDirs = scala.collection.mutable.ListBuffer[java.nio.file.Path]()
-  private lazy val hook: Unit = sys.addShutdownHook {
-    import java.nio.file.{Files, Path}
-    import java.util.Comparator
-    tmpDirs.synchronized(tmpDirs.toList).foreach { d =>
-      try Files.walk(d).sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      catch { case _: Throwable => () }
-    }
-  }
-  def tempDir(prefix: String): String = {
-    hook
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    tmpDirs.synchronized(tmpDirs += p)
-    p.toString
-  }
+  /** A fresh fixture directory, deleted with the [[Store]] directories
+    * when the JVM exits. */
+  def tempDir(prefix: String): String =
+    Store.track(java.nio.file.Files.createTempDirectory(prefix).toString)
 }
 
 abstract class GraftSuite extends AnyFunSuite {
