@@ -616,6 +616,7 @@ object GraftExpressions {
   val HllName = "graft_hll_distinct"
   val ShingleName = "graft_shingle_hash64"
   val SignPlanesName = "graft_sign_planes"
+  val TermCountsName = "graft_term_counts"
 
   def register(spark: SparkSession): Unit = {
     val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
@@ -631,6 +632,7 @@ object GraftExpressions {
     bind(HllName, exprs => HllDistinct(exprs.head))
     bind(ShingleName, exprs => ShingleHash64(exprs.head))
     bind(SignPlanesName, exprs => SignPlanes(exprs.head, exprs(1)))
+    bind(TermCountsName, exprs => TermCounts(exprs.head))
   }
 
   /** Column form of the fused dot product; registers on first use. */
@@ -680,6 +682,15 @@ object GraftExpressions {
   def rollingHash31(c: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(RollingHash31(ColumnBridge.expression(c)))
+  }
+
+  /** Column form of the per-row term-count kernel: `array<string>` →
+    * `array<struct<term, tf>>`, distinct terms in first-occurrence order.
+    * Built via ColumnBridge like rollingHash31, so it needs no session and
+    * drops into transform() lambdas. */
+  def termCounts(c: Column): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(TermCounts(ColumnBridge.expression(c)))
   }
 
   /** Column form of the fused portable shingle-hash kernel (r16):

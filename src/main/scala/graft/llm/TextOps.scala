@@ -2,6 +2,7 @@ package graft.llm
 
 import graft.OpRegistry
 import graft.Helpers._
+import graft.functions.GraftExpressions.termCounts
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -12,7 +13,8 @@ import org.apache.spark.sql.expressions.Window
   *
   * Scale design: every pair-generating op is candidate-restricted (shared
   * shingle) so the join is linear in the posting lists, not quadratic in
-  * documents; tf-idf broadcasts the (small) document-frequency side.
+  * documents; tf-idf joins its vocab-sized document-frequency side back
+  * without a hint, so AQE picks broadcast or shuffle by measured size.
   */
 object TextOps extends OpRegistry {
 
@@ -493,22 +495,20 @@ object TextOps extends OpRegistry {
         .limit(50)),
 
     "text_tfidf_top" -> ((s, dir) => {
-      val docs = tWide(s, dir)("documents")
-      val toks = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      val nDocs = docs.agg(count(lit(1)).as("n_docs"))
+      // tf: one (doc, term, tf) row per distinct term of a doc, counted in
+      // the row by the term-count kernel — no (doc_id, term) hash
+      // aggregate, so no corpus-sized shuffle. df: a vocab-sized count of
+      // those rows per term, joined back without a hint (AQE broadcasts it
+      // while the vocabulary is small and shuffle-joins at scale). No
+      // window is partitioned by term: such a partition grows with the
+      // term's df, and a stop-word would put the whole corpus in one.
+      // nDocs is one row at any scale, so it stays hinted.
+      val tf = tWide(s, dir)("documents")
+        .select(col("doc_id"), inline(termCounts(split(col("text"), " "))))
+      val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
+      val nDocs = t(s, dir)("documents").agg(count(lit(1)).as("n_docs"))
       val w = Window.partitionBy("doc_id").orderBy(col("score_raw").desc, col("term"))
-      // df as a WINDOW count over tf (r20, guide §2.4 — the bm25/winnowing
-      // restructure): the r1–r19 dfreq frame derived FROM tf and joined
-      // back, so the plan re-ran the explode + tf aggregate under a second
-      // subtree. tf is one row per (doc, term), so count(*) over (term) IS
-      // the document frequency; the window shuffles the same (doc, term)
-      // rows the old dfreq aggregate shuffled, minus the duplicate pass
-      // (and minus the vocab-sized join — the r12 no-broadcast-hint scale
-      // note carries over: nothing vocab-sized is ever broadcast here).
-      // nDocs stays hinted — one row at any scale.
-      val wdf = Window.partitionBy("term")
-      tf.withColumn("df", count(lit(1)).over(wdf))
+      tf.join(df, "term")
         .crossJoin(broadcast(nDocs))
         .withColumn("score_raw", col("tf") * log(col("n_docs").cast("double") / col("df")))
         .withColumn("rn", row_number().over(w))
@@ -1069,44 +1069,35 @@ object TextOps extends OpRegistry {
       // uniqueness: the most frequent word and word-bigram per document
       // and the fraction of occurrences each claims — the top-n-gram
       // boilerplate/spam thresholds a pretraining pipeline filters on.
-      // Both counts groupBy (doc_id, token), so partial aggregation
-      // collapses occurrences map-side and the shuffle carries per-doc
-      // DISTINCT tokens, not occurrences. The top-1 is min(struct(-cnt,
-      // token)) — (cnt DESC, token ASC) by struct ordering — which stays
-      // a partial-aggregable AGGREGATE (no per-doc window sort, the shape
-      // that matters when one doc has millions of distinct tokens). The
-      // oracle states the same semantics as row_number rk=1; only the
-      // physical shape differs.
-      val docs = tWide(s, dir)("documents")
-        .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      val wc = docs
-        .select(col("doc_id"), size(col("ws")).cast("long").as("n_words"),
-          explode(col("ws")).as("word"))
-        .groupBy("doc_id", "n_words", "word").agg(count(lit(1)).as("cnt"))
-      val topW = wc.groupBy("doc_id", "n_words")
-        .agg(min(struct((-col("cnt")).as("nc"), col("word").as("w"))).as("m"))
-        .select(col("doc_id"), col("n_words"),
-          col("m.w").as("top_word"), (-col("m.nc")).as("top_word_cnt"))
+      // Both tops are counted inside the row by the term-count kernel and
+      // picked by array_min over struct(-tf, token) — (tf DESC, token ASC)
+      // by struct ordering — so the op is map-side per doc; the only
+      // shuffle is the output sort. The oracle states the same semantics
+      // as row_number rk=1. A NULL text has no words, so no row (the
+      // explode-based oracle drops it too).
+      def top(tokens: Column): Column = array_min(transform(termCounts(tokens),
+        x => struct((-x("tf")).as("nc"), x("term").as("t"))))
       // sequence(1, size-1) DESCENDS for single-word docs (the standing
       // sequence footgun) — guard to an empty array instead
-      val bgArr = when(size(col("ws")) >= 2,
-        transform(sequence(lit(1), size(col("ws")) - 1),
-          i => concat_ws(" ", element_at(col("ws"), i), element_at(col("ws"), i + 1))))
+      val ws = col("ws")
+      val bgArr = when(size(ws) >= 2,
+        transform(sequence(lit(1), size(ws) - 1),
+          i => concat_ws(" ", element_at(ws, i), element_at(ws, i + 1))))
         .otherwise(array().cast("array<string>"))
-      val bc = docs.select(col("doc_id"), explode(bgArr).as("bigram"))
-        .groupBy("doc_id", "bigram").agg(count(lit(1)).as("cnt"))
-      val topB = bc.groupBy("doc_id")
-        .agg(min(struct((-col("cnt")).as("nc"), col("bigram").as("b"))).as("m"))
-        .select(col("doc_id"), col("m.b").as("top_bigram"),
-          (-col("m.nc")).as("top_bigram_cnt"))
-      topW.join(topB, Seq("doc_id"), "left")
+      tWide(s, dir)("documents")
+        .select(col("doc_id"), split(col("text"), " ").as("ws"))
+        .filter(ws.isNotNull)
+        .select(col("doc_id"), size(ws).cast("long").as("n_words"),
+          top(ws).as("mw"), top(bgArr).as("mb"))
+        .select(col("doc_id"), col("n_words"),
+          col("mw.t").as("top_word"), (-col("mw.nc")).as("top_word_cnt"),
+          coalesce(col("mb.t"), lit("")).as("top_bigram"),
+          coalesce(-col("mb.nc"), lit(0L)).as("top_bigram_cnt"))
         .select(col("doc_id"), col("n_words"), col("top_word"), col("top_word_cnt"),
           r6(col("top_word_cnt").cast("double") / col("n_words")).as("top_word_frac6"),
-          coalesce(col("top_bigram"), lit("")).as("top_bigram"),
-          coalesce(col("top_bigram_cnt"), lit(0L)).as("top_bigram_cnt"),
+          col("top_bigram"), col("top_bigram_cnt"),
           when(col("n_words") > 1,
-            r6(coalesce(col("top_bigram_cnt"), lit(0L)).cast("double")
-              / (col("n_words") - 1)))
+            r6(col("top_bigram_cnt").cast("double") / (col("n_words") - 1)))
             .otherwise(lit(0.0)).as("top_bigram_frac6"))
         .orderBy("doc_id")
     }),
@@ -1122,19 +1113,18 @@ object TextOps extends OpRegistry {
       // end is bit-stable cross-engine. Residual (same acknowledged one
       // as docs_lm_quality_filter): ln itself is not correctly rounded —
       // a 1-ULP libm divergence at an exact quantization boundary could
-      // shift one micro-nat. Plan: occurrence explode collapses map-side
-      // in the (doc_id, word) partial agg; shuffles carry per-doc
-      // distinct words, then one row per doc.
-      val docs = tWide(s, dir)("documents")
-        .select(col("doc_id"), split(col("text"), " ").as("ws"))
+      // shift one micro-nat. Plan: the word counts come from the
+      // term-count kernel inside the row, so the op is map-side per doc;
+      // the only shuffle is the output sort. A NULL text has no words,
+      // so no row (as in the oracle).
       def lnq(x: Column): Column =
         floor(log(x.cast("double")) * lit(1000000d)).cast("long")
-      docs
+      tWide(s, dir)("documents")
+        .select(col("doc_id"), split(col("text"), " ").as("ws"))
+        .filter(col("ws").isNotNull)
         .select(col("doc_id"), size(col("ws")).cast("long").as("n_words"),
-          explode(col("ws")).as("word"))
-        .groupBy("doc_id", "n_words", "word").agg(count(lit(1)).as("c"))
-        .groupBy("doc_id", "n_words")
-        .agg(sum(col("c") * lnq(col("c"))).as("sum_c_lnc_u"))
+          aggregate(termCounts(col("ws")), lit(0L),
+            (acc, x) => acc + x("tf") * lnq(x("tf"))).as("sum_c_lnc_u"))
         .select(col("doc_id"), col("n_words"), col("sum_c_lnc_u"),
           r6((lnq(col("n_words")) * col("n_words") - col("sum_c_lnc_u")).cast("double")
             / (col("n_words").cast("double") * lit(1000000d))).as("entropy6"))

@@ -1358,6 +1358,30 @@ object Profiling extends OpRegistry {
     (allRows, planBins, passThrough)
   }
 
+  /** The co-trade rows the graph oracles derive their nation graph from:
+    * one row per lineitem whose customer and supplier nations differ, with
+    * its supplier → customer arc (`src`, `dst`) and undirected pair
+    * (`a` = least, `b` = greatest), nation keys in their own type. The
+    * cross-nation test is `a <> b` on the projected pair, not
+    * `c_nationkey <> s_nationkey` next to the joins: DuckDB 1.0 plans the
+    * latter as a customer × supplier nested-loop join ahead of the orders
+    * join (~15 M rows at sf0.1), which overflowed the oracle compare's
+    * 4 GB spill cap; the projected test stays a filter above the
+    * equi-joins. */
+  private[graft] val CoTradeRows = """
+        SELECT * FROM (
+          SELECT l_orderkey, s_nationkey AS src, c_nationkey AS dst,
+                 least(c_nationkey, s_nationkey) AS a,
+                 greatest(c_nationkey, s_nationkey) AS b
+          FROM lineitem
+            JOIN orders ON l_orderkey = o_orderkey
+            JOIN customer ON o_custkey = c_custkey
+            JOIN supplier ON l_suppkey = s_suppkey) j
+        WHERE a <> b"""
+
+  /** The distinct undirected co-trade pairs `(a, b)`, `a < b`. */
+  private[graft] val CoTradePairs = s"SELECT DISTINCT a, b FROM ($CoTradeRows) r"
+
   def oracleSql: Map[String, String] = Map(
     "maintenance_compaction_plan" -> """
       WITH files AS (
@@ -1421,13 +1445,7 @@ object Profiling extends OpRegistry {
     "corpus_ingest_index" -> s"""
       WITH ${graft.llm.DedupOps.jaccardPairCtesFrom(
         "d AS (SELECT doc_id, text FROM documents)")},
-      ct AS (SELECT DISTINCT least(c_nationkey, s_nationkey) AS a,
-                    greatest(c_nationkey, s_nationkey) AS b
-             FROM lineitem
-               JOIN orders ON l_orderkey = o_orderkey
-               JOIN customer ON o_custkey = c_custkey
-               JOIN supplier ON l_suppkey = s_suppkey
-             WHERE c_nationkey <> s_nationkey),
+      ct AS ($CoTradePairs),
       bv AS (SELECT w FROM (
                SELECT unnest(string_split(text, ' ')) AS w FROM documents)
              WHERE length(w) >= 2 AND regexp_matches(w, '^[a-z0-9]+$$')
@@ -1472,13 +1490,7 @@ object Profiling extends OpRegistry {
                               AS df_base
                      FROM sh GROUP BY 1)
                    WHERE df_base <= 100 AND df_all > 100),
-      ct AS (SELECT DISTINCT least(c_nationkey, s_nationkey) AS a,
-                    greatest(c_nationkey, s_nationkey) AS b
-             FROM lineitem
-               JOIN orders ON l_orderkey = o_orderkey
-               JOIN customer ON o_custkey = c_custkey
-               JOIN supplier ON l_suppkey = s_suppkey
-             WHERE c_nationkey <> s_nationkey),
+      ct AS ($CoTradePairs),
       bv AS (SELECT w FROM (
                SELECT unnest(string_split(text, ' ')) AS w FROM documents)
              WHERE length(w) >= 2 AND regexp_matches(w, '^[a-z0-9]+$$')
@@ -1625,15 +1637,8 @@ object Profiling extends OpRegistry {
       FROM orders WHERE o_orderkey NOT BETWEEN 1000 AND 5000
       GROUP BY 1 ORDER BY o_orderstatus""",
 
-    "graph_triangles" -> """
-      WITH pairs AS (
-        SELECT DISTINCT least(c_nationkey, s_nationkey) AS a,
-                        greatest(c_nationkey, s_nationkey) AS b
-        FROM lineitem
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN supplier ON l_suppkey = s_suppkey
-        WHERE c_nationkey <> s_nationkey)
+    "graph_triangles" -> s"""
+      WITH pairs AS ($CoTradePairs)
       SELECT e1.a, COUNT(1) AS n_triangles
       FROM pairs e1
         JOIN pairs e2 ON e1.b = e2.a
@@ -1641,14 +1646,7 @@ object Profiling extends OpRegistry {
       GROUP BY e1.a ORDER BY e1.a""",
 
     "graph_jaccard_neighbors" -> s"""
-      WITH pairs AS (
-        SELECT DISTINCT least(c_nationkey, s_nationkey) AS a,
-                        greatest(c_nationkey, s_nationkey) AS b
-        FROM lineitem
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN supplier ON l_suppkey = s_suppkey
-        WHERE c_nationkey <> s_nationkey),
+      WITH pairs AS ($CoTradePairs),
       dir2 AS (
         SELECT a AS src, b AS dst FROM pairs
         UNION ALL
@@ -1669,14 +1667,7 @@ object Profiling extends OpRegistry {
       ORDER BY c.a, c.b""",
 
     "graph_degree_stats" -> s"""
-      WITH pairs AS (
-        SELECT DISTINCT least(c_nationkey, s_nationkey) AS a,
-                        greatest(c_nationkey, s_nationkey) AS b
-        FROM lineitem
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN supplier ON l_suppkey = s_suppkey
-        WHERE c_nationkey <> s_nationkey),
+      WITH pairs AS ($CoTradePairs),
       dir2 AS (
         SELECT a AS src, b AS dst FROM pairs
         UNION ALL
@@ -1691,15 +1682,8 @@ object Profiling extends OpRegistry {
       FROM deg JOIN nbr ON node = src
       ORDER BY node""",
 
-    "graph_pagerank_iter" -> """
-      WITH pairs AS (
-        SELECT DISTINCT least(c_nationkey, s_nationkey) AS a,
-                        greatest(c_nationkey, s_nationkey) AS b
-        FROM lineitem
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN supplier ON l_suppkey = s_suppkey
-        WHERE c_nationkey <> s_nationkey),
+    "graph_pagerank_iter" -> s"""
+      WITH pairs AS ($CoTradePairs),
       dir2 AS (
         SELECT a AS src, b AS dst FROM pairs
         UNION ALL
@@ -1749,16 +1733,10 @@ object Profiling extends OpRegistry {
       FROM j WHERE chg
       ORDER BY c_custkey, valid_from, is_current""",
 
-    "graph_bfs_distance" -> """
+    "graph_bfs_distance" -> s"""
       WITH RECURSIVE e AS (
-        SELECT l_orderkey,
-               CAST(least(c_nationkey, s_nationkey) AS BIGINT) AS a,
-               CAST(greatest(c_nationkey, s_nationkey) AS BIGINT) AS b
-        FROM lineitem
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN supplier ON l_suppkey = s_suppkey
-        WHERE c_nationkey <> s_nationkey),
+        SELECT l_orderkey, CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b
+        FROM ($CoTradeRows) r),
       w AS (SELECT a, b, COUNT(DISTINCT l_orderkey) AS w FROM e GROUP BY 1, 2),
       dw AS (SELECT a AS src, b AS dst, w FROM w
              UNION ALL
@@ -1788,15 +1766,8 @@ object Profiling extends OpRegistry {
     // Materialization pins each level to one evaluation (node-sized after
     // dir2), which is also exactly what the Spark side's localCheckpoint
     // does.
-    "graph_kcore_peel" -> """
-      WITH pairs AS MATERIALIZED (
-        SELECT DISTINCT least(c_nationkey, s_nationkey) AS a,
-                        greatest(c_nationkey, s_nationkey) AS b
-        FROM lineitem
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN supplier ON l_suppkey = s_suppkey
-        WHERE c_nationkey <> s_nationkey),
+    "graph_kcore_peel" -> s"""
+      WITH pairs AS MATERIALIZED ($CoTradePairs),
       dir2 AS MATERIALIZED (SELECT a AS src, b AS dst FROM pairs
                UNION ALL SELECT b AS src, a AS dst FROM pairs),
       d0 AS MATERIALIZED (SELECT src, COUNT(1) AS deg0 FROM dir2 GROUP BY 1),
@@ -1817,15 +1788,10 @@ object Profiling extends OpRegistry {
       FROM d0 LEFT JOIN core ON d0.src = core.src
       ORDER BY node""",
 
-    "graph_reciprocity" -> """
+    "graph_reciprocity" -> s"""
       WITH arcs AS MATERIALIZED (
-        SELECT DISTINCT CAST(s_nationkey AS BIGINT) AS src,
-                        CAST(c_nationkey AS BIGINT) AS dst
-        FROM lineitem
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN supplier ON l_suppkey = s_suppkey
-        WHERE c_nationkey <> s_nationkey)
+        SELECT DISTINCT CAST(src AS BIGINT) AS src, CAST(dst AS BIGINT) AS dst
+        FROM ($CoTradeRows) r)
       SELECT a.src AS nation, COUNT(1) AS out_deg,
              CAST(SUM(CASE WHEN r.src IS NOT NULL THEN 1 ELSE 0 END)
                AS BIGINT) AS n_recip,
@@ -1835,16 +1801,10 @@ object Profiling extends OpRegistry {
       GROUP BY 1 ORDER BY nation""",
 
     // three unrolled synchronous rounds, identical argmax tiebreak
-    "graph_label_propagation" -> """
+    "graph_label_propagation" -> s"""
       WITH e AS (
-        SELECT l_orderkey,
-               CAST(least(c_nationkey, s_nationkey) AS BIGINT) AS a,
-               CAST(greatest(c_nationkey, s_nationkey) AS BIGINT) AS b
-        FROM lineitem
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN supplier ON l_suppkey = s_suppkey
-        WHERE c_nationkey <> s_nationkey),
+        SELECT l_orderkey, CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b
+        FROM ($CoTradeRows) r),
       w AS MATERIALIZED (
         SELECT a, b, COUNT(DISTINCT l_orderkey) AS w FROM e GROUP BY 1, 2),
       dw AS MATERIALIZED (SELECT a AS src, b AS dst, w FROM w
@@ -1886,14 +1846,8 @@ object Profiling extends OpRegistry {
 
     "graph_assortativity" -> s"""
       WITH e AS (
-        SELECT l_orderkey,
-               CAST(least(c_nationkey, s_nationkey) AS BIGINT) AS a,
-               CAST(greatest(c_nationkey, s_nationkey) AS BIGINT) AS b
-        FROM lineitem
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN supplier ON l_suppkey = s_suppkey
-        WHERE c_nationkey <> s_nationkey),
+        SELECT l_orderkey, CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b
+        FROM ($CoTradeRows) r),
       w AS MATERIALIZED (
         SELECT a, b, COUNT(DISTINCT l_orderkey) AS w FROM e GROUP BY 1, 2),
       dw AS (SELECT a AS src, b AS dst, w FROM w

@@ -32,14 +32,8 @@ object Subqueries extends OpRegistry {
     * which is the safety rail any production recursive query needs (an
     * unbounded recursion over a cyclic graph never terminates under
     * UNION ALL). */
-  private val RecursiveBfsSql = """
-    WITH RECURSIVE edges AS (
-      SELECT DISTINCT least(c_nationkey, s_nationkey) AS a,
-                      greatest(c_nationkey, s_nationkey) AS b
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN supplier ON l_suppkey = s_suppkey
-      WHERE c_nationkey <> s_nationkey),
+  private val RecursiveBfsSql = s"""
+    WITH RECURSIVE edges AS (${Profiling.CoTradePairs}),
     bfs(n, hop) AS (
       SELECT CAST(0 AS INT) AS n, 0 AS hop
       UNION ALL

@@ -77,6 +77,34 @@ class ExpressionSpec extends GraftSuite {
     assert(rows(1).distinct == rows(1) && rows(1).nonEmpty)
   }
 
+  test("TermCounts equals explode + groupBy count on every sf0.01 doc + edges") {
+    val docs = spark.read.parquet(new java.io.File(sfDir).getParent + "/sf0.01/documents.parquet")
+      .select($"doc_id", $"text")
+    val edge = Seq[(Long, Option[String])](
+      (-1L, Some("")),                           // one empty token
+      (-2L, Some(" a  b a ")),                   // leading/trailing/double spaces
+      (-3L, Some("héllo wörld héllo 日本 日本 日本")), // multibyte terms
+      (-4L, None))                               // NULL text: no rows
+      .toDF("doc_id", "text")
+    val all = docs.union(edge)
+    val toks = split($"text", " ")
+    val kernel = all.select($"doc_id", inline(GraftExpressions.termCounts(toks)))
+    val declarative = all.select($"doc_id", explode(toks).as("term"))
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+    assert(kernel.count() == declarative.count() && kernel.count() > edge.count())
+    assert(kernel.exceptAll(declarative).isEmpty && declarative.exceptAll(kernel).isEmpty,
+      "kernel (doc_id, term, tf) rows diverge from explode + groupBy count")
+    // first-occurrence order, through the registered SQL name
+    GraftExpressions.register(spark)
+    val rows = edge.selectExpr(s"${GraftExpressions.TermCountsName}(split(text, ' ')) AS tc")
+      .collect().map(r => if (r.isNullAt(0)) null
+        else r.getSeq[org.apache.spark.sql.Row](0).map(x => (x.getString(0), x.getLong(1))))
+    assert(rows(0) == Seq(("", 1L)))
+    assert(rows(1) == Seq(("", 3L), ("a", 2L), ("b", 1L)))
+    assert(rows(2) == Seq(("héllo", 2L), ("wörld", 1L), ("日本", 3L)))
+    assert(rows(3) == null)
+  }
+
   test("charBigramArray equals the quadratic substring formulation on every doc + edges") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val naive = expr(

@@ -285,6 +285,27 @@ class LlmOpsSpec extends GraftSuite {
     assert(d3.getAs[String]("top_bigram") == "b a" && d3.getAs[Long]("top_bigram_cnt") == 2L)
   }
 
+  test("text_tfidf_top: hand-computed scores, term tie-break, short doc, df = n_docs") {
+    import graft.llm.TextOps
+    // n_docs 3; df: a 3 (every doc, score 0), b 2, c 2, d 1, e 1
+    val docs = Seq(
+      (1L, "a a b c d d"), // d tf 2 → 2·ln3; b and c tie at ln1.5 → b first
+      (2L, "a b"),         // two distinct terms → two rows
+      (3L, "a c e"))
+      .toDF("doc_id", "text")
+    val tmp = TestSpark.tempDir("graft_tfidf_")
+    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    val got = TextOps.queries("text_tfidf_top")(spark, tmp).collect().map(r =>
+      (r.getAs[Long]("doc_id"), r.getAs[String]("term"), r.getAs[Long]("tf"),
+        r.getAs[Long]("df"), r.getAs[Double]("score"), r.getAs[Int]("rn"))).toSeq
+    assert(got == Seq(
+      (1L, "d", 2L, 1L, 2.197225, 1), (1L, "b", 1L, 2L, 0.405465, 2),
+      (1L, "c", 1L, 2L, 0.405465, 3),
+      (2L, "b", 1L, 2L, 0.405465, 1), (2L, "a", 1L, 3L, 0.0, 2),
+      (3L, "e", 1L, 1L, 1.098612, 1), (3L, "c", 1L, 2L, 0.405465, 2),
+      (3L, "a", 1L, 3L, 0.0, 3)), got.mkString("\n"))
+  }
+
   test("text_hashed_features: hand-computed buckets, lowest-bucket tie-break") {
     import graft.llm.TextOps
     // rollingHash31("a") = 17*31+97 = 624 ≡ 0 (mod 16); 'b'→1, 'c'→2 —

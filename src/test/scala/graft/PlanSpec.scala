@@ -71,20 +71,25 @@ class PlanSpec extends GraftSuite {
       s"o_orderstatus filter must be a PartitionFilter, not a data filter:\n$p")
   }
 
-  test("tf-idf: df computed inline — one token pass, no df join at all") {
-    // r20: the df aggregate became a window count over the tf frame, so
-    // the plan must carry exactly ONE token explode (Generate) and no join
-    // of any kind for the df side — strictly stronger than the old pin
-    // (df broadcast, which still re-ran the token pass under the
-    // broadcast subtree).
+  test("tf-idf: per-doc term counts in the row, vocab-sized df, no term-keyed window") {
+    // tf comes from the term-count kernel, not a corpus-sized (doc_id,
+    // term) hash aggregate; df is a groupBy(term) over those rows joined
+    // back, not a window partitioned by term (whose partitions grow with a
+    // term's df); the per-doc top-3 keeps its map-side partial prune.
     val p = finalPlan("text_tfidf_top").split("== Initial Plan ==")(0)
-    assert("Generate explode".r.findAllIn(p).size == 1,
-      s"token explode must run exactly once:\n$p")
-    // the only join left is the 1-row nDocs broadcast cross join — no
-    // equi-join (i.e. no df join-back) may remain
-    assert(!p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin")
-        && !p.contains("ShuffledHashJoin"),
-      s"df must not be joined back:\n$p")
+    assert("HashAggregate\\(keys=\\[(doc_id#\\d+L?, term|term#\\d+, doc_id)".r.findFirstIn(p).isEmpty,
+      s"tf must not be a (doc_id, term) hash aggregate:\n$p")
+    assert(!p.contains("windowspecdefinition(term#"),
+      s"df must not be a window partitioned by term:\n$p")
+    assert("HashAggregate\\(keys=\\[term#\\d+\\], functions=\\[(partial_)?count".r
+        .findFirstIn(p).isDefined,
+      s"df must be a hash aggregate keyed on term alone:\n$p")
+    val generates = "Generate inline\\(graft_term_counts\\(".r.findAllIn(p).size
+    assert(generates >= 1 && generates <= 2,
+      s"expected one or two term-count Generates, got $generates:\n$p")
+    assert(!p.contains("Generate explode"), s"token explode is back:\n$p")
+    assert(p.contains("WindowGroupLimit") && p.contains("Partial"),
+      s"the per-doc top-3 lost its map-side partial prune:\n$p")
   }
 
   test("subqueries decorrelate to joins — never per-row subquery execution") {
