@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{DotQ, GraftExpressions, HllDistinct}
-import graft.plans.RewriteDotProduct
+import graft.plans.GraftOptimizations
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -12,9 +12,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *     .config("spark.sql.extensions", "graft.GraftExtensions")
   *
   * registers the `graft_dot_q` SQL function and the
-  * [[graft.plans.RewriteDotProduct]] optimizer rule on every session of the
-  * application — the production path on a real cluster, where the session is
-  * built once in the job entrypoint. For a session graft did NOT build (the
+  * [[graft.plans.RewriteDotProduct]] and [[graft.plans.SmallSortOneTask]]
+  * optimizer rules on every session of the application — the production
+  * path on a real cluster, where the session is built once in the job
+  * entrypoint. For a session graft did NOT build (the
   * driver harness passes one in), the runtime equivalents are
   * `GraftExpressions.register(spark)` + `GraftOptimizations.install(spark)`.
   */
@@ -28,6 +29,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier(GraftExpressions.HllName),
       new ExpressionInfo(classOf[HllDistinct].getName, GraftExpressions.HllName),
       (exprs: Seq[Expression]) => HllDistinct(exprs.head)))
-    ext.injectOptimizerRule(_ => RewriteDotProduct)
+    GraftOptimizations.rules.foreach(rule => ext.injectOptimizerRule(_ => rule))
   }
 }

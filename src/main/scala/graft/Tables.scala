@@ -67,18 +67,21 @@ object Tables {
   /** Name, length and modification time of every file under `path` (the
     * file itself for a single-file path), sorted; None when it does not
     * exist. Listed through the path's Hadoop file system, so local and
-    * shared storage are fingerprinted alike. */
+    * shared storage are fingerprinted alike. The walk uses `listStatus`,
+    * not `listFiles`: the latter's `LocatedFileStatus` copies each file's
+    * permission and owner, which Hadoop's local file system reads by
+    * forking `ls -ld` per file. */
   private[graft] def fingerprint(spark: SparkSession, path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    try {
-      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
-      val files = Seq.newBuilder[String]
-      while (it.hasNext) {
-        val f = it.next()
-        files += s"${f.getPath}:${f.getLen}:${f.getModificationTime}"
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    def walk(fs: FileSystem, dir: Path): Seq[String] =
+      fs.listStatus(dir).toSeq.flatMap { f =>
+        if (f.isDirectory) walk(fs, f.getPath)
+        else Seq(s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
       }
-      Some(files.result().sorted.mkString(","))
-    } catch { case _: java.io.FileNotFoundException => None }
+    val p = new Path(path)
+    try Some(walk(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+      .sorted.mkString(","))
+    catch { case _: java.io.FileNotFoundException => None }
   }
 
   /** Fixture-representation shim for `events.ts`. The generator has shipped

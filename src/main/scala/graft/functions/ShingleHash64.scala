@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -18,13 +18,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * xxhash64 seed (42), same first-occurrence order of distinct values — but
   * in ONE eval: one tokenize, a reused byte buffer per shingle, a hash set
   * for dedup. The HOF chain allocates a slice array + joined string per
-  * shingle and is itself CodegenFallback (HigherOrderFunctions don't
-  * codegen), so this loses nothing to whole-stage codegen and removes ~5
-  * allocations per shingle from the hot path of jaccard_pairs,
-  * dedup_near_minhash and dedup_components.
+  * shingle; the kernel removes those ~5 allocations per shingle from the
+  * hot path of jaccard_pairs, dedup_near_minhash and dedup_components.
+  *
+  * The generated code calls [[hashes]] on this expression: a
+  * `CodegenFallback` would keep the whole operator holding it (the
+  * `Generate explode(...)` over the shingle array) out of whole-stage
+  * codegen, because Spark's `CollapseCodegenStages` only fuses operators
+  * none of whose expressions fall back.
   */
-case class ShingleHash64(child: Expression)
-  extends UnaryExpression with CodegenFallback {
+case class ShingleHash64(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
@@ -36,10 +39,18 @@ case class ShingleHash64(child: Expression)
 
   private val Space = UTF8String.fromString(" ")
 
-  override protected def nullSafeEval(input: Any): Any = {
+  override protected def nullSafeEval(input: Any): Any = hashes(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val kernel = ctx.addReferenceObj("shingleHash64", this)
+    defineCodeGen(ctx, ev, text => s"$kernel.hashes($text)")
+  }
+
+  /** The kernel: distinct shingle hashes of a non-NULL text. */
+  def hashes(text: UTF8String): ArrayData = {
     // Spark's split(text, ' ') is Java regex split with limit -1 (trailing
     // empty tokens KEPT); UTF8String.split has the same semantics.
-    val toks = input.asInstanceOf[UTF8String].split(Space, -1)
+    val toks = text.split(Space, -1)
     val n = toks.length
     if (n < 3) return new GenericArrayData(Array.empty[Long])
     val seen = new java.util.LinkedHashSet[java.lang.Long]()

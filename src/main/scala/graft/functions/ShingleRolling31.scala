@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -35,12 +36,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * All arithmetic is exact in longs: acc < 2^31 and 31^len mod 2^31 < 2^31
   * keep every product under 2^62.
   *
-  * CodegenFallback like [[ShingleHash64]]: array-producing kernels gain
-  * nothing from WSCG (the cost is inside the one eval), and the fallback
-  * keeps the surrounding stage codegen-able.
+  * The generated code calls [[hashes]] on this expression, as
+  * [[ShingleHash64]]'s does: a `CodegenFallback` would keep the whole
+  * operator holding it (the `Generate (pos)explode(...)`) out of
+  * whole-stage codegen.
   */
 case class ShingleRolling31(child: Expression, distinct: Boolean)
-  extends UnaryExpression with CodegenFallback {
+  extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
@@ -60,16 +62,26 @@ case class ShingleRolling31(child: Expression, distinct: Boolean)
     * (Round16Spec's null differential). Downstream is indistinguishable
     * anyway: every consumer explodes, and explode drops both. */
   override def nullable: Boolean = false
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) new GenericArrayData(Array.empty[Long]) else nullSafeEval(v)
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    hashes(child.eval(input).asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val kernel = ctx.addReferenceObj("shingleRolling31", this)
+    val text = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${text.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} =
+      |  $kernel.hashes(${text.isNull} ? null : ${text.value});""".stripMargin,
+      isNull = FalseLiteral)
   }
 
-  override protected def nullSafeEval(input: Any): Any = {
+  /** The kernel: shingle hashes of a text, empty for NULL. */
+  def hashes(text: UTF8String): ArrayData = {
+    if (text == null) return new GenericArrayData(Array.empty[Long])
     // Spark's split(text, ' ') = Java regex split, limit -1 (trailing
     // empties kept); UTF8String.split matches (ShingleHash64 precedent,
     // equality asserted on the fixture by ExpressionSpec).
-    val toks = input.asInstanceOf[UTF8String].split(Space, -1)
+    val toks = text.split(Space, -1)
     val n = toks.length
     if (n < 3) return new GenericArrayData(Array.empty[Long])
     // Per-token polynomial hash (fold from 0) and 31^cpLen, both mod 2^31.

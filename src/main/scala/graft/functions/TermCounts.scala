@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -21,12 +21,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * `array_min`). Tokenizing stays with the caller (Spark's own
   * `split(text, ' ')`), so token semantics are Spark's.
   *
-  * NULL array → NULL; empty array → empty array. CodegenFallback like
-  * [[ShingleHash64]]: the cost is inside the one eval, and the fallback
-  * keeps the surrounding stage codegen-able.
+  * NULL array → NULL; empty array → empty array. The generated code calls
+  * [[count]] on this expression: a `CodegenFallback` would keep the whole
+  * operator holding it (the `Generate inline(...)` of text_tfidf_top, with
+  * its `split`) out of whole-stage codegen, because Spark's
+  * `CollapseCodegenStages` only fuses operators none of whose expressions
+  * fall back.
   */
-case class TermCounts(child: Expression)
-  extends UnaryExpression with CodegenFallback {
+case class TermCounts(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
@@ -43,8 +45,15 @@ case class TermCounts(child: Expression)
     StructField("tf", LongType, nullable = false))), containsNull = false)
   override def prettyName: String = "graft_term_counts"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(input: Any): Any = count(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val kernel = ctx.addReferenceObj("termCounts", this)
+    defineCodeGen(ctx, ev, arr => s"$kernel.count($arr)")
+  }
+
+  /** The kernel: (term, tf) of each distinct element of a non-NULL array. */
+  def count(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     // term → slot; slots are numbered in first-occurrence order
     val slot = new java.util.HashMap[UTF8String, Integer](math.max(16, n * 2))

@@ -59,15 +59,19 @@ object RewriteDotProduct extends Rule[LogicalPlan] {
 }
 
 /** Installer for sessions graft does not construct (the driver harness
-  * builds its own SparkSession): appends the rewrite to
-  * `spark.experimental.extraOptimizations`, which the optimizer runs as the
-  * final "User Provided Optimizers" batch. Idempotent. Sessions built from
-  * scratch can instead set `spark.sql.extensions=graft.GraftExtensions`.
+  * builds its own SparkSession): appends graft's rules ([[RewriteDotProduct]]
+  * and [[SmallSortOneTask]]) to `spark.experimental.extraOptimizations`,
+  * which the optimizer runs as the final "User Provided Optimizers" batch.
+  * Idempotent. Sessions built from scratch can instead set
+  * `spark.sql.extensions=graft.GraftExtensions`.
   */
 object GraftOptimizations {
+  val rules: Seq[Rule[LogicalPlan]] = Seq(RewriteDotProduct, SmallSortOneTask)
+
   def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(RewriteDotProduct))
+    val missing = rules.filterNot(spark.experimental.extraOptimizations.contains)
+    if (missing.nonEmpty)
       spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteDotProduct
+        spark.experimental.extraOptimizations ++ missing
   }
 }

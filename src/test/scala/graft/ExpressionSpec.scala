@@ -268,4 +268,29 @@ class ExpressionSpec extends GraftSuite {
     assert(codegenDotQ.findFirstIn(plan).isDefined,
       s"graft_dot_q not inside a WholeStageCodegen Project:\n$plan")
   }
+
+  /** The executed plan of registry op `op` holds `kernel` in a `Generate`
+    * that carries a WholeStageCodegen `*(n)` prefix, i.e. the kernel's
+    * operator is not left out of codegen as a fallback expression. */
+  private def assertGenerateInCodegen(op: String, generator: String, kernel: String): Unit = {
+    val df = q(op)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains(kernel), s"$kernel missing from the $op plan:\n$plan")
+    val inCodegen = s"\\*\\(\\d+\\) Generate $generator\\($kernel\\(".r
+    assert(inCodegen.findFirstIn(plan).isDefined,
+      s"$kernel not inside a WholeStageCodegen Generate:\n$plan")
+  }
+
+  test("TermCounts runs inside WholeStageCodegen in the text_tfidf_top plan") {
+    assertGenerateInCodegen("text_tfidf_top", "inline", "graft_term_counts")
+  }
+
+  test("ShingleHash64 runs inside WholeStageCodegen in the dedup_near_minhash plan") {
+    assertGenerateInCodegen("dedup_near_minhash", "explode", "graft_shingle_hash64")
+  }
+
+  test("ShingleRolling31 runs inside WholeStageCodegen in the text_winnowing_fingerprints plan") {
+    assertGenerateInCodegen("text_winnowing_fingerprints", "posexplode", "graft_shingle_rolling31")
+  }
 }

@@ -1,9 +1,11 @@
 package graft
 
 import graft.functions.DotQ
-import graft.plans.{GraftOptimizations, RewriteDotProduct}
+import graft.plans.{GraftOptimizations, RewriteDotProduct, SmallSortOneTask}
 import org.apache.spark.sql.{Column, DataFrame, GraftExtensionsProbe, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, Literal, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, RepartitionByExpression, Sort}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType}
 
@@ -12,6 +14,11 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
   * native DotQ expression, (2) preserve semantics on every edge case the
   * HOF form defines (null array / null element / length mismatch / empty),
   * and (3) leave any non-matching aggregate untouched.
+  *
+  * graft.plans.SmallSortOneTask must sort a broadcast-sized input in one
+  * task — one job fewer, the same rows in the same order — and
+  * leave top-k sorts, streaming plans and a threshold that excludes the
+  * input as they were.
   */
 class OptimizerRuleSpec extends GraftSuite {
 
@@ -114,9 +121,64 @@ class OptimizerRuleSpec extends GraftSuite {
     val wire = (ext: org.apache.spark.sql.SparkSessionExtensions) => new GraftExtensions()(ext)
     val rules = GraftExtensionsProbe.optimizerRules(spark, wire)
     assert(rules.contains(RewriteDotProduct), s"rules were: $rules")
+    assert(rules.contains(SmallSortOneTask), s"rules were: $rules")
     val arr = Literal.create(Seq(2L, 3L), ArrayType(LongType, containsNull = false))
     val resolved = GraftExtensionsProbe.resolveFunction(wire, "graft_dot_q", Seq(arr, arr))
     assert(resolved.isInstanceOf[DotQ], s"resolved to ${resolved.getClass}")
     assert(resolved.eval(null) == 13L)
+  }
+
+  private def oneTaskSorts(p: LogicalPlan): Int =
+    p.collect { case Sort(_, true, RepartitionByExpression(_, _, Some(1), _), _) => 1 }.sum
+
+  /** Spark plans a one-partition repartition by range as a single-partition
+    * exchange: no range bounds, so no sampling job. */
+  private def sortsInOneTask(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.executedPlan.toString
+    plan.contains("Exchange SinglePartition, REPARTITION_BY_NUM") &&
+      !plan.contains("rangepartitioning")
+  }
+
+  test("small global sort: one task, one job fewer, same rows in order (jaccard_pairs)") {
+    def run(s: SparkSession): (DataFrame, Seq[org.apache.spark.sql.Row], Int) = {
+      SparkEntry.queries("jaccard_pairs")(s, sfDir).collect() // lands the shared artifact
+      val df = SparkEntry.queries("jaccard_pairs")(s, sfDir)
+      val (rows, jobs) = jobsDuring(df.collect().toSeq)
+      (df, rows, jobs)
+    }
+    val (ruled, got, ruledJobs) = run(optimized)
+    val (plain, want, plainJobs) = run(spark)
+    assert(oneTaskSorts(ruled.queryExecution.optimizedPlan) == 1,
+      ruled.queryExecution.optimizedPlan.toString)
+    assert(sortsInOneTask(ruled), ruled.queryExecution.executedPlan.toString)
+    assert(!sortsInOneTask(plain), plain.queryExecution.executedPlan.toString)
+    assert(oneTaskSorts(plain.queryExecution.optimizedPlan) == 0)
+    assert(ruledJobs == plainJobs - 1, s"jobs with the rule $ruledJobs, without $plainJobs")
+    assert(got.nonEmpty && got == want)
+  }
+
+  test("small sort rule leaves a top-k sort, a streaming plan and an excluding threshold alone") {
+    import spark.implicits._
+    val path = parquet((1L to 50L).map(i => (i % 7, i)).toDF("k", "v"))
+    def sorted(s: SparkSession): DataFrame = s.read.parquet(path).orderBy(col("k"), col("v"))
+    assert(oneTaskSorts(sorted(optimized).queryExecution.optimizedPlan) == 1)
+    val topK = sorted(optimized).limit(3)
+    assert(oneTaskSorts(topK.queryExecution.optimizedPlan) == 0)
+    assert(topK.queryExecution.executedPlan.toString.contains("TakeOrderedAndProject"))
+    assert(topK.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      Seq((0L, 7L), (0L, 14L), (0L, 21L)))
+    for (bytes <- Seq("1", "-1")) withConf("spark.sql.autoBroadcastJoinThreshold", bytes, optimized) {
+      val df = sorted(optimized)
+      assert(oneTaskSorts(df.queryExecution.optimizedPlan) == 0, s"threshold $bytes")
+      assert(!sortsInOneTask(df))
+    }
+    // the same small sort over a batch and over a streaming relation
+    val k = AttributeReference("k", LongType)()
+    def sortOver(streaming: Boolean): LogicalPlan = Sort(Seq(SortOrder(k, Ascending)), global = true,
+      LocalRelation(Seq(k), Seq(InternalRow(2L), InternalRow(1L)), isStreaming = streaming))
+    val batch = SmallSortOneTask(sortOver(streaming = false))
+    assert(oneTaskSorts(batch) == 1)
+    assert(SmallSortOneTask(batch) == batch, "a second pass must not stack a second repartition")
+    assert(SmallSortOneTask(sortOver(streaming = true)) == sortOver(streaming = true))
   }
 }

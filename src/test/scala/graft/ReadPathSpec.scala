@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
 import java.util.concurrent.atomic.AtomicInteger
@@ -13,32 +12,6 @@ import java.util.concurrent.atomic.AtomicInteger
   * parallel builds that stop their Spark work when a sibling fails. */
 class ReadPathSpec extends GraftSuite {
   import spark.implicits._
-
-  /** Spark jobs started while `body` runs, counted once the listener bus
-    * has delivered every event. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      ListenerBusDrain(sc)
-      (out, n.get())
-    } finally sc.removeSparkListener(listener)
-  }
-
-  private def withConf[T](k: String, v: String)(body: => T): T = {
-    val prev = spark.conf.getOption(k)
-    spark.conf.set(k, v)
-    try body finally prev match {
-      case Some(p) => spark.conf.set(k, p)
-      case None => spark.conf.unset(k)
-    }
-  }
 
   test("a second load of a table launches no Spark job and has the inferred schema") {
     val dir = TestSpark.tempDir("readpath_load")
@@ -127,6 +100,29 @@ class ReadPathSpec extends GraftSuite {
     Seq(1L, 2L, 3L).toDF("id").write.mode("overwrite").parquet(s"$dir/docs.parquet")
     assert(artifact.count() == 20L, "the rewritten corpus served its old artifact")
     assert(builds.get() == 2)
+  }
+
+  test("the corpus fingerprint of a nested directory equals its recursive listFiles listing") {
+    val dir = TestSpark.tempDir("readpath_fingerprint")
+    Seq((1L, "a"), (2L, "b")).toDF("k", "s").write.partitionBy("s").parquet(s"$dir/t.parquet")
+    Seq(3L).toDF("k").write.parquet(s"$dir/t.parquet/s=c/deeper")
+    def listed(path: String): String = {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      val files = Seq.newBuilder[String]
+      while (it.hasNext) {
+        val f = it.next()
+        files += s"${f.getPath}:${f.getLen}:${f.getModificationTime}"
+      }
+      files.result().sorted.mkString(",")
+    }
+    val nested = Tables.fingerprint(spark, s"$dir/t.parquet")
+    assert(nested.contains(listed(s"$dir/t.parquet")))
+    assert(nested.get.contains("/s=c/deeper/") && nested.get.contains("_SUCCESS"), nested.get)
+    val file = new java.io.File(s"$dir/t.parquet/s=a").listFiles().map(_.getPath)
+      .find(_.endsWith(".parquet")).get
+    assert(Tables.fingerprint(spark, file).contains(listed(file)))
+    assert(Tables.fingerprint(spark, s"$dir/missing").isEmpty)
   }
 
   test("a repeated streaming query compiles no new code and restores the caller's settings") {

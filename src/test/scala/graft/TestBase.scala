@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Shared local test session (the mains' [[GraftSession]], without
   * the optimizer rules). */
@@ -20,4 +23,31 @@ abstract class GraftSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sfDir: String = TestSpark.sfDir
   def q(name: String) = SparkEntry.queries(name)(spark, sfDir)
+
+  /** Spark jobs started while `body` runs, counted once the listener bus
+    * has delivered every event. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerBusDrain(sc)
+      (out, n.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Runs `body` with setting `k` = `v` on session `s`, then restores it. */
+  def withConf[T](k: String, v: String, s: SparkSession = spark)(body: => T): T = {
+    val prev = s.conf.getOption(k)
+    s.conf.set(k, v)
+    try body finally prev match {
+      case Some(p) => s.conf.set(k, p)
+      case None => s.conf.unset(k)
+    }
+  }
 }
