@@ -151,7 +151,7 @@ object Bench {
               samples(name) = samples.getOrElse(name, Nil)
               failed += name
               System.err.println(s"[bench] $name FAILED (rep $rep): ${e.getClass.getSimpleName}: ${e.getMessage}")
-          }
+          } finally Pin.release(spark)
         }
       }
       // a query that failed ANY rep reports -1 (failure stays distinguishable

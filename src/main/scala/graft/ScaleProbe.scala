@@ -659,14 +659,9 @@ object ScaleProbe {
         // read — the pipeline shape being measured, honestly attributed
         if (op == allOps.head)
           llm.TextOps.clearCandidateArtifacts()
-        // free pinned localCheckpoint blocks from the PREVIOUS op: the
-        // iterative ops (CC, k-means, power iteration) pin lineage
-        // blocks that outlive their query; across a 40+-op sweep at 200×
-        // the accumulated storage starved execution memory and OOMed the
-        // first op of the pass (jaccard_pairs — it completes standalone
-        // on the same corpus). Parquet-landed artifacts are unaffected.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        // a pin lives for one op: across a 40+-op sweep at 200× the
+        // previous ops' pins starved execution memory
+        Pin.release(spark)
         val t0 = System.nanoTime()
         // name the failing op instead of dying mid-sweep: the first 200×
         // attempt OOMed anonymously ~8 ops in and cost the whole run's

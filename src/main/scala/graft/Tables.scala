@@ -181,20 +181,14 @@ object Helpers {
     * TOTAL order (callers carry a key tiebreak); global row_number is the
     * weight-1 case. Output column is LongType.
     *
-    * The ranged frame is PINNED here (localCheckpoint — ADVICE r18): the
-    * per-shard totals and the final join both reference the
-    * repartitionByRange+spark_partition_id subtree, and without a pin
-    * correctness would rely on that exchange re-executing with identical
-    * __pid boundaries — true only for deterministic inputs, a precondition
-    * a future caller could silently break. Pinning also executes the range
-    * exchange ONCE instead of once per referencing branch. Callers still
-    * pin their own expensive upstream aggregates (repartitionByRange's
-    * boundary sampling reads its input an extra time regardless). */
+    * The ranged frame is pinned ([[Pin.shared]]): the per-shard totals and
+    * the final join both read it, and unpinned, correctness would rely on
+    * the range exchange re-running with identical __pid boundaries, true
+    * only for deterministic inputs. */
   def rangedCumSum(df: DataFrame, weight: Column, sort: Seq[Column],
       out: String): DataFrame = {
-    val parted = df.repartitionByRange(sort: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
+    val parted = Pin.shared(df.repartitionByRange(sort: _*)
+      .withColumn("__pid", spark_partition_id()))
     val w = Window.partitionBy(col("__pid")).orderBy(sort: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val ptot = parted.groupBy(col("__pid"))

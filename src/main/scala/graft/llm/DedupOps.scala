@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{OpRegistry, Store}
+import graft.{OpRegistry, Pin, Store}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -63,14 +63,10 @@ object DedupOps extends OpRegistry {
     * with doc_id % 50 = 7 (a batch doc under the % 10 = 7 split) carries
     * the TEXT of its base-corpus neighbor doc_id − 1. Mirrored verbatim
     * in the oracles' `d` CTE. */
-  /** [[plantedDocs]] LANDED once per corpus dir (r20, VERDICT r19 #6): six
-    * dedup ops consume the same join-built planted frame; r19 pinned it
-    * per-op via localCheckpoint — non-reliable executor-memory state that
-    * an executor loss kills and that competes with execution memory at
-    * 100 TB. CorpusArtifacts is the repo's disk-backed idiom for exactly
-    * this shape (first consumer per bench pass pays the build — honest
-    * measurement unchanged; consumers' id filters push down on the
-    * parquet read). */
+  /** [[plantedDocs]] landed once per corpus dir: six dedup ops consume the
+    * same join-built planted frame, so it outlives an op and is a corpus
+    * artifact, not a pin (first consumer per bench pass pays the build;
+    * consumers' id filters push down on the parquet read). */
   private[graft] def landedPlantedDocs(s: SparkSession, dir: String): DataFrame =
     graft.CorpusArtifacts.parquet(s, "planted_docs", dir)(
       plantedDocs(tWide(s, dir)("documents").select("doc_id", "text")))
@@ -177,7 +173,7 @@ object DedupOps extends OpRegistry {
     * is non-increasing and strictly decreases whenever the set changed;
     * equal count + equal potential therefore proves the fixpoint without
     * the extra shuffle-heavy `except` job a set-equality check costs.
-    * Lineage is truncated per round (localCheckpoint), or the plan would
+    * Lineage is truncated per round ([[Pin.shared]]), or the plan would
     * double every iteration.
     *
     * @param nodes single column `node` — every vertex, including isolated
@@ -202,12 +198,7 @@ object DedupOps extends OpRegistry {
       (r.getLong(0),
         if (r.isNullAt(1)) java.math.BigDecimal.ZERO else r.getDecimal(1))
     }
-    // LAZY localCheckpoint (r19 optimization round): the eager form runs a
-    // dedicated materialization job per round; the potential() aggregate
-    // right below is already a full pass over the same frame, so let THAT
-    // action materialize the checkpoint — one job per round instead of
-    // two, with identical lineage truncation.
-    var edges = pairs.localCheckpoint(false)
+    var edges = Pin.shared(pairs)
     var (edgeCount, edgePot) = potential(edges)
     var rounds = 0
     var converged = false
@@ -225,7 +216,7 @@ object DedupOps extends OpRegistry {
         .select(col("m").as("a"), col("v").as("b"))
         .union(m2.select(col("m").as("a"), col("u").as("b")))
         .filter(col("a") =!= col("b")).distinct()
-        .localCheckpoint(false) // materialized by potential() below
+        .transform(Pin.shared)
       val (n2, pot2) = potential(ss)
       converged = n2 == edgeCount && pot2.compareTo(edgePot) == 0
       edges = ss
@@ -255,7 +246,7 @@ object DedupOps extends OpRegistry {
     * per branch. Returns the edges read back. */
   private[graft] def landBaseStore(docs: DataFrame, dir: String): DataFrame = {
     val s = docs.sparkSession
-    TextOps.jaccardEdges(docs, pin = true)
+    TextOps.jaccardFilter(TextOps.overlapPairs(Pin.shared(TextOps.cappedPostings(docs))))
       .select(col("id1").as("a"), col("id2").as("b"))
       .write.mode("overwrite").parquet(s"$dir/edges")
     val edges = graft.Tables.readParquet(s, s"$dir/edges")
@@ -277,12 +268,10 @@ object DedupOps extends OpRegistry {
     * {labels, new ids} is the minimum over all its members — the labels a
     * full rebuild over the union would give.
     *
-    * Pin rule, the same for every caller: the contracted edges and the
-    * sub-labels are pinned lazily (`localCheckpoint(false)`). Both are
-    * bounded by the new edges, and each is read more than once (the edges
-    * by the touched set and the CC, the sub-labels by the caller's output
-    * branches); the CC's first convergence check and the caller's first
-    * action materialize them, so neither pin costs a job of its own.
+    * The contracted edges and the sub-labels are pinned ([[Pin.shared]]):
+    * both are bounded by the new edges, and each is read more than once
+    * (the edges by the touched set and the CC, the sub-labels by the
+    * caller's output branches).
     *
     * @param labels landed labels, columns `doc_id`, `label`
     * @param edges new edges, columns `a`, `b`; each endpoint is a labelled
@@ -303,11 +292,10 @@ object DedupOps extends OpRegistry {
       .filter(col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("a"),
         greatest(col("u"), col("v")).as("b")).distinct()
-      .localCheckpoint(false)
+      .transform(Pin.shared)
     val touched = contracted.select(col("a").as("node"))
       .union(contracted.select(col("b").as("node"))).distinct()
-    connectedComponents(nodes.union(touched).distinct(), contracted)._1
-      .localCheckpoint(false)
+    Pin.shared(connectedComponents(nodes.union(touched).distinct(), contracted)._1)
   }
 
   /** Full labels (`doc_id`, `component_id`) after a [[mergeComponents]]:
@@ -387,8 +375,7 @@ object DedupOps extends OpRegistry {
       // candidate-pair artifact (TextOps.candidatePairs) shared with
       // jaccard_pairs / docs_split_leakage / text_fuzzy_pairs, so the
       // fact-sized candidate pass runs once per corpus, not per consumer;
-      // localCheckpoint then pins the pair-count-sized edges in memory for
-      // the CC iterations.
+      // the CC iterations pin the pair-count-sized edges.
       componentLabels(s, dir).orderBy("doc_id")
     }),
 
@@ -589,8 +576,7 @@ object DedupOps extends OpRegistry {
       // night's output); the nightly marginal cost is batch hashing + one
       // AQE-sized probe join on (band, bh) — it scales with the BATCH,
       // not the corpus. Output is the one-row ingest receipt.
-      // landed artifact, not a localCheckpoint pin (r20, VERDICT r19 #6):
-      // consumed by the key build and the batch-membership filter
+      // landed artifact: consumed by the key build and the batch-membership filter
       val docs = landedPlantedDocs(s, dir)
       // land the per-doc band keys ONCE (production stores signatures — it
       // never re-derives them per consumer): without this the shingle +
@@ -876,9 +862,8 @@ object DedupOps extends OpRegistry {
     * clear the memo per pass, so the first consumer pays the full build. */
   private[graft] def componentLabels(s: SparkSession, dir: String): DataFrame =
     graft.CorpusArtifacts.parquet(s, "components", dir) {
-      // no pin (r20 session 3): connectedComponents lazily checkpoints its
-      // input itself, and nothing outside the CC call reads `pairs` — the
-      // eager pin here was a redundant extra job + duplicate storage.
+      // no pin: connectedComponents pins its input itself, and nothing
+      // outside the CC call reads `pairs`
       val pairs = TextOps.candidatePairs(s, dir)
         .select(col("id1").as("a"), col("id2").as("b"))
       val docs = t(s, dir)("documents").select(col("doc_id").as("node"))

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.OpRegistry
+import graft.{OpRegistry, Pin}
 import graft.Helpers._
 import graft.functions.GraftExpressions.termCounts
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -129,17 +129,14 @@ object TextOps extends OpRegistry {
     * aggregate + anti-join, which re-tokenizes the corpus for a second full
     * pass).
     *
-    * `pin`: the list fans out to four consumers in [[overlapPairs]] (both
-    * self-join sides and both size lookups), and a lazy plan re-runs the
-    * shingle explode + df window per consumer when exchange reuse does not
-    * fire. A pinning caller lands the edges in ONE write action, which
-    * materializes the lazy pin once; the pin never outlives that write. */
-  private[graft] def cappedPostings(docs: DataFrame, pin: Boolean): DataFrame = {
+    * [[overlapPairs]] reads the list four times (both self-join sides and
+    * both size lookups), and AQE's exchange reuse does not fire across
+    * them, so its callers pin it ([[Pin.shared]]). */
+  private[graft] def cappedPostings(docs: DataFrame): DataFrame = {
     val sh = docs.select(col("doc_id"), explode(
       Shingling.shingleArray(col("text"), hashed = true)(docs.sparkSession)).as("sh_h"))
-    val capped = sh.withColumn("df", count(lit(1)).over(Window.partitionBy("sh_h")))
+    sh.withColumn("df", count(lit(1)).over(Window.partitionBy("sh_h")))
       .filter(col("df") <= MaxShingleDf).drop("df")
-    if (pin) capped.localCheckpoint(false) else capped
   }
 
   /** Part 2: (id1, id2, inter, n1, n2) for every pair id1 < id2 sharing a
@@ -181,9 +178,9 @@ object TextOps extends OpRegistry {
     pairs.filter(col("inter") * 2 > least(col("n1"), col("n2")))
 
   /** The df-capped exact-Jaccard edges (id1, id2, inter, uni) of a
-    * (doc_id, text) frame. */
-  private[graft] def jaccardEdges(docs: DataFrame, pin: Boolean): DataFrame =
-    jaccardFilter(overlapPairs(cappedPostings(docs, pin)))
+    * (doc_id, text) frame, unpinned: the plan shows every kernel step. */
+  private[graft] def jaccardEdges(docs: DataFrame): DataFrame =
+    jaccardFilter(overlapPairs(cappedPostings(docs)))
 
   /** Clears ALL landed artifacts (candidate edges + the graph family's
     * co-trade edges) — the per-pass honest-measurement hook Bench and
@@ -209,7 +206,7 @@ object TextOps extends OpRegistry {
     * independently, so the artifact never self-certifies. */
   private[graft] def candidatePairs(s: SparkSession, dir: String): DataFrame =
     graft.CorpusArtifacts.parquet(s, "edges", dir)(
-      jaccardEdges(tWide(s, dir)("documents"), pin = true))
+      jaccardFilter(overlapPairs(Pin.shared(cappedPostings(tWide(s, dir)("documents"))))))
 
   /** The landed bpe_vocab artifact — the full trainer's merge-table
     * product, (w, n_sym, n_char) per trained word (r17 review; factored
@@ -229,7 +226,7 @@ object TextOps extends OpRegistry {
     * guard-delimited symbol string after all merges) — text_bpe_merge_train
     * ships the former, text_bpe_apply consumes the latter. Loop
     * discipline = vec_kmeans_iter: the only corpus-sized pass is the word
-    * collapse; rounds run on the vocab-sized checkpointed frame with ONE
+    * collapse; rounds run on the vocab-sized pinned frame with ONE
     * argmax row collected per round. */
   private[graft] def bpeTrain(s: SparkSession, dir: String)
       : (Seq[(Int, String, String, Long)], DataFrame) =
@@ -248,7 +245,7 @@ object TextOps extends OpRegistry {
       .filter(col("n") >= floor)
     var vocab = words.select(col("w"),
       regexp_replace(col("w"), "(.)", "($1)").as("s"), col("n"))
-      .localCheckpoint()
+      .transform(Pin.shared)
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
     var r = 1
     var exhausted = false
@@ -420,7 +417,7 @@ object TextOps extends OpRegistry {
       // too; at 100 TB the minhash/LSH pass steers candidates here the
       // same way.
       containmentFilter(overlapPairs(
-          cappedPostings(tWide(s, dir)("documents"), pin = false)))
+          Pin.shared(cappedPostings(tWide(s, dir)("documents")))))
         .select(col("id1"), col("id2"), col("inter"), col("n1"), col("n2"),
           r6(col("inter").cast("double") / least(col("n1"), col("n2")))
             .as("cont6"))
@@ -1294,7 +1291,7 @@ object TextOps extends OpRegistry {
       // shape (the vec_kmeans_iter loop discipline): the ONLY corpus-sized
       // pass is the word-frequency collapse (classic BPE trains on the
       // word-count dict, not the corpus); every merge round then runs on
-      // the vocab-sized checkpointed frame, and per-round driver state is
+      // the vocab-sized pinned frame, and per-round driver state is
       // ONE argmax row — bounded model state, never a data collect.
       // Symbol mechanics: a word's symbol sequence travels as a
       // guard-delimited string "(c1)(c2)…"; merging pair (A,B) is

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.OpRegistry
+import graft.{OpRegistry, Pin}
 import graft.Helpers._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -33,9 +33,6 @@ object VectorOps extends OpRegistry {
 
   /** Hybrid sparse+dense retrieval kernel for `docs_hybrid_retrieval`,
     * factored so the spec can pin the full fusion math on a hand corpus.
-    * EAGER-CONSTRUCTION note (r17, ADVICE r16): pinning the universe runs
-    * a Spark job at DataFrame-construction time — see bm25TopK's note;
-    * Verify/Bench/ScaleProbe time construction+execution together.
     * Input: (doc_id, text) docs + (vec_id, embedding) vectors; the
     * candidate universe is their doc_id = vec_id join. Queries = docs with
     * doc_id < 5. Sparse = BM25 (text_bm25_topk's exact-integer kernel)
@@ -43,12 +40,10 @@ object VectorOps extends OpRegistry {
     * both top-20, RRF-fused (1e6 div (rank+60)), top-5 per query. */
   private[graft] def hybridRetrieval(s: SparkSession, docsIn: DataFrame,
       embIn: DataFrame,
-      pin: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
-    // `pin` materializes the doc⋈vector universe once for the four
-    // consumers below — the registry op lands it as a corpus artifact
-    // (r17, VERDICT r16 #1: a hybrid-search deployment's serving store IS
-    // this co-located table); spec drivers keep the localCheckpoint
-    // default for hand corpora.
+      pin: DataFrame => DataFrame = Pin.shared): DataFrame = {
+    // `pin` holds the doc⋈vector universe once for the four consumers
+    // below; the registry op lands it as a corpus artifact (a
+    // hybrid-search deployment's serving store IS this co-located table)
     val u = pin(hybridUniverseOf(docsIn, embIn))
     // dense branch: broadcast 5 query vectors, exact dot, top-20
     val qv = u.filter(col("doc_id") < 5)
@@ -171,8 +166,7 @@ object VectorOps extends OpRegistry {
     * plane/array length mismatch would silently null projections). */
   private[graft] def ivfCellsFrame(s: SparkSession, dir: String): DataFrame =
     graft.CorpusArtifacts.parquet(s, "ivf_cells", dir) {
-      val e = tWide(s, dir)("embeddings")
-        .select(col("vec_id"), quantize(col("embedding")).as("qe"))
+      val e = quantizedVectors(s, dir)
       val dim = t(s, dir)("embeddings").select(size(col("embedding"))).head().getInt(0) // plain t(): one-row probe, a repartition would force a full scan+shuffle
       def cellOf(qe: Column, tb: Int): Column =
         (0 until IvfPlanes).map { p =>
@@ -357,7 +351,7 @@ object VectorOps extends OpRegistry {
       // (struct ordering), mirrored by the oracle's ORDER BY dist, k.
       val dim = t(s, dir)("embeddings").select(size(col("embedding"))).head().getInt(0) // plain t(): one-row probe, a repartition would force a full scan+shuffle
       val subDim = dim / PqSubspaces
-      val e = tWide(s, dir)("embeddings").select(col("vec_id"), quantize(col("embedding")).as("qe"))
+      val e = quantizedVectors(s, dir)
       val perSub = (0 until PqSubspaces).map { m =>
         val sub = slice(col("qe"), m * subDim + 1, subDim)
         val subsq = dotQ(s, sub, sub)
@@ -376,7 +370,7 @@ object VectorOps extends OpRegistry {
     }),
 
     "knn_cosine_topk" -> ((s, dir) => {
-      val e = tWide(s, dir)("embeddings").select(col("vec_id"), quantize(col("embedding")).as("qe"))
+      val e = quantizedVectors(s, dir)
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("qe").as("qv"))
       val scored = broadcast(q).join(e, col("vec_id") =!= col("qid"))
@@ -409,8 +403,7 @@ object VectorOps extends OpRegistry {
         when(element_at(col("qe"), i + 1) >= 0,
           lit(if (i == 63) Long.MinValue else 1L << i)).otherwise(lit(0L)))
         .reduce(_ + _)
-      val e = tWide(s, dir)("embeddings")
-        .select(col("vec_id"), quantize(col("embedding")).as("qe"))
+      val e = quantizedVectors(s, dir)
         .withColumn("sig", sigBits)
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("qe").as("qv"), col("sig").as("qsig"))
@@ -460,8 +453,7 @@ object VectorOps extends OpRegistry {
         when(element_at(col("qe"), i + 1) >= 0,
           lit(if (i == 63) Long.MinValue else 1L << i)).otherwise(lit(0L)))
         .reduce(_ + _)
-      val e = tWide(s, dir)("embeddings")
-        .select(col("vec_id"), quantize(col("embedding")).as("qe"))
+      val e = quantizedVectors(s, dir)
         .withColumn("sig", sigBits)
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("qe").as("qv"), col("sig").as("qsig"))
@@ -540,8 +532,7 @@ object VectorOps extends OpRegistry {
       // (the prefix dot is a slice of the same quantized array — exact
       // integers, identical in any engine); both rank windows share the
       // qid exchange; the verdict agg collapses to |queries| rows.
-      val e = tWide(s, dir)("embeddings")
-        .select(col("vec_id"), quantize(col("embedding")).as("qe"))
+      val e = quantizedVectors(s, dir)
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("qe").as("qv"))
       val scored = broadcast(q).join(e, col("vec_id") =!= col("qid"))
@@ -564,8 +555,7 @@ object VectorOps extends OpRegistry {
     }),
 
     "sim_threshold_pairs" -> ((s, dir) => {
-      val e = tWide(s, dir)("embeddings").filter(col("vec_id") < 100)
-        .select(col("vec_id"), quantize(col("embedding")).as("qe"))
+      val e = quantizedVectors(s, dir).filter(col("vec_id") < 100)
       val a = e.select(col("vec_id").as("id1"), col("qe").as("q1"))
       val b = e.select(col("vec_id").as("id2"), col("qe").as("q2"))
       a.join(broadcast(b), col("id1") < col("id2"))
@@ -590,8 +580,7 @@ object VectorOps extends OpRegistry {
       // cells ((dot+1e12) div 5e10 ∈ 0..40 — shifting first keeps both
       // engines' integer division identical), cos_lo6 a display from the
       // small-int bucket only.
-      val e = tWide(s, dir)("embeddings").filter(col("vec_id") < 200)
-        .select(col("vec_id"), quantize(col("embedding")).as("qe"))
+      val e = quantizedVectors(s, dir).filter(col("vec_id") < 200)
       val a = e.select(col("vec_id").as("id1"), col("qe").as("q1"))
       val b = e.select(col("vec_id").as("id2"), col("qe").as("q2"))
       a.join(broadcast(b), col("id1") < col("id2"))
@@ -770,8 +759,7 @@ object VectorOps extends OpRegistry {
       // no natural exact-dup embeddings, so the op plants re-delivered
       // vectors (vec_id % 50 = 7 carries vec_id−1's embedding — the
       // plantedDocs discipline applied to the vector table).
-      val raw = tWide(s, dir)("embeddings")
-        .select(col("vec_id"), quantize(col("embedding")).as("qe"))
+      val raw = quantizedVectors(s, dir)
       val nb = raw.select((col("vec_id") + 1).as("vec_id"),
         col("qe").as("prev"))
       val v = raw.join(nb, Seq("vec_id"), "left")
@@ -924,16 +912,11 @@ object VectorOps extends OpRegistry {
       val Planes = IvfPlanes
       val M = IvfPqSubspaces
       val Shortlist = IvfPqShortlist
-      // r17 (VERDICT r16 #1): the trained codebook and the (postings +
-      // codes) index are LANDED corpus artifacts — built once per
-      // (session, corpus), parquet-read by every later run; the vector
-      // scan below serves the two artifact builds plus the query-panel
-      // fetch and the exact re-rank. localCheckpoint pins it once per
-      // op construction (the documented eager-construction exception):
-      // four consumers would otherwise re-scan+quantize the store.
-      // r18: the codebook-train + index-land kernel is factored into
-      // [[ivfPqArtifacts]] so corpus_ingest_index lands the same index.
-      val e0 = quantizedVectors(s, dir).localCheckpoint()
+      // The trained codebook and the (postings + codes) index are LANDED
+      // corpus artifacts ([[ivfPqArtifacts]], shared with
+      // corpus_ingest_index); the pinned vector scan serves the two
+      // artifact builds plus the query-panel fetch and the exact re-rank.
+      val e0 = Pin.shared(quantizedVectors(s, dir))
       val (trained, _, cells) = ivfPqArtifacts(s, dir, e0)
       // per-query ADC lookup table: lut[m][k] = ||q_m - c_{m,k}||² exact —
       // the native PqAdcLut expression (same 64 KB rationale as the encoder)
@@ -1000,9 +983,7 @@ object VectorOps extends OpRegistry {
       // convergence loop would be data-dependent and unmirrorable.
       val K = 8
       val Iters = 2
-      val e = tWide(s, dir)("embeddings")
-        .select(col("vec_id"), quantize(col("embedding")).as("qe"))
-        .localCheckpoint() // reused by every round: pin the scan+quantize
+      val e = Pin.shared(quantizedVectors(s, dir)) // read by every round
       var cents: Seq[(Int, Array[Long])] = e.filter(col("vec_id") < K)
         .orderBy("vec_id").collect()
         .map(r => (r.getLong(0).toInt, r.getSeq[Long](1).toArray)).toSeq
@@ -1051,9 +1032,7 @@ object VectorOps extends OpRegistry {
       import org.apache.spark.sql.types.DecimalType
       val d380 = DecimalType(38, 0)
       val dim = t(s, dir)("embeddings").select(size(col("embedding"))).head().getInt(0)
-      val e = tWide(s, dir)("embeddings")
-        .select(col("vec_id"), quantize(col("embedding")).as("qe"))
-        .localCheckpoint()
+      val e = Pin.shared(quantizedVectors(s, dir))
       var v: Array[Long] = Array.fill(dim)(1000L)
       val rounds = scala.collection.mutable.ArrayBuffer[Array[Long]]()
       for (_ <- 0 until 2) {
@@ -1088,9 +1067,7 @@ object VectorOps extends OpRegistry {
       import org.apache.spark.sql.types.DecimalType
       val d380 = DecimalType(38, 0)
       val dim = t(s, dir)("embeddings").select(size(col("embedding"))).head().getInt(0)
-      val e = tWide(s, dir)("embeddings")
-        .select(col("vec_id"), quantize(col("embedding")).as("qe"))
-        .localCheckpoint()
+      val e = Pin.shared(quantizedVectors(s, dir))
       def normalize(w: Map[Int, Double]): Array[Long] = {
         val m = (0 until dim).map(i => math.abs(w(i))).max
         (0 until dim).map(i => math.floor(w(i) / m * 1000 + 0.5).toLong).toArray
@@ -1157,7 +1134,7 @@ object VectorOps extends OpRegistry {
       val nVecs = t(s, dir)("embeddings").count()
       val Planes = math.max(3,
         math.ceil(math.log(nVecs / 250.0) / math.log(2)).toInt)
-      val e = tWide(s, dir)("embeddings").select(col("vec_id"), quantize(col("embedding")).as("qe"))
+      val e = quantizedVectors(s, dir)
       // (3) the cell signature is the native SignPlanes kernel — constant
       // generated-code size in the plane count. The unrolled
       // when(dot_q ≥ 0, 1<<p) chain at 10 planes × 8 tables compiled fine
@@ -1278,8 +1255,7 @@ object VectorOps extends OpRegistry {
       // why production decontamination is exact against the eval suite
       // rather than ANN-approximate.
       val Threshold = 350000000000L // 0.35 in quantized dot units
-      val e = tWide(s, dir)("embeddings")
-        .select(col("vec_id"), quantize(col("embedding")).as("qe"))
+      val e = quantizedVectors(s, dir)
       // the id cap makes the eval suite genuinely FIXED-size (≤40 vectors
       // at any corpus size — the deployed contract); it is a no-op at
       // every fixture SF (max vec_id 1999). Without it the modular
@@ -1405,8 +1381,7 @@ object VectorOps extends OpRegistry {
       // compress-then-search shape that turns a 100 TB embedding corpus
       // into a 25 TB one before any pairwise work. Pair set bounded
       // (queries vec_id<10 × candidates vec_id<100).
-      val e = tWide(s, dir)("embeddings")
-        .select(col("vec_id"), quantize(col("embedding")).as("qe"))
+      val e = quantizedVectors(s, dir)
       val dim = 64
       val projected = e.select(col("vec_id"), col("qe"),
         array((0 until JlDims).map(j =>
@@ -1506,11 +1481,8 @@ object VectorOps extends OpRegistry {
       // oracle replays the exact same sketch, so borderline docs agree
       // by construction). Codepoints, not UTF-8 bytes (the
       // multimodal_resample rule), so DuckDB's ord agrees on any text.
-      // landed artifacts, not localCheckpoint pins (r20, VERDICT r19 #6):
-      // the augmented universe feeds BOTH modality kernels and the image
-      // sketch feeds three branches — each consumer now scans a landed
-      // parquet instead of holding full-corpus frames in non-reliable
-      // executor memory (the r19 pins)
+      // corpus artifacts: the augmented universe feeds BOTH modality
+      // kernels and the image sketch feeds three branches
       val aug = graft.CorpusArtifacts.parquet(s, "mm_pair_universe", dir) {
         val base = tWide(s, dir)("documents").select(col("doc_id"), col("text"))
         base
@@ -1652,8 +1624,7 @@ object VectorOps extends OpRegistry {
       // / HNSW ground truth). The node set is id-bounded so the candidate
       // square stays broadcastable; at corpus scale the identical shape
       // runs per LSH cell (see knn_ivf_topk) instead of globally.
-      val e = tWide(s, dir)("embeddings").filter(col("vec_id") < 60)
-        .select(col("vec_id"), quantize(col("embedding")).as("qe"))
+      val e = quantizedVectors(s, dir).filter(col("vec_id") < 60)
       val pairs = e.select(col("vec_id").as("qid"), col("qe").as("qv"))
         .join(broadcast(e.select(col("vec_id").as("vid"), col("qe").as("ev"))),
           col("qid") =!= col("vid"))
@@ -1687,7 +1658,7 @@ object VectorOps extends OpRegistry {
       // keeps every stage inside whole-stage codegen at identical FLOPs.
       val dim = t(s, dir)("embeddings").select(size(col("embedding"))).head().getInt(0)
       val subDim = dim / PqSubspaces
-      val e = tWide(s, dir)("embeddings").select(col("vec_id"), quantize(col("embedding")).as("qe"))
+      val e = quantizedVectors(s, dir)
       val cents: Seq[Seq[Long]] =
         for { m <- 0 until PqSubspaces; k <- 0 until PqCodebook }
           yield pqCentroid(m, k, subDim).toSeq
@@ -1772,8 +1743,7 @@ object VectorOps extends OpRegistry {
       // per coarse cell, improvement in ppm of mean err removed. Two
       // map-side encode passes + one ≤16-row agg — scan-bound at any SF.
       val dim = t(s, dir)("embeddings").select(size(col("embedding"))).head().getInt(0)
-      val e = tWide(s, dir)("embeddings")
-        .select(col("vec_id"), quantize(col("embedding")).as("qe"))
+      val e = quantizedVectors(s, dir)
       def cbook(level: Int): IndexedSeq[Array[Long]] =
         (0 until PqCodebook).map { k =>
           if (level == 2 && k == 0) Array.fill(dim)(0L)

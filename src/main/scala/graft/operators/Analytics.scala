@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.OpRegistry
+import graft.{OpRegistry, Pin}
 import graft.Helpers._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -144,10 +144,7 @@ object Analytics extends OpRegistry {
       val hist = t(s, dir)("orders")
         .select(floor(col("o_totalprice")).cast("long").as("v"))
         .groupBy("v").agg(count(lit(1)).as("c"))
-        // pinned once: the ranged cumsum samples + shuffles + the total —
-        // three fact re-collapses otherwise (the histogram is the
-        // SF-invariant ≤550k-cell frame, cheap to hold)
-        .localCheckpoint()
+        .transform(Pin.shared)
       val tot = hist.agg(sum(col("c")).as("n"))
       graft.Helpers.rangedCumSum(hist, col("c"), Seq(col("v")), "cum")
         .crossJoin(broadcast(tot))
@@ -994,9 +991,8 @@ object Analytics extends OpRegistry {
       // broadcast single-row cross join — NOT an empty-partition window,
       // which would drag the |part|-sized frame (~20M rows at SF100)
       // through one task. perPart feeds BOTH the probe side and its own
-      // grand total; localCheckpoint pins the lineitem scan+aggregate once
-      // so "no second fact pass" holds by construction, not only when AQE
-      // exchange reuse happens to fire. The threshold compare and the
+      // grand total, pinned so the lineitem scan+aggregate runs once
+      // whether or not AQE exchange reuse fires. The threshold compare and the
       // share are one IEEE multiply/divide each on identically-rounded
       // doubles. (A value
       // landing bit-exactly on total×0.0005 would be a tie on both
@@ -1006,7 +1002,7 @@ object Analytics extends OpRegistry {
         .groupBy("l_partkey")
         .agg(sum(dec(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
           .as("val_dec"))
-        .localCheckpoint()
+        .transform(Pin.shared)
       perPart
         .crossJoin(broadcast(perPart.agg(sum("val_dec").as("total_dec"))))
         .filter(col("val_dec").cast("double") >

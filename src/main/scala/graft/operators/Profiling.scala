@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{OpRegistry, Store}
+import graft.{OpRegistry, Pin, Store}
 import graft.Helpers._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -55,19 +55,14 @@ object Profiling extends OpRegistry {
       // filter by EXCLUDING the public complex types instead. The fixtures
       // have no MapType/StructType/BinaryType columns, but the exclusion is
       // written for the general ANALYZE contract anyway.
-      // r20 (VERDICT r19 #5, guide §2.6): the 50 per-column subtrees were
-      // one 50-way-union job — optimized, codegen'd and scheduled as ONE
-      // driver-sequenced unit (isolated cold run: ~26 s, mostly
-      // planning/codegen, for 5.9 s of in-registry execution). The 10
-      // per-table profiles are independent, so they now plan AND run from
-      // the driver pool, overlapping the single-threaded planning and
-      // each job's stage tails. Each result is ≤#columns rows — the eager
-      // localCheckpoint pins row-BOUNDED model state (never a corpus
-      // frame), the bounded-state exemption to the r20 no-pin rule.
-      // Round8Spec keeps its single-column-ReadSchema pin on the block
-      // plans via [[profileTableBlocks]].
+      // The 10 per-table profiles are independent, so they plan AND run
+      // from the driver pool, overlapping the single-threaded planning and
+      // each job's stage tails; each pins its ≤#columns result rows, now
+      // (case (b): the pin is the pool task's own work). Round8Spec keeps
+      // its single-column-ReadSchema pin on the block plans via
+      // [[profileTableBlocks]].
       val profiled = inParallel[DataFrame](s)(profileTableBlocks(s, dir).map {
-        case (tn, b) => tn -> (() => b.localCheckpoint())
+        case (tn, b) => tn -> (() => Pin.now(b))
       }).map(_._2)
       profiled.reduce(_.union(_)).orderBy("table_name", "col_name")
     }),
@@ -212,7 +207,8 @@ object Profiling extends OpRegistry {
       // driver sequence is artifact-count-bounded, never data-sized.
       import s.implicits._
       val (li, oo) = graft.CorpusArtifacts.orderkeyFacts(s, dir)
-      val e0 = graft.llm.VectorOps.quantizedVectors(s, dir).localCheckpoint()
+      // case (b): the codebook and index builds below read it on pool threads
+      val e0 = Pin.now(graft.llm.VectorOps.quantizedVectors(s, dir))
       val (_, cbDf, pqCells) = graft.llm.VectorOps.ivfPqArtifacts(s, dir, e0)
       // r19 optimization round (guide §2.6 — overlap independent jobs):
       // the 12 builds are independent driver-sequenced Spark job chains
@@ -270,9 +266,10 @@ object Profiling extends OpRegistry {
       // rebuild over the union corpus.
       import s.implicits._
       val (li, oo) = graft.CorpusArtifacts.orderkeyFacts(s, dir)
-      val e0 = graft.llm.VectorOps.quantizedVectors(s, dir).localCheckpoint()
+      // case (b): the receipt counts below read both on pool threads
+      val e0 = Pin.now(graft.llm.VectorOps.quantizedVectors(s, dir))
       val (_, cbDf, pqCells) = graft.llm.VectorOps.ivfPqArtifacts(s, dir, e0)
-      val delta = ingestDeltaDocs(s, dir).localCheckpoint()
+      val delta = Pin.now(ingestDeltaDocs(s, dir))
       val (edgesV1, labelsV1, nCross, newPairs) = ingestV1Refresh(s, dir)
       // r19 optimization round (guide §2.6): the refresh above is
       // internally sequential (df recount → cap guard → probe join →
@@ -619,8 +616,7 @@ object Profiling extends OpRegistry {
       // Each iteration is one node-sized join + aggregate over the edge
       // list; the fact-sized work happens once in the edge build. At
       // 100 TB the same loop runs with the rank table staying keyed and
-      // the edge list reused across rounds (localCheckpoint, as
-      // dedup_components does for its iterations).
+      // the edge list pinned across rounds, as dedup_components does.
       val dir2 = directedCoTrade(s, dir)
       val deg = dir2.groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("deg"))
@@ -689,7 +685,7 @@ object Profiling extends OpRegistry {
       // bounded-degree discipline as vec_knn_graph. The BFS itself is
       // 8 unrolled Bellman-Ford rounds (relax one hop per round) over the
       // node-sized distance table — FIXED shuffle-stage count, each round
-      // one edge join + min-aggregate, localCheckpoint truncating lineage
+      // one edge join + min-aggregate, a pin truncating lineage
       // (the dedup_components loop discipline); nodes beyond 8 hops
       // report -1, and the oracle's recursive CTE carries the identical
       // d<8 bound, so the cap is part of the op's contract, not a fixture
@@ -703,17 +699,13 @@ object Profiling extends OpRegistry {
           org.apache.spark.sql.expressions.Window.partitionBy("src")
             .orderBy(col("w").desc, col("dst"))))
         .filter(col("rn") <= 3).select("src", "dst")
-      // pinned (r19 optimization round): the backbone is a window over the
-      // landed co-trade artifact and `edges` is referenced by EVERY one of
-      // the 8 relax rounds — unpinned, each round re-ran the top-k window
-      val edges = backbone
+      // pinned: every one of the 8 relax rounds reads `edges`
+      val edges = Pin.shared(backbone
         .unionAll(backbone.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct().localCheckpoint()
+        .distinct())
       val nodes = t(s, dir)("nation")
         .select(col("n_nationkey").cast("long").as("node"))
-      var dist = nodes
-        .withColumn("d", when(col("node") === 0L, 0L))
-        .localCheckpoint()
+      var dist = Pin.shared(nodes.withColumn("d", when(col("node") === 0L, 0L)))
       for (_ <- 1 to 8) {
         val relaxed = dist.filter(col("d").isNotNull)
           .join(edges, col("node") === col("src"))
@@ -722,7 +714,7 @@ object Profiling extends OpRegistry {
           // least() ignores NULL unless all args are NULL — exactly the
           // "keep the better of (current, relaxed)" semantics needed here
           .select(col("node"), least(col("d"), col("nd")).as("d"))
-          .localCheckpoint()
+          .transform(Pin.shared)
       }
       dist.select(col("node"), coalesce(col("d"), lit(-1L)).as("dist"))
         .orderBy("node")
@@ -794,7 +786,7 @@ object Profiling extends OpRegistry {
       // + bounded rounds is the distributed-engine form). Rides the landed
       // weighted co-trade artifact (node-sized parquet, no fact pass);
       // each round is one edge-label join + one argmax agg —
-      // dedup_components' bounded-round discipline, localCheckpoint
+      // dedup_components' bounded-round discipline, a pin
       // truncating lineage so the stage count stays FIXED at any scale.
       val w = coTradeWeights(s, dir)
       val arcs = w.select(col("a").as("src"), col("b").as("dst"), col("w"))
@@ -913,7 +905,7 @@ object Profiling extends OpRegistry {
     * weighted co-trade graph; the spec plants two triangles joined by a
     * weak bridge). Arcs are the DIRECTED weighted expansion (src, dst, w);
     * one round = one arc-label join + one argmax agg per node, labels
-    * localCheckpointed so the stage count stays fixed. */
+    * pinned so the stage count stays fixed. */
   private[graft] def lpaRounds(arcs: DataFrame, rounds: Int): DataFrame = {
     var labels = arcs.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
@@ -923,7 +915,7 @@ object Profiling extends OpRegistry {
       labels = keepFirst(scored, Seq(col("dst")),
           Seq(col("sw").desc, col("label")))
         .select(col("dst").as("node"), col("label"))
-        .localCheckpoint()
+        .transform(Pin.shared)
     }
     labels
   }
@@ -978,7 +970,7 @@ object Profiling extends OpRegistry {
     * over keys) → 1 row, one subtree per profiled column (the round-8
     * re-plan; see the registry entry). Exposed so Round8Spec can pin the
     * single-column ReadSchema property on the block plans now that the
-    * registry op assembles from checkpointed block results. */
+    * registry op assembles from pinned block results. */
   private[graft] def profileTableBlocks(s: SparkSession,
       dir: String): Seq[(String, DataFrame)] = {
     import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType, MapType, StructType}
@@ -1101,21 +1093,18 @@ object Profiling extends OpRegistry {
       .unionByName(delta.select("doc_id", "text"))
     val sh = uni.select(col("doc_id"),
       explode(Shingling.shingleArray(col("text"), hashed = true)(s)).as("sh_h"))
-    // lazy pins: the nCross count materializes dfg and newPairs' pin
-    // materializes capped, so neither needs a job of its own, and neither
-    // is re-derived by its later readers
     val dfg = sh.groupBy("sh_h").agg(count(lit(1)).as("df_all"),
         count(when(col("doc_id") < IngestDeltaOff, 1)).as("df_base"))
-      .localCheckpoint(false)
+      .transform(Pin.shared)
     val nCross = dfg.filter(col("df_base") <= TextOps.MaxShingleDf
       && col("df_all") > TextOps.MaxShingleDf).count()
     val capped = sh.join(
         dfg.filter(col("df_all") <= TextOps.MaxShingleDf).select("sh_h"),
         "sh_h")
-      .localCheckpoint(false)
-    val newPairs = TextOps.jaccardFilter(TextOps.overlapPairs(capped,
-        probe = Some(capped.filter(col("doc_id") >= IngestDeltaOff))))
-      .localCheckpoint()
+      .transform(Pin.shared)
+    // case (b): corpus_ingest_index_v1's receipt counts read it on pool threads
+    val newPairs = Pin.now(TextOps.jaccardFilter(TextOps.overlapPairs(capped,
+        probe = Some(capped.filter(col("doc_id") >= IngestDeltaOff)))))
     val edgesV1 = TextOps.candidatePairs(s, dir).unionByName(newPairs)
     val baseLab = DedupOps.componentLabels(s, dir)
       .select(col("doc_id"), col("component_id").as("label"))
@@ -1314,13 +1303,12 @@ object Profiling extends OpRegistry {
       : (DataFrame, DataFrame, DataFrame) = {
     val target = 256L * 1024
     val small = s.read.parquet(s"$base/small")
-    // the per-file stats ledger, from the files actually on disk —
-    // pinned once (file-count-sized): plan window, pass-through filter,
-    // and the bin count all re-read it
+    // the per-file stats ledger, from the files actually on disk — pinned:
+    // plan window, pass-through filter, and the bin count all read it
     val ledger = small.groupBy(col(partCol).as("part"),
         col("_metadata.file_path").as("path"))
       .agg(count(lit(1)).as("rows"), max(col("_metadata.file_size")).as("bytes"))
-      .localCheckpoint()
+      .transform(Pin.shared)
     val packable = ledger.filter(col("bytes") < smallThresh)
     val passThrough = ledger.filter(col("bytes") >= smallThresh)
     val w = Window.partitionBy("part")
@@ -1764,8 +1752,7 @@ object Profiling extends OpRegistry {
     // re-evaluates the fact-sized DISTINCT join ~2^4 times — the sf0.1
     // sweep measured it spilling >60 GB of DuckDB temp before ENOSPC.
     // Materialization pins each level to one evaluation (node-sized after
-    // dir2), which is also exactly what the Spark side's localCheckpoint
-    // does.
+    // dir2), which is also exactly what the Spark side's pins do.
     "graph_kcore_peel" -> s"""
       WITH pairs AS MATERIALIZED ($CoTradePairs),
       dir2 AS MATERIALIZED (SELECT a AS src, b AS dst FROM pairs

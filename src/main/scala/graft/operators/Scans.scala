@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{OpRegistry, Store}
+import graft.{OpRegistry, Pin, Store}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -76,15 +76,12 @@ object Scans extends OpRegistry {
       val schema = StructType(Seq(
         StructField("k", LongType), StructField("price", DoubleType),
         StructField("_corrupt_record", StringType)))
-      val back = s.read.schema(schema)
+      // pinned now, case (c): Spark refuses a filter on ONLY the
+      // corrupt-record column of the lazy csv relation (SPARK-21610)
+      val back = Pin.now(s.read.schema(schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .csv(out)
-      // cache: Spark 4 refuses a filter on ONLY the corrupt-record column
-      // of a lazy csv relation (SPARK-21610 guard); materializing first is
-      // the documented workaround and also what a real pipeline does
-      // before splitting good/quarantine
-      back.cache()
+        .csv(out))
       back.agg(
           sum(when(col("_corrupt_record").isNull, 1L).otherwise(0L))
             .as("n_good"),

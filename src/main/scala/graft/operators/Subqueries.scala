@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.OpRegistry
+import graft.{OpRegistry, Pin}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** §2 SQL-subquery surface: correlated EXISTS, IN-subquery, correlated
@@ -61,7 +61,7 @@ object Subqueries extends OpRegistry {
           JOIN customer ON o_custkey = c_custkey
           JOIN supplier ON l_suppkey = s_suppkey
         WHERE c_nationkey <> s_nationkey""")
-        .localCheckpoint()
+        .transform(Pin.shared)
         .createOrReplaceTempView("cotrade_edges")
       s.sql("""
         WITH RECURSIVE bfs(n, hop) AS (

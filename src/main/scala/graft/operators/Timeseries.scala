@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.OpRegistry
+import graft.{OpRegistry, Pin}
 import graft.Helpers._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -198,17 +198,14 @@ object Timeseries extends OpRegistry {
       // per-shard sort + broadcast prefix offsets, no single-task global
       // Window anywhere) reconstructed into ntile(4)'s exact bucket
       // boundaries by Helpers.ntileFromRank — bit-identical output at
-      // any user count.
-      // localCheckpoint pins the per-user aggregate once (documented
-      // eager-construction exception): the three range ranks sample AND
-      // shuffle their input — 6 lineage re-executions would re-scan the
-      // event stream 6x (measured +1.9 s at sf0.1 unpinned)
+      // any user count. The per-user aggregate is pinned: the three range
+      // ranks each sample AND shuffle it.
       val p = eventsUs(s, dir).filter(col("event_type") === "purchase")
         .groupBy("user_id")
         .agg(max(col("ts_us")).as("last_purchase_us"),
           count(lit(1)).as("frequency"),
           sum(dec(col("value"))).as("mon_dec"))
-        .localCheckpoint()
+        .transform(Pin.shared)
       val n = p.agg(count(lit(1)).as("__n"))
       var d = p.crossJoin(broadcast(n))
       d = graft.Helpers.rangedRowNumber(d,
@@ -535,10 +532,7 @@ object Timeseries extends OpRegistry {
       // single-task global Window), and the total joins back as a
       // broadcast scalar instead of an unpartitioned window.
       val e = eventsUs(s, dir)
-      // pinned once: the ranged rank samples + shuffles + the total —
-      // three lineage re-executions of the stream collapse otherwise
-      val perUser = e.groupBy("user_id").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
+      val perUser = Pin.shared(e.groupBy("user_id").agg(count(lit(1)).as("cnt")))
       val n = perUser.agg(count(lit(1)).as("__n"))
       val d = graft.Helpers.rangedRowNumber(perUser.crossJoin(broadcast(n)),
           Seq(col("cnt").desc, col("user_id")), "__rn")

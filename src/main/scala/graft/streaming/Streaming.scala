@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{OpRegistry, Store}
+import graft.{OpRegistry, Pin, Store}
 import graft.Helpers._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -334,16 +334,10 @@ object Streaming extends OpRegistry {
       val waveDocs = batch.select("doc_id").distinct()
       val waveKeys = batch.filter(col("band").isNotNull)
         .select("doc_id", "band", "bh")
-      // LAZY wave-bounded pins (r20 session 3, the ccProcessWave
-      // rule): the probe join is THE per-wave compute and both the
-      // delta write and the receipt consume its results — lazily
-      // checkpointed, the delta write (the strictly-next action)
-      // materializes them once and the receipt reads the cache;
-      // unpinned, the store-probe join ran TWICE per wave.
-      val rejected = waveKeys.join(store, Seq("band", "bh"), "left_semi")
-        .select("doc_id").distinct().localCheckpoint(false)
-      val admitted = waveDocs.join(rejected, Seq("doc_id"), "left_anti")
-        .localCheckpoint(false)
+      // pinned: the delta write and the receipt both read the store probe
+      val rejected = Pin.shared(waveKeys.join(store, Seq("band", "bh"), "left_semi")
+        .select("doc_id").distinct())
+      val admitted = Pin.shared(waveDocs.join(rejected, Seq("doc_id"), "left_anti"))
       // repartition(1): one part file per delta, so an EMPTY delta
       // still lands a readable schema (the cc delta rule)
       waveKeys.join(admitted, Seq("doc_id"), "left_semi")
@@ -475,11 +469,10 @@ object Streaming extends OpRegistry {
     * reproduces byte-identical store state. */
   private[graft] def ccProcessWave(s: SparkSession, base: String,
       edges: DataFrame, batch: DataFrame, batchId: Long): Unit = {
-    // the batch's serving snapshot, pinned lazily: the contraction joins
-    // and the receipt read it, and an unpinned frame would re-execute the
-    // whole delta chain per reference; the merge's first action computes it
+    // the batch's serving snapshot, pinned: the contraction joins and the
+    // receipt read it
     val store = ccPhase(s, batchId, "store pin")(
-      ccServedLabels(s, base, batchId - 1).localCheckpoint(false))
+      Pin.shared(ccServedLabels(s, base, batchId - 1)))
     val waveDocs = batch.select("doc_id").distinct()
     // edges first complete in THIS wave
     val newEdges = edges.filter(
@@ -663,9 +656,8 @@ object Streaming extends OpRegistry {
       // cross-wave dups exercise exactly that path). Fully DuckDB-
       // oracled: the portable arithmetic minhash plus unrolled per-wave
       // CTEs replay all three admission rounds bit-for-bit.
-      // planted stream universe LANDED once per corpus (r20, VERDICT r19
-      // #6): shared with stream_cc_maintain; consumers scan parquet
-      // instead of holding a localCheckpoint pin in executor memory
+      // The planted stream universe is a corpus artifact shared with
+      // stream_cc_maintain.
       val docs = graft.CorpusArtifacts.parquet(s, "planted_stream_docs", dir)(
         graft.llm.DedupOps.plantedStreamDocs(
           tWide(s, dir)("documents").select("doc_id", "text")))
@@ -903,7 +895,7 @@ object Streaming extends OpRegistry {
         log.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
           .select(col("event_type"), col("n_events"), col("sum_cents"))
           .orderBy("event_type")
-          .localCheckpoint() // materialize before the scratch dir dies
+          .transform(Pin.now) // case (a): the scratch dir dies below
       } finally cleanupCkpt(scratch)
     }),
 

@@ -20,7 +20,7 @@ class PairKernelSpec extends GraftSuite {
     (0 until llm.TextOps.MaxShingleDf - 1).map(i => (100L + i) -> s"w$i $Hot"))
     .toDF("doc_id", "text")
 
-  private def postings = llm.TextOps.cappedPostings(docs, pin = false)
+  private def postings = llm.TextOps.cappedPostings(docs)
 
   private def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Long]] =
     df.collect().map(r => r.toSeq.map(_.asInstanceOf[Long])).toSet
@@ -33,8 +33,8 @@ class PairKernelSpec extends GraftSuite {
       "(id1, id2, inter, uni)")
     assert(rows(llm.TextOps.containmentFilter(llm.TextOps.overlapPairs(postings))) ===
       Set(Seq(1L, 2L, 5L, 8L, 7L)), "(id1, id2, inter, n1, n2)")
-    assert(rows(llm.TextOps.jaccardEdges(docs, pin = true)) ===
-      rows(llm.TextOps.jaccardEdges(docs, pin = false)), "pinning changed the edges")
+    assert(rows(llm.TextOps.jaccardFilter(llm.TextOps.overlapPairs(Pin.shared(postings)))) ===
+      rows(llm.TextOps.jaccardEdges(docs)), "pinning changed the edges")
   }
 
   test("probe form equals the full overlap tail filtered to id2 in the probe") {

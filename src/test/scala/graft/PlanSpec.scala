@@ -14,13 +14,11 @@ class PlanSpec extends GraftSuite {
     df.queryExecution.executedPlan.toString
   }
 
-  /** The lazy Jaccard kernel over the corpus and over the planted universe
+  /** The unpinned Jaccard kernel over the corpus and over the planted universe
     * the incremental CC ops read. */
   private def corpusDocs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
-  private def jaccardKernel =
-    llm.TextOps.jaccardEdges(corpusDocs, pin = false)
-  private def plantedKernel =
-    llm.TextOps.jaccardEdges(llm.DedupOps.plantedDocs(corpusDocs), pin = false)
+  private def jaccardKernel = llm.TextOps.jaccardEdges(corpusDocs)
+  private def plantedKernel = llm.TextOps.jaccardEdges(llm.DedupOps.plantedDocs(corpusDocs))
 
   test("q_revenue_by_region: dims broadcast, agg is partial+final, filters on scans") {
     val p = finalPlan("q_revenue_by_region")
