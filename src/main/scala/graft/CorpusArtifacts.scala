@@ -41,7 +41,8 @@ object CorpusArtifacts {
 
   /** Drop every landed artifact (they are rebuilt lazily on next use).
     * Also drops the build locks (ADVICE r19: the lock map grew unboundedly),
-    * [[Tables.scanPartsMemo]] and the inferred Parquet schemas (the
+    * [[Tables.scanPartsMemo]], the inferred Parquet schemas and the
+    * probed embedding dimensions (the
     * lifetime of every landed-state cache is the same — this is the
     * per-pass honest-measurement hook Bench/ScaleProbe call). */
   private[graft] def clear(): Unit = {
@@ -49,6 +50,7 @@ object CorpusArtifacts {
     locks.clear()
     Tables.scanPartsMemo.clear()
     Tables.schemaMemo.clear()
+    Tables.embeddingDimMemo.clear()
   }
 
   /** The memo key of artifact `kind` of corpus `dir` and a short hash of

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ContextBridge
 
 /** The one materialization policy of the engine. A pin holds a frame's
   * rows in executor storage (`localCheckpoint`) so that its readers share
@@ -16,9 +17,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    cannot work: (a) the frame's input is deleted or overwritten before
   *    its first reader runs; (b) its readers run concurrently on
   *    `Profiling.inParallel` pool threads, or the pin is the pool task's
-  *    own work; (c) a CSV relation read with a corrupt-record column, whose
-  *    filter on that column alone Spark refuses on the lazy relation
-  *    (SPARK-21610). Each call site names its case.
+  *    own work. Each call site names its case.
   *  - [[release]] frees every pin. A pin lives for one op: `Bench`,
   *    `Verify` and `ScaleProbe` release after each op. State that must
   *    outlive an op is landed through [[CorpusArtifacts]] or [[Store]]. */
@@ -29,7 +28,12 @@ object Pin {
   /** An eager pin of `df`: its rows are materialized before this returns. */
   def now(df: DataFrame): DataFrame = df.localCheckpoint()
 
-  /** Unpersists every pinned RDD of the application of `s`. */
-  def release(s: SparkSession): Unit =
-    s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+  /** Unpersists every pinned RDD of the application of `s`. It goes
+    * through the context, not `RDD.unpersist`, which logs a WARN for each
+    * locally checkpointed RDD that its lineage cannot be recomputed — true
+    * of every pin, and why a pin lives for one op. */
+  def release(s: SparkSession): Unit = {
+    val sc = s.sparkContext
+    sc.getPersistentRDDs.keys.foreach(ContextBridge.unpersistRDD(sc, _))
+  }
 }

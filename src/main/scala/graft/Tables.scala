@@ -109,6 +109,11 @@ object Tables {
     * split settings). */
   private[graft] val scanPartsMemo =
     scala.collection.concurrent.TrieMap[String, Int]()
+
+  /** See [[graft.llm.VectorOps.embeddingDim]] — embedding dimensions per
+    * (app, store path, store files). */
+  private[graft] val embeddingDimMemo =
+    scala.collection.concurrent.TrieMap[String, Int]()
 }
 
 object Helpers {

@@ -960,7 +960,7 @@ object DedupOps extends OpRegistry {
       docFilter)
 
   /** df-capped trigram-Jaccard pairs CTE chain over a supplied d CTE —
-    * tok/sh/shc/sz/ix/pairs, the same edges as [[TextOps.jaccardEdges]]
+    * tok/sh/shc/sz/ix/pairs, the same edges as [[TextOps.candidatePairs]]
     * over d (hashed-join vs string-join asymmetry aside — the shared 2^-64
     * xxhash64-collision trade every pair oracle makes). Used by the
     * streaming CC oracle (stream-planted d); splice after WITH RECURSIVE.

@@ -24,75 +24,73 @@ object TextOps extends OpRegistry {
     * literally). */
   private[graft] val StopWords = Seq("the", "of", "and", "a", "to", "in", "is", "data")
 
-  /** BM25 scoring kernel for `text_bm25_topk`, factored so the spec can pin
-    * the score math on a hand corpus. Input: any (doc_id, text) frame.
-    *
-    * EAGER-CONSTRUCTION note (r17, ADVICE r16): deriving the query panel
-    * collects 10 rows at DataFrame-CONSTRUCTION time, so building this
-    * frame runs a Spark job before any action — unlike the registry's
-    * otherwise-lazy contract. Acceptable because Verify/Bench/ScaleProbe
-    * all time construction+execution as one unit (the recorded numbers
-    * include it); production receives the panel as input and is lazy.
-    * Query panel = five 2-term queries from the global occurrence ranking;
-    * s_micro per (term, doc) = floor(ln((2N+2)/(2df+1)) ·
-    * 22·tf·L/(10·L·tf+3·L+9·dl·N) · 1e6), integer-summed per (query, doc);
-    * top-10 per query, tiebreak doc_id asc. */
-  private[graft] def bm25TopK(s: SparkSession, docs: DataFrame): DataFrame = {
-    // dl rides the explode (8 bytes/row) so no second corpus-sized join
-    // is needed to recover document length at scoring time
-    val toks = docs.select(col("doc_id"),
+  /** Each doc's distinct terms with their counts, and its length:
+    * (doc_id, dl, term, tf), one row per (doc, term) from one `Generate`
+    * over the term-count kernel. */
+  private[graft] def termPostings(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
       size(split(col("text"), " ")).cast("long").as("dl"),
-      explode(split(col("text"), " ")).as("term"))
+      inline(termCounts(split(col("text"), " "))))
+
+  /** The BM25 (Okapi, k1 = 6/5, b = 3/4) kernel of `text_bm25_topk` and
+    * `docs_hybrid_retrieval`: (qid, doc_id, score_micro, n_terms) for every
+    * doc holding a term of query qid. Inputs: a (doc_id, text) corpus and
+    * a small (qid, term) query frame, broadcast.
+    *
+    * The broadcast query terms prune the postings map-side, so only
+    * query-term postings reach a shuffle; the full inverted index is never
+    * materialized. df is the number of docs holding a term. A term may sit
+    * in several queries, so its posting rows are df × #queries; the rows of
+    * its smallest qid enumerate each doc once, so df counts those, in one
+    * window over the pruned postings.
+    *
+    * Score math: the tf-normalization tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl))
+    * multiplies out over the common denominator 10·L (L = corpus token
+    * count, avgdl = L/N) to 22·tf·L / (10·L·tf + 3·L + 9·dl·N), and idf is
+    * the positive Robertson form ln((2N+2)/(2df+1)). The product is taken
+    * in DOUBLE from the first multiply: the int64 form tf·L·22 would wrap
+    * (non-ANSI Spark) past L·tf ≈ 4.2e17 while DuckDB errors. The oracles
+    * mirror the cast points and the left-associative order, so both engines
+    * share any rounding above 2^53. Each term's score is floored to
+    * micro-units and integer-summed per (query, doc): no double
+    * accumulation, so no ordering sensitivity. */
+  private[graft] def bm25Scores(docs: DataFrame, queryTerms: DataFrame): DataFrame = {
     val tot = docs.select(size(split(col("text"), " ")).cast("long").as("dl"))
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("len_total"))
-    // panel derivation: one map-side-combined vocab-sized agg (the fixture
-    // stand-in for a GIVEN query workload; production receives the panel)
-    val topTerms = toks.groupBy("term").agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col("term")).limit(10)
-      .select("term").collect().map(_.getString(0)) // 10-term model state (bounded)
-    import s.implicits._
-    val qterms = topTerms.toSeq.zipWithIndex
-      .map { case (t, i) => (i / 2, t) }.toDF("qid", "term")
-    // the broadcast panel prunes the token stream MAP-SIDE, so only
-    // query-term postings ever reach a shuffle — the full inverted index
-    // is never materialized (the first form grouped all 100× tokens into a
-    // corpus-sized tf index before pruning: probe 26.95 → 5.20 after this
-    // restructure, 70.2 s → 11.2 s at 100×; both remaining corpus passes
-    // are map-side scans)
-    val qtf = toks.join(broadcast(qterms), Seq("term"))
-      .groupBy("qid", "doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
-    // df as a WINDOW count over the panel-pruned posting rows (r20, guide
-    // §2.4): the r19 form aggregated a separate dfr frame and broadcast-
-    // joined it back, and because dfr derives FROM qtf the physical plan
-    // re-ran the entire corpus explode pass under the broadcast subtree —
-    // two full Scan→Generate passes for one posting build. qtf has exactly
-    // one row per (qid, term, doc), so count(*) over (qid, term) IS df;
-    // the window runs over the pruned postings (≤ panel×docs rows), never
-    // the token stream. Same values, one corpus pass.
-    val wdf = Window.partitionBy("qid", "term")
+    val wt = Window.partitionBy("term")
     val idf = log((col("n_docs") * 2L + 2L).cast("double") / (col("df") * 2L + 1L))
-    // tf-normalization in DOUBLE from the first multiply (r17, ADVICE r16):
-    // the int64 form tf·L·22 overflows past L·tf ≈ 4.2e17 — i.e. silently
-    // WRAPS (non-ANSI Spark) somewhere around a 10-trillion-token corpus,
-    // while DuckDB errors — a latent cross-engine divergence at exactly the
-    // 100-TB scale this op targets. Double products are IEEE-deterministic
-    // and the oracle mirrors the same cast points and associativity
-    // (left-assoc), so both engines share any >2^53 rounding; at fixture
-    // scale every product is < 2^53 and the math stays exact.
     val tfd = col("tf").cast("double")
     val ltd = col("len_total").cast("double")
     val tfn = tfd * ltd * lit(22.0d) /
       (tfd * ltd * lit(10.0d) + ltd * lit(3.0d) +
         col("dl").cast("double") * col("n_docs").cast("double") * lit(9.0d))
-    val scored = qtf.withColumn("df", count(lit(1)).over(wdf))
+    termPostings(docs).join(broadcast(queryTerms), Seq("term"))
+      .withColumn("minq", min(col("qid")).over(wt))
+      .withColumn("df", count(when(col("qid") === col("minq"), lit(1))).over(wt))
       .crossJoin(broadcast(tot))
       .select(col("qid"), col("doc_id"),
         floor(idf * tfn * lit(1e6)).cast("long").as("s_micro"))
       .groupBy("qid", "doc_id")
       .agg(sum(col("s_micro")).as("score_micro"),
         count(lit(1)).cast("int").as("n_terms"))
+  }
+
+  /** `text_bm25_topk` over any (doc_id, text) frame: [[bm25Scores]] for a
+    * panel of five 2-term queries drawn from the global occurrence ranking,
+    * top-10 docs per query, tiebreak doc_id asc.
+    *
+    * The panel is collected while the frame is built (10 rows, bounded
+    * model state), so construction runs a Spark job; production receives
+    * the panel as input. */
+  private[graft] def bm25TopK(s: SparkSession, docs: DataFrame): DataFrame = {
+    val topTerms = termPostings(docs).groupBy("term").agg(sum(col("tf")).as("cnt"))
+      .orderBy(col("cnt").desc, col("term")).limit(10)
+      .select("term").collect().map(_.getString(0))
+    import s.implicits._
+    val qterms = topTerms.toSeq.zipWithIndex
+      .map { case (t, i) => (i / 2, t) }.toDF("qid", "term")
     val w = Window.partitionBy("qid").orderBy(col("score_micro").desc, col("doc_id"))
-    scored.withColumn("rn", row_number().over(w))
+    bm25Scores(docs, qterms).withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 10)
       .select(col("qid"), col("rn").cast("int").as("rn"), col("doc_id"),
         col("score_micro"), col("n_terms"))
@@ -177,11 +175,6 @@ object TextOps extends OpRegistry {
   private[graft] def containmentFilter(pairs: DataFrame): DataFrame =
     pairs.filter(col("inter") * 2 > least(col("n1"), col("n2")))
 
-  /** The df-capped exact-Jaccard edges (id1, id2, inter, uni) of a
-    * (doc_id, text) frame, unpinned: the plan shows every kernel step. */
-  private[graft] def jaccardEdges(docs: DataFrame): DataFrame =
-    jaccardFilter(overlapPairs(cappedPostings(docs)))
-
   /** Clears ALL landed artifacts (candidate edges + the graph family's
     * co-trade edges) — the per-pass honest-measurement hook Bench and
     * ScaleProbe call; see [[graft.CorpusArtifacts]]. */
@@ -201,8 +194,7 @@ object TextOps extends OpRegistry {
     * shuffle-free. The first consumer in a session pays the build (timed
     * honestly — Bench/ScaleProbe clear the memo each pass via
     * [[clearCandidateArtifacts]]); the rest pay a parquet read of a
-    * pair-count-sized table. The lazy [[jaccardEdges]] over the same docs
-    * is the oracle-checkable twin — DuckDB re-derives the same edges
+    * pair-count-sized table. DuckDB re-derives the same edges
     * independently, so the artifact never self-certifies. */
   private[graft] def candidatePairs(s: SparkSession, dir: String): DataFrame =
     graft.CorpusArtifacts.parquet(s, "edges", dir)(
@@ -221,67 +213,11 @@ object TextOps extends OpRegistry {
           length(col("w")).cast("long").as("n_char"))
     }
 
-  /** Shared BPE trainer (r16): 6 merge rounds over the word-frequency
-    * dict. Returns (merge table rows, final vocab (w, s, n) with s the
-    * guard-delimited symbol string after all merges) — text_bpe_merge_train
-    * ships the former, text_bpe_apply consumes the latter. Loop
-    * discipline = vec_kmeans_iter: the only corpus-sized pass is the word
-    * collapse; rounds run on the vocab-sized pinned frame with ONE
-    * argmax row collected per round. */
-  private[graft] def bpeTrain(s: SparkSession, dir: String)
-      : (Seq[(Int, String, String, Long)], DataFrame) =
-    bpeTrainDocs(s, tWide(s, dir)("documents"), BpeWordFloor)
-
-  /** [[bpeTrain]] re-rooted on a passed doc frame so Round17Spec can run
-    * the distributed-vs-driver differential on seeded random corpora
-    * (hand corpora pass floor = 1 to keep sub-floor words). */
-  private[graft] def bpeTrainDocs(s: SparkSession, docs: DataFrame,
-      floor: Long = 1L): (Seq[(Int, String, String, Long)], DataFrame) = {
-    val Rounds = 6
-    val words = docs
-      .select(explode(split(col("text"), " ")).as("w"))
-      .filter(length(col("w")) >= 2 && col("w").rlike("^[a-z0-9]+$"))
-      .groupBy("w").agg(count(lit(1)).as("n"))
-      .filter(col("n") >= floor)
-    var vocab = words.select(col("w"),
-      regexp_replace(col("w"), "(.)", "($1)").as("s"), col("n"))
-      .transform(Pin.shared)
-    val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    var r = 1
-    var exhausted = false
-    while (r <= Rounds && !exhausted) {
-      val ls = split(regexp_replace(col("s"), "^\\(|\\)$", ""), "\\)\\(")
-      val top = vocab.select(ls.as("ls"), col("n"))
-        .select(explode(when(size(col("ls")) >= 2,
-            zip_with(slice(col("ls"), lit(1), size(col("ls")) - 1),
-              slice(col("ls"), lit(2), size(col("ls")) - 1),
-              (a, b) => struct(a.as("lhs"), b.as("rhs"))))
-          .otherwise(array().cast("array<struct<lhs:string,rhs:string>>")))
-          .as("p"), col("n"))
-        .groupBy(col("p.lhs").as("lhs"), col("p.rhs").as("rhs"))
-        .agg(sum(col("n")).as("pair_count"))
-        .orderBy(col("pair_count").desc, col("lhs"), col("rhs"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val a: String = top.head.getString(0)
-        val b: String = top.head.getString(1)
-        val pn: Long = top.head.getLong(2)
-        merges += ((r, a, b, pn))
-        vocab = vocab.select(col("w"),
-          call_function("replace", col("s"), lit(s"($a)($b)"),
-            lit(s"($a$b)")).as("s"), col("n"))
-        r += 1
-      }
-    }
-    (merges.toSeq, vocab)
-  }
-
   /** Production merge budget for the driver-side trainer — the "≥256"
-    * scale the 6-round distributed form cannot reach (VERDICT r16 #2:
-    * per-merge Spark jobs + unbounded lineage at production merge
-    * counts). The fixture's 30-word vocab exhausts at merge 89, so the
-    * budget is a CAP the trainer runs under, not a row-count promise. */
+    * scale a Spark job per merge round could not reach (per-merge jobs +
+    * unbounded lineage). The fixture's 30-word vocab exhausts at merge 89,
+    * so the budget is a CAP the trainer runs under, not a row-count
+    * promise. */
   private[graft] val BpeMergeBudget = 256
 
   /** Word-frequency floor on the training collapse (r18, VERDICT r17 #2):
@@ -302,8 +238,9 @@ object TextOps extends OpRegistry {
     * MODEL state by construction (the vec_kmeans_iter collect rationale,
     * and how real tokenizer trainers work: HuggingFace/SentencePiece both
     * collect the word-count table) — then run every merge round
-    * in-memory. Zero Spark jobs per merge and zero lineage growth, vs the
-    * distributed twin's one argmax job + one plan level per round.
+    * in-memory. Zero Spark jobs per merge and zero lineage growth, where
+    * a distributed loop runs one argmax job and adds one plan level per
+    * round.
     *
     * Pair counts are maintained INCREMENTALLY: merging (a,b) only changes
     * the pair multiset of words that currently contain (a,b) adjacently
@@ -312,14 +249,14 @@ object TextOps extends OpRegistry {
     * standard trainer optimization; a full recount per round would be
     * O(vocab·len·budget) at production vocab sizes.
     *
-    * Semantics are BIT-IDENTICAL to [[bpeTrain]] and the unrolled oracle
-    * chain: counts sum word frequency over ALL adjacent positions
-    * (overlaps included), argmax ties break lexicographically on
-    * (lhs, rhs) in binary string order, and the rewrite is the
-    * leftmost non-overlapping scan — exactly what DuckDB/Java
-    * replace("(A)(B)" → "(AB)") does on the guarded symbol string.
-    * Round17Spec pins the first-6-merges differential against the
-    * distributed form plus an overlapping-pair hand corpus.
+    * Semantics are BIT-IDENTICAL to the unrolled oracle chain: counts
+    * sum word frequency over ALL adjacent positions (overlaps included),
+    * argmax ties break lexicographically on (lhs, rhs) in binary string
+    * order, and the rewrite is the leftmost non-overlapping scan —
+    * exactly what DuckDB/Java replace("(A)(B)" → "(AB)") does on the
+    * guarded symbol string. Round17Spec checks the merge table against a
+    * naive full recount on seeded corpora, floored and unfloored, plus an
+    * overlapping-pair hand corpus.
     *
     * @return (merge table rows, final vocab word → symbol count) */
   private[graft] def bpeTrainFull(s: SparkSession, dir: String)
@@ -525,23 +462,15 @@ object TextOps extends OpRegistry {
       // literals. The 10-term panel is bounded MODEL state (the
       // text_keyness_llr top-2-langs discipline), collected once.
       //
-      // Determinism: with k1=6/5 and b=3/4, the tf-normalization term
-      // tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)) multiplies out over common
-      // denominator 10·L (L = corpus token count, avgdl = L/N) to the
-      // EXACT integer ratio 22·tf·L / (10·L·tf + 3·L + 9·dl·N); idf uses
-      // the positive Robertson form ln(1 + (N−df+½)/(df+½)) =
-      // ln((2N+2)/(2df+1)) — one IEEE division of exact integers, one ln
-      // (the acknowledged 1-ULP libm residual every quantized-ln op
-      // carries), one multiply chain, floored to micro-units per TERM and
-      // integer-summed per (query, doc) — no double accumulation, so no
-      // ordering sensitivity (the docs_lm_quality_filter D-rule).
+      // Determinism and score math: see [[bm25Scores]]; the ln carries the
+      // acknowledged 1-ULP libm residual of every quantized-ln op.
       //
       // Scale: the query side is ≤10 rows at ANY corpus size → broadcast;
-      // tf/df build map-side-combined vocab/posting aggs (the BM25 index
-      // shape — posting join, never a corpus scan per query); the rank →
-      // filter(rn≤10) pair lowers to a map-side partial WindowGroupLimit
-      // (the knn_cosine_topk adjudication), so no data-sized frame funnels
-      // into the 5 qid partitions.
+      // tf comes per doc from the term-count kernel and df from one window
+      // over the query-term postings (posting join, never a corpus scan per
+      // query); the rank → filter(rn≤10) pair lowers to a map-side partial
+      // WindowGroupLimit (the knn_cosine_topk adjudication), so no
+      // data-sized frame funnels into the 5 qid partitions.
       bm25TopK(s, tWide(s, dir)("documents"))
     }),
 
@@ -1284,31 +1213,20 @@ object TextOps extends OpRegistry {
     }),
 
     "text_bpe_merge_train" -> ((s, dir) => {
-      // Iterative BPE merge TRAINING (r16, VERDICT r15 #2) — the missing
-      // piece of the tokenizer story: text_bpe_pair_stats is the round-0
-      // pair census; this op runs 6 actual merge rounds and emits the
-      // merge table, exactly the artifact a tokenizer build ships. Scale
-      // shape (the vec_kmeans_iter loop discipline): the ONLY corpus-sized
-      // pass is the word-frequency collapse (classic BPE trains on the
-      // word-count dict, not the corpus); every merge round then runs on
-      // the vocab-sized pinned frame, and per-round driver state is
-      // ONE argmax row — bounded model state, never a data collect.
-      // Symbol mechanics: a word's symbol sequence travels as a
-      // guard-delimited string "(c1)(c2)…"; merging pair (A,B) is
-      // replace("(A)(B)" → "(AB)") — leftmost non-overlapping, the
-      // standard greedy BPE merge order, and string-identical in DuckDB's
-      // replace(), which is what makes the 6-round loop fully
-      // oracle-replayable (the guards make each symbol boundary
-      // self-contained, so a match can never straddle symbols or share a
-      // delimiter with the next occurrence the way a single-separator
-      // encoding does). The [a-z0-9]+ word filter guarantees the guard
-      // chars cannot occur inside a symbol (0 tokens excluded on the
-      // fixture — the filter is the documented precondition, not a data
-      // change). Determinism: exact integer pair counts; ties break
+      // Iterative BPE merge TRAINING — the missing piece of the tokenizer
+      // story: text_bpe_pair_stats is the round-0 pair census; this op
+      // ships the first 6 rows of the merge table, the artifact a
+      // tokenizer build ships. The rows are [[bpeTrainFull]]'s: one
+      // corpus-sized pass collapses the corpus to the word-frequency dict,
+      // and the merge rounds run on the driver over that bounded model
+      // state. Its oracle is a 6-round replay of the guarded-string chain
+      // ([[bpeCtes]]), so it checks the trainer's first 6 merges on the
+      // fixture independently of text_bpe_train_full's 256-round replay.
+      // Determinism: exact integer pair counts; ties break
       // lexicographically on (lhs, rhs) — same ASCII order both engines.
       import s.implicits._
-      val (merges, _) = bpeTrain(s, dir)
-      merges.toDF("merge_round", "lhs", "rhs", "pair_count")
+      val (merges, _) = bpeTrainFull(s, dir)
+      merges.take(6).toDF("merge_round", "lhs", "rhs", "pair_count")
         .select(col("merge_round").cast("int").as("merge_round"),
           col("lhs"), col("rhs"),
           concat(col("lhs"), col("rhs")).as("merged"), col("pair_count"))
@@ -1319,9 +1237,8 @@ object TextOps extends OpRegistry {
       // Driver-side full-vocab BPE training (r17, VERDICT r16 #2): the
       // production-merge-count path — one corpus collapse to the word
       // dict, then the whole ≥256-merge budget trained in-memory with
-      // incremental pair-count maintenance (see [[bpeTrainFull]]); the
-      // 6-round distributed text_bpe_merge_train stays as the
-      // differential twin (Round17Spec pins their first 6 rows equal).
+      // incremental pair-count maintenance (see [[bpeTrainFull]]);
+      // text_bpe_merge_train ships the first 6 rows of the same table.
       // The fixture's small vocab exhausts well before the 256 budget, so
       // the output is the full merge table UNTIL exhaustion — the oracle
       // replays all 256 unrolled rounds and freezes identically (empty
@@ -1916,7 +1833,7 @@ object TextOps extends OpRegistry {
   )
 
   /** The shared BPE CTE chain (word dict → v0 → rounds×(pair census p_r,
-    * argmax m_r, rewrite v_r)), mirrored from [[bpeTrain]]/[[bpeTrainFull]]
+    * argmax m_r, rewrite v_r)), mirrored from [[bpeTrainFull]]
     * — the train oracles read the m_r rows, the apply oracle reads
     * v<rounds>, and sharing the chain means they can never drift. Every
     * CTE is MATERIALIZED (r17): DuckDB inlines plain CTEs, and a
@@ -2786,7 +2703,7 @@ object TextOps extends OpRegistry {
     "text_bpe_train_full" -> bpeTrainFullOracleSql,
 
     // r17: apply consumes the FULL 256-budget trained vocab (v256), not
-    // the 6-round twin's v6 — same shared chain, deeper unroll. r19
+    // text_bpe_merge_train's v6 — same shared chain, deeper unroll. r19
     // (ADVICE r18): LEFT join + char-level fallback for sub-floor words
     // (n_sym = length(w)) so the sheet covers the full word mass, with
     // the OOV share explicit.

@@ -35,9 +35,9 @@ object VectorOps extends OpRegistry {
     * factored so the spec can pin the full fusion math on a hand corpus.
     * Input: (doc_id, text) docs + (vec_id, embedding) vectors; the
     * candidate universe is their doc_id = vec_id join. Queries = docs with
-    * doc_id < 5. Sparse = BM25 (text_bm25_topk's exact-integer kernel)
-    * over the query doc's distinct terms; dense = exact quantized dot;
-    * both top-20, RRF-fused (1e6 div (rank+60)), top-5 per query. */
+    * doc_id < 5. Sparse = BM25 ([[TextOps.bm25Scores]], text_bm25_topk's
+    * kernel) over the query doc's distinct terms; dense = exact quantized
+    * dot; both top-20, RRF-fused (1e6 div (rank+60)), top-5 per query. */
   private[graft] def hybridRetrieval(s: SparkSession, docsIn: DataFrame,
       embIn: DataFrame,
       pin: DataFrame => DataFrame = Pin.shared): DataFrame = {
@@ -54,51 +54,18 @@ object VectorOps extends OpRegistry {
     val wd = Window.partitionBy("qid").orderBy(col("dot_q").desc, col("did"))
     val rdk = dense.withColumn("rd", row_number().over(wd).cast("long"))
       .filter(col("rd") <= 20).select(col("qid"), col("did"), col("rd"))
-    // sparse branch: the query docs' distinct terms against the universe's
-    // postings. The broadcast term set prunes the token stream MAP-SIDE —
-    // only query-term postings reach a shuffle, the full inverted index is
-    // never materialized (the text_bm25_topk posting-join discipline); df
-    // per query term comes from the SAME pruned stream (distinct docs per
-    // term, counted BEFORE the ≠query filter, so it is the universe df)
-    val toks = u.select(col("doc_id"),
-      size(split(col("text"), " ")).cast("long").as("dl"),
-      explode(split(col("text"), " ")).as("term"))
-    val tot = u.select(size(split(col("text"), " ")).cast("long").as("dl"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("len_total"))
-    val qt = toks.filter(col("doc_id") < 5)
-      .select(col("doc_id").as("qid"), col("term")).distinct()
-    val qtf = toks.join(broadcast(qt), Seq("term"))
-      .groupBy("qid", "doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
-    // df as a WINDOW count over the panel-pruned postings (r20, guide §2.4;
-    // the bm25TopK restructure): the r19 dfr frame derived FROM qtf, so its
-    // join re-ran the whole corpus explode pass under a second subtree —
-    // the before-plan shows four Generate passes over the universe for one
-    // posting build. df = distinct docs per term counted over ALL qids; a
-    // term can sit in several query panels, so rows per term = df × #qids —
-    // the rows belonging to any ONE qid enumerate each doc exactly once.
-    // Counting the min-qid rows per term therefore IS df, and both window
-    // functions (min, conditional count) run in one WindowExec over the
-    // pruned postings. Same values, two corpus passes removed.
-    val wt = Window.partitionBy("term")
-    val idf = log((col("n_docs") * 2L + 2L).cast("double") / (col("df") * 2L + 1L))
-    // double-from-first-multiply tf normalization — the bm25TopK r17
-    // overflow rationale (TextOps): int64 tf·L·22 wraps near 10T tokens;
-    // the oracle mirrors the cast points and left-assoc order exactly.
-    val tfd = col("tf").cast("double")
-    val ltd = col("len_total").cast("double")
-    val tfn = tfd * ltd * lit(22.0d) /
-      (tfd * ltd * lit(10.0d) + ltd * lit(3.0d) +
-        col("dl").cast("double") * col("n_docs").cast("double") * lit(9.0d))
-    val sparse = qtf
-      .withColumn("minq", min(col("qid")).over(wt))
-      .withColumn("df",
-        count(when(col("qid") === col("minq"), lit(1))).over(wt))
-      .drop("minq")
+    // sparse branch: BM25 of each query doc's distinct terms over the
+    // universe. The query panel (5 docs' distinct terms, bounded by their
+    // length) is collected while the frame is built, as text_bm25_topk's
+    // is; df counts the whole universe, so a query doc's own row is
+    // dropped after scoring (a filter on group keys keeps the other groups)
+    import s.implicits._
+    val qterms = TextOps.termPostings(u.filter(col("doc_id") < 5))
+      .select(col("doc_id"), col("term")).as[(Long, String)].collect()
+      .toSeq.toDF("qid", "term")
+    val sparse = TextOps.bm25Scores(u, qterms)
       .filter(col("doc_id") =!= col("qid"))
-      .crossJoin(broadcast(tot))
-      .select(col("qid"), col("doc_id").as("did"),
-        floor(idf * tfn * lit(1e6)).cast("long").as("s_micro"))
-      .groupBy("qid", "did").agg(sum(col("s_micro")).as("score_micro"))
+      .select(col("qid"), col("doc_id").as("did"), col("score_micro"))
     val ws = Window.partitionBy("qid").orderBy(col("score_micro").desc, col("did"))
     val rsk = sparse.withColumn("rs", row_number().over(ws).cast("long"))
       .filter(col("rs") <= 20).select(col("qid"), col("did"), col("rs"))
@@ -167,7 +134,7 @@ object VectorOps extends OpRegistry {
   private[graft] def ivfCellsFrame(s: SparkSession, dir: String): DataFrame =
     graft.CorpusArtifacts.parquet(s, "ivf_cells", dir) {
       val e = quantizedVectors(s, dir)
-      val dim = t(s, dir)("embeddings").select(size(col("embedding"))).head().getInt(0) // plain t(): one-row probe, a repartition would force a full scan+shuffle
+      val dim = embeddingDim(s, dir)
       def cellOf(qe: Column, tb: Int): Column =
         (0 until IvfPlanes).map { p =>
           val plane = planeComponents(tb * IvfPlanes + p, dim)
@@ -178,6 +145,20 @@ object VectorOps extends OpRegistry {
         posexplode(array((0 until IvfTables).map(tb => cellOf(col("qe"), tb)): _*))
           .as(Seq("tbl", "cell")))
     }
+
+  /** The embedding dimension of `dir`'s vector store: a one-row probe over
+    * the plain scan (a repartitioned one would shuffle the table for one
+    * row), run once per (application, store path, [[Tables.fingerprint]])
+    * like [[Tables.readParquet]]'s schema, so a second corpus, or one
+    * rewritten in place, is probed afresh. */
+  private[graft] def embeddingDim(s: SparkSession, dir: String): Int = {
+    val path = s"$dir/embeddings.parquet"
+    def probe = t(s, dir)("embeddings").select(size(col("embedding"))).head().getInt(0)
+    graft.Tables.fingerprint(s, path).fold(probe) { files =>
+      graft.Tables.embeddingDimMemo.getOrElseUpdate(
+        Seq(s.sparkContext.applicationId, path, files).mkString("|"), probe)
+    }
+  }
 
   /** (vec_id, qe): one scan+quantize of the vector store — the keyed-fetch
     * side every index consumer joins for exact re-ranking. */
@@ -205,7 +186,7 @@ object VectorOps extends OpRegistry {
     val NumTables = IvfTables
     val Planes = IvfPlanes
     val M = IvfPqSubspaces
-    val dim = t(s, dir)("embeddings").select(size(col("embedding"))).head().getInt(0) // plain t(): one-row probe
+    val dim = embeddingDim(s, dir)
     // ivfpqOracleSql pins dim=64 in generated SQL literals — fail loudly
     // on a fixture change instead of silently diverging from the oracle
     // dim==64 implies divisibility by M=16, so a separate dim % M check
@@ -349,7 +330,7 @@ object VectorOps extends OpRegistry {
       // DotQ per (m,k) — all codegen, no shuffle; the only shuffle is the
       // final global sort for output determinism. Ties break on smallest k
       // (struct ordering), mirrored by the oracle's ORDER BY dist, k.
-      val dim = t(s, dir)("embeddings").select(size(col("embedding"))).head().getInt(0) // plain t(): one-row probe, a repartition would force a full scan+shuffle
+      val dim = embeddingDim(s, dir)
       val subDim = dim / PqSubspaces
       val e = quantizedVectors(s, dir)
       val perSub = (0 until PqSubspaces).map { m =>
@@ -1031,7 +1012,7 @@ object VectorOps extends OpRegistry {
       // vectors so convergence is visible.
       import org.apache.spark.sql.types.DecimalType
       val d380 = DecimalType(38, 0)
-      val dim = t(s, dir)("embeddings").select(size(col("embedding"))).head().getInt(0)
+      val dim = embeddingDim(s, dir)
       val e = Pin.shared(quantizedVectors(s, dir))
       var v: Array[Long] = Array.fill(dim)(1000L)
       val rounds = scala.collection.mutable.ArrayBuffer[Array[Long]]()
@@ -1066,7 +1047,7 @@ object VectorOps extends OpRegistry {
       // declared-bounds class of note). Driver state is 2×dim ints.
       import org.apache.spark.sql.types.DecimalType
       val d380 = DecimalType(38, 0)
-      val dim = t(s, dir)("embeddings").select(size(col("embedding"))).head().getInt(0)
+      val dim = embeddingDim(s, dir)
       val e = Pin.shared(quantizedVectors(s, dir))
       def normalize(w: Map[Int, Double]): Array[Long] = {
         val m = (0 until dim).map(i => math.abs(w(i))).max
@@ -1130,7 +1111,7 @@ object VectorOps extends OpRegistry {
       // threshold reach a shuffle; the quantized vectors never sort.
       val NumTables = 8
       val Threshold = 400000000000L // 0.40 * 1e12 in quantized dot units
-      val dim = t(s, dir)("embeddings").select(size(col("embedding"))).head().getInt(0) // plain t(): one-row probe, a repartition would force a full scan+shuffle
+      val dim = embeddingDim(s, dir)
       val nVecs = t(s, dir)("embeddings").count()
       val Planes = math.max(3,
         math.ceil(math.log(nVecs / 250.0) / math.log(2)).toInt)
@@ -1656,7 +1637,7 @@ object VectorOps extends OpRegistry {
       // method (8×16 inlined dotQ trees), silently falling back to
       // interpreted evaluation (probe: 18 s at 100×); the staged form
       // keeps every stage inside whole-stage codegen at identical FLOPs.
-      val dim = t(s, dir)("embeddings").select(size(col("embedding"))).head().getInt(0)
+      val dim = embeddingDim(s, dir)
       val subDim = dim / PqSubspaces
       val e = quantizedVectors(s, dir)
       val cents: Seq[Seq[Long]] =
@@ -1742,7 +1723,7 @@ object VectorOps extends OpRegistry {
       // quantization; keeps sums ≤ ~1.7e16 at 100× — int64-safe), means
       // per coarse cell, improvement in ppm of mean err removed. Two
       // map-side encode passes + one ≤16-row agg — scan-bound at any SF.
-      val dim = t(s, dir)("embeddings").select(size(col("embedding"))).head().getInt(0)
+      val dim = embeddingDim(s, dir)
       val e = quantizedVectors(s, dir)
       def cbook(level: Int): IndexedSeq[Array[Long]] =
         (0 until PqCodebook).map { k =>

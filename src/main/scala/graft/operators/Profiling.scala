@@ -691,18 +691,8 @@ object Profiling extends OpRegistry {
       // d<8 bound, so the cap is part of the op's contract, not a fixture
       // shortcut. Weighted-edge build is fact-sized and landed once per
       // corpus; everything after is ≤|nation|²-row.
-      val w = coTradeWeights(s, dir)
-      val dw = w.select(col("a").as("src"), col("b").as("dst"), col("w"))
-        .unionAll(w.select(col("b").as("src"), col("a").as("dst"), col("w")))
-      val backbone = dw
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("src")
-            .orderBy(col("w").desc, col("dst"))))
-        .filter(col("rn") <= 3).select("src", "dst")
       // pinned: every one of the 8 relax rounds reads `edges`
-      val edges = Pin.shared(backbone
-        .unionAll(backbone.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct())
+      val edges = Pin.shared(tradeBackbone(s, dir))
       val nodes = t(s, dir)("nation")
         .select(col("n_nationkey").cast("long").as("node"))
       var dist = Pin.shared(nodes.withColumn("d", when(col("node") === 0L, 0L)))
@@ -838,16 +828,7 @@ object Profiling extends OpRegistry {
       // artifact read is ≤k·|V| rows with degrees ≤ |V|: five exact
       // BIGINT moments, one sqrt + r6 at the boundary; a (defensive)
       // zero-variance guard emits NULL rather than divide-by-zero.
-      val w = coTradeWeights(s, dir)
-      val dw = w.select(col("a").as("src"), col("b").as("dst"), col("w"))
-        .unionAll(w.select(col("b").as("src"), col("a").as("dst"), col("w")))
-      val backbone = dw
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("src").orderBy(col("w").desc, col("dst"))))
-        .filter(col("rn") <= 3).select("src", "dst")
-      val arcs = backbone
-        .unionAll(backbone.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
+      val arcs = tradeBackbone(s, dir)
       val deg = arcs.groupBy("src").agg(count(lit(1)).as("deg"))
       val j = arcs
         .join(deg.withColumnRenamed("src", "n1"), col("src") === col("n1"))
@@ -953,6 +934,21 @@ object Profiling extends OpRegistry {
     * the artifact never self-certifies. */
   private def coTradeWeights(s: SparkSession, dir: String): DataFrame =
     graft.CorpusArtifacts.parquet(s, "cotradew", dir)(coTradeBuild(s, dir))
+
+  /** The top-3 trade backbone of graph_bfs_distance and
+    * graph_assortativity: each nation's 3 strongest co-trade partners (by
+    * weight, partner-asc tiebreak), symmetrized into distinct directed arcs
+    * (src, dst). */
+  private def tradeBackbone(s: SparkSession, dir: String): DataFrame = {
+    val w = coTradeWeights(s, dir)
+    val top = w.select(col("a").as("src"), col("b").as("dst"), col("w"))
+      .unionAll(w.select(col("b").as("src"), col("a").as("dst"), col("w")))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("src").orderBy(col("w").desc, col("dst"))))
+      .filter(col("rn") <= 3).select("src", "dst")
+    top.unionAll(top.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()
+  }
 
   /** Run independent driver-sequenced Spark job chains concurrently from a
     * small fixed pool (r19 optimization round, guide §2.6): Spark's

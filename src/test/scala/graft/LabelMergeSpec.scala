@@ -79,7 +79,7 @@ class LabelMergeSpec extends GraftSuite {
   test("dedup_components_incremental equals a full CC rebuild over the planted union") {
     val docs = llm.DedupOps.plantedDocs(
       spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text"))
-    val edges = llm.TextOps.jaccardEdges(docs)
+    val edges = TestSpark.jaccardEdges(docs)
       .select(col("id1").as("a"), col("id2").as("b"))
     val nodes = docs.select(col("doc_id").as("node"))
     val (full, _) = llm.DedupOps.connectedComponents(nodes, edges)
@@ -280,7 +280,7 @@ class LabelMergeSpec extends GraftSuite {
     spark.read.parquet(s"$sfDir/documents.parquet")
       .unionByName(operators.Profiling.ingestDeltaDocs(spark, sfDir))
       .write.mode("overwrite").parquet(s"$uniDir/documents.parquet")
-    val rebuiltE = llm.TextOps.jaccardEdges(Tables.load(spark, uniDir, "documents"))
+    val rebuiltE = TestSpark.jaccardEdges(Tables.load(spark, uniDir, "documents"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val gotE = edgesV1.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet

@@ -34,7 +34,7 @@ class PairKernelSpec extends GraftSuite {
     assert(rows(llm.TextOps.containmentFilter(llm.TextOps.overlapPairs(postings))) ===
       Set(Seq(1L, 2L, 5L, 8L, 7L)), "(id1, id2, inter, n1, n2)")
     assert(rows(llm.TextOps.jaccardFilter(llm.TextOps.overlapPairs(Pin.shared(postings)))) ===
-      rows(llm.TextOps.jaccardEdges(docs)), "pinning changed the edges")
+      rows(TestSpark.jaccardEdges(docs)), "pinning changed the edges")
   }
 
   test("probe form equals the full overlap tail filtered to id2 in the probe") {

@@ -17,8 +17,8 @@ class PlanSpec extends GraftSuite {
   /** The unpinned Jaccard kernel over the corpus and over the planted universe
     * the incremental CC ops read. */
   private def corpusDocs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
-  private def jaccardKernel = llm.TextOps.jaccardEdges(corpusDocs)
-  private def plantedKernel = llm.TextOps.jaccardEdges(llm.DedupOps.plantedDocs(corpusDocs))
+  private def jaccardKernel = TestSpark.jaccardEdges(corpusDocs)
+  private def plantedKernel = TestSpark.jaccardEdges(llm.DedupOps.plantedDocs(corpusDocs))
 
   test("q_revenue_by_region: dims broadcast, agg is partial+final, filters on scans") {
     val p = finalPlan("q_revenue_by_region")
@@ -88,6 +88,20 @@ class PlanSpec extends GraftSuite {
     assert(!p.contains("Generate explode"), s"token explode is back:\n$p")
     assert(p.contains("WindowGroupLimit") && p.contains("Partial"),
       s"the per-doc top-3 lost its map-side partial prune:\n$p")
+  }
+
+  test("bm25: both callers read postings through one term-count Generate, no explode") {
+    // text_bm25_topk and docs_hybrid_retrieval share TextOps.bm25Scores:
+    // tf comes per doc from the term-count kernel, not a token explode and
+    // a (qid, doc_id, dl, term) count aggregate
+    for (op <- Seq("text_bm25_topk", "docs_hybrid_retrieval")) {
+      val p = finalPlan(op).split("== Initial Plan ==")(0)
+      val generates = "Generate ".r.findAllIn(p).size
+      val termCounts = "Generate inline\\(graft_term_counts\\(".r.findAllIn(p).size
+      assert(generates === 1 && termCounts === 1,
+        s"$op: expected exactly one Generate, over the term-count kernel:\n$p")
+      assert(!p.contains("explode"), s"$op: token explode is back:\n$p")
+    }
   }
 
   test("subqueries decorrelate to joins — never per-row subquery execution") {

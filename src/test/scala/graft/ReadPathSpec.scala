@@ -7,9 +7,10 @@ import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
 import java.util.concurrent.atomic.AtomicInteger
 
 /** The per-op read path: Parquet schemas inferred once per unchanged
-  * path and setting ([[Tables.readParquet]]), corpus artifacts keyed by
-  * corpus content, streaming queries that reuse their generated code, and
-  * parallel builds that stop their Spark work when a sibling fails. */
+  * path and setting ([[Tables.readParquet]]), embedding dimensions probed
+  * once per unchanged store, corpus artifacts keyed by corpus content,
+  * streaming queries that reuse their generated code, and parallel builds
+  * that stop their Spark work when a sibling fails. */
 class ReadPathSpec extends GraftSuite {
   import spark.implicits._
 
@@ -100,6 +101,26 @@ class ReadPathSpec extends GraftSuite {
     Seq(1L, 2L, 3L).toDF("id").write.mode("overwrite").parquet(s"$dir/docs.parquet")
     assert(artifact.count() == 20L, "the rewritten corpus served its old artifact")
     assert(builds.get() == 2)
+  }
+
+  test("each corpus in one session gets its own embedding dimension, probed once") {
+    def store(dir: String, dim: Int): Unit =
+      Seq((1L, Seq.fill(dim)(0.5f)), (2L, Seq.fill(dim)(0.25f))).toDF("vec_id", "embedding")
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val a = TestSpark.tempDir("readpath_dim_a")
+    val b = TestSpark.tempDir("readpath_dim_b")
+    store(a, 3)
+    store(b, 5)
+    val (dimA, first) = jobsDuring(llm.VectorOps.embeddingDim(spark, a))
+    val (dimA2, second) = jobsDuring(llm.VectorOps.embeddingDim(spark, a))
+    assert(dimA == 3 && dimA2 == 3)
+    assert(first >= 1, "the first call probes the store with a Spark job")
+    assert(second == 0, s"the memoized call launched $second jobs")
+    assert(llm.VectorOps.embeddingDim(spark, b) == 5,
+      "the second corpus was served the first one's dimension")
+    store(a, 2)
+    assert(llm.VectorOps.embeddingDim(spark, a) == 2,
+      "a rewritten store kept its old dimension")
   }
 
   test("the corpus fingerprint of a nested directory equals its recursive listFiles listing") {

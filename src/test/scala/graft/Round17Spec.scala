@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   *    lexicographic tie-break, leftmost-non-overlapping rewrite, and
   *    exhaustion under the merge budget — against literal hand-computed
   *    merge tables;
-  *  - the 6-round distributed form (text_bpe_merge_train) is the
-  *    DIFFERENTIAL TWIN: its full output must equal the first 6 rows of
-  *    text_bpe_train_full on the fixture;
+  *  - a naive full-recount trainer checks the merge table on seeded
+  *    random corpora, floored and unfloored;
+  *  - text_bpe_merge_train ships the first 6 rows of text_bpe_train_full
+  *    on the fixture;
   *  - registry invariants: consecutive rounds from 1, budget respected,
   *    per-round max pair count non-increasing (a BPE invariant: every
   *    new pair's count is bounded by the count of the merge that created
@@ -50,10 +51,10 @@ class Round17Spec extends GraftSuite {
   test("text_bpe_train_full: first 6 merges equal the distributed twin; invariants") {
     val full = q("text_bpe_train_full").collect().map(r =>
       (r.getInt(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
-    val twin = q("text_bpe_merge_train").collect().map(r =>
+    val first6 = q("text_bpe_merge_train").collect().map(r =>
       (r.getInt(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
-    assert(full.take(6).toSeq === twin.toSeq,
-      "driver-side trainer diverged from the 6-round distributed twin")
+    assert(full.take(6).toSeq === first6.toSeq,
+      "text_bpe_merge_train is not the first 6 merges of text_bpe_train_full")
     // consecutive rounds from 1, inside the budget
     assert(full.map(_._1).toSeq === (1 to full.length))
     assert(full.length <= llm.TextOps.BpeMergeBudget)
@@ -71,7 +72,7 @@ class Round17Spec extends GraftSuite {
 
   /** Naive reference BPE: full pair recount every round over plain symbol
     * lists — no incremental maintenance, no guard strings. The slowest,
-    * most obviously-correct form; both engine trainers must match it. */
+    * most obviously-correct form; the engine's trainer must match it. */
   private def naiveBpe(words: Seq[(String, Long)],
       budget: Int): Seq[(Int, String, String, Long)] = {
     var syms = words.map { case (w, n) => (w.map(_.toString).toVector, n) }
@@ -105,7 +106,7 @@ class Round17Spec extends GraftSuite {
     out.result()
   }
 
-  test("BPE property: driver trainer == naive recount == distributed twin on seeded random corpora") {
+  test("BPE property: driver trainer == naive recount on seeded random corpora") {
     for (seed <- 1 to 5) {
       val rnd = new scala.util.Random(seed)
       // random small vocab of random [a-z0-9] words, skewed frequencies —
@@ -126,19 +127,13 @@ class Round17Spec extends GraftSuite {
       val (driver, _) = llm.TextOps.bpeTrainFullDocs(docsDf)
       assert(driver === expected,
         s"seed $seed: incremental driver trainer diverged from naive recount")
-      val (dist, _) = llm.TextOps.bpeTrainDocs(spark, docsDf)
-      assert(dist === expected.take(6),
-        s"seed $seed: distributed 6-round twin diverged from naive recount")
-      // r18 floor path: both trainers under an ACTIVE min-count cutoff
-      // must equal the naive recount on the floored dict
+      // floor path: the trainer under an ACTIVE min-count cutoff must
+      // equal the naive recount on the floored dict
       val floored = wordFreq.filter(_._2 >= 3L)
       if (floored.size < wordFreq.size && floored.nonEmpty) {
         val expF = naiveBpe(floored, llm.TextOps.BpeMergeBudget)
         val (drvF, _) = llm.TextOps.bpeTrainFullDocs(docsDf, 3L)
         assert(drvF === expF, s"seed $seed: floored driver trainer diverged")
-        val (distF, _) = llm.TextOps.bpeTrainDocs(spark, docsDf, 3L)
-        assert(distF === expF.take(6),
-          s"seed $seed: floored distributed twin diverged")
       }
     }
   }

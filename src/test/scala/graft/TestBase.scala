@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -12,6 +12,11 @@ object TestSpark {
   lazy val spark: SparkSession =
     GraftSession.create("4", Map("spark.app.name" -> "graft-test"))
   val sfDir = "/root/testdata/sf0.001"
+
+  /** The df-capped exact-Jaccard edges (id1, id2, inter, uni) of a
+    * (doc_id, text) frame, unpinned: the plan shows every kernel step. */
+  def jaccardEdges(docs: DataFrame): DataFrame =
+    llm.TextOps.jaccardFilter(llm.TextOps.overlapPairs(llm.TextOps.cappedPostings(docs)))
 
   /** A fresh fixture directory, deleted with the [[Store]] directories
     * when the JVM exits. */
